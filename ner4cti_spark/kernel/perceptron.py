@@ -76,28 +76,7 @@ def _casing(tok: str) -> int:
     return casing_class(tok)
 
 
-def lexicon_bio(sent: list[str], phrases: dict, max_phrase: int) -> list[str]:
-    """Longest-match gazetteer pass → per-token BIO tag strings (the
-    same matching discipline as TaggerKernel.lexicon_emissions, emitted
-    as feature values instead of log-potentials)."""
-    n = len(sent)
-    tags = ["O"] * n
-    i = 0
-    while i < n:
-        matched = 0
-        for span in range(min(max_phrase, n - i), 0, -1):
-            hit = phrases.get(tuple(t.lower() for t in sent[i : i + span]))
-            if hit is not None:
-                tags[i] = f"B-{hit[0]}"
-                for j in range(i + 1, i + span):
-                    tags[j] = f"I-{hit[0]}"
-                matched = span
-                break
-        i += matched if matched else 1
-    return tags
-
-
-def _sent_features(tokens: list[str], phrases: dict, max_phrase: int,
+def _sent_features(tokens: list[str], lexicon: gazetteer.PhraseMatcher,
                    use_patterns: bool, buckets: int,
                    clusters: dict | None = None,
                    extra: list[tuple[str, ...]] | None = None) -> np.ndarray:
@@ -118,7 +97,7 @@ def _sent_features(tokens: list[str], phrases: dict, max_phrase: int,
     lows = ["<s>", "<s>"] + [t.lower() for t in tokens] + ["</s>", "</s>"]
     upos_t = ["<s>"] + [pos.upos(t) for t in tokens] + ["</s>"]
     case_t = [_casing(t) for t in tokens]
-    lex = lexicon_bio(tokens, phrases, max_phrase) if phrases else ["O"] * T
+    lex = lexicon.bio(tokens)
     pat = [
         (gazetteer.classify_token(t) or "-") if use_patterns else "-"
         for t in tokens
@@ -195,7 +174,7 @@ def _sent_features(tokens: list[str], phrases: dict, max_phrase: int,
 CLF_BUCKETS = 1 << 18
 
 
-def clf_features(tokens: list[str], phrases: dict, max_phrase: int,
+def clf_features(tokens: list[str], lexicon: gazetteer.PhraseMatcher,
                  clusters: dict | None) -> np.ndarray:
     """Sentence-level hashed feature ids (unique, variable length):
     unigrams/bigrams, lexicon etypes present + span count, length bucket,
@@ -204,7 +183,7 @@ def clf_features(tokens: list[str], phrases: dict, max_phrase: int,
     from . import pos as _pos
 
     lows = [t.lower() for t in tokens]
-    lt = lexicon_bio(tokens, phrases, max_phrase) if phrases else ["O"] * len(tokens)
+    lt = lexicon.bio(tokens)
     up = [_pos.upos(t) for t in tokens]
     fs = ["b"]
     fs += ["w=" + w for w in set(lows)]
@@ -252,13 +231,13 @@ def train_sentence_clf(sents: list[tuple[list[str], list[str]]], phrases: dict,
     `dense` optionally adds a per-sentence real-valued feature block
     (sent_mean_emb) with its own averaged weight vector — returns
     (sparse_w, dense_w) in that case; gate score = w[f].sum() + wd·d."""
-    max_phrase = max((len(k) for k in phrases), default=1)
+    lexicon = gazetteer.PhraseMatcher(phrases)
     w = np.zeros(CLF_BUCKETS, dtype=np.float64)
     wa = np.zeros(CLF_BUCKETS, dtype=np.float64)
     rng = np.random.default_rng(seed)
     kept = [(list(t), g) for t, g in sents if t]
     feats = [
-        (clf_features(t, phrases, max_phrase, clusters),
+        (clf_features(t, lexicon, clusters),
          1.0 if any(x != "O" for x in g) else -1.0)
         for t, g in kept
     ]
@@ -387,7 +366,7 @@ def decode_sents(sents: list[list[str]], arts: dict, ls: LabelSpace,
     W, TR = arts["sp_w"], arts["sp_trans"]
     buckets = W.shape[0]
     mask, em_mask, first_mask = _decode_masks(ls)
-    max_phrase = max((len(k) for k in phrases), default=1)
+    lexicon = gazetteer.PhraseMatcher(phrases)
     two = "sp2_w" in arts and "clf_w" in arts
     nb = neural.branch_from_arts(arts)
     o_id = ls.o_id
@@ -406,8 +385,8 @@ def decode_sents(sents: list[list[str]], arts: dict, ls: LabelSpace,
                 ex = neural.stack_extra(lp, ls.id2label)
             elif nmode == neural.MODE_SCORE:
                 nn_add = (nlam * lp).astype(np.float32)
-        feats = _sent_features(sent_t, phrases, max_phrase, use_patterns,
-                               buckets, clusters, extra=ex)
+        feats = _sent_features(sent_t, lexicon, use_patterns, buckets,
+                               clusters, extra=ex)
         e = W[feats].sum(axis=1) + em_mask
         if nn_add is not None:
             e = e + nn_add
@@ -416,7 +395,7 @@ def decode_sents(sents: list[list[str]], arts: dict, ls: LabelSpace,
         tags = [ls.id2label[int(i)] for i in p[0][: len(sent_t)]]
         if two:
             c = float(arts["clf_w"][
-                clf_features(sent_t, phrases, max_phrase, clusters)].sum())
+                clf_features(sent_t, lexicon, clusters)].sum())
             if clf_dense_scores is not None:
                 c += float(clf_dense_scores[si])
             elif "clf_dw" in arts:
@@ -447,7 +426,7 @@ def _prep(sents: list[tuple[list[str], list[str]]], ls: LabelSpace,
           clusters: dict | None = None,
           extras: list[list[tuple[str, ...]]] | None = None
           ) -> list[tuple[np.ndarray, np.ndarray]]:
-    max_phrase = max((len(k) for k in phrases), default=1)
+    lexicon = gazetteer.PhraseMatcher(phrases)
     data = []
     for si, (tokens, tags) in enumerate(sents):
         if not tokens:
@@ -458,8 +437,8 @@ def _prep(sents: list[tuple[list[str], list[str]]], ls: LabelSpace,
             dtype=np.int32,
         )
         ex = extras[si][:MAX_LEN] if extras is not None else None
-        feats = _sent_features(tokens, phrases, max_phrase, use_patterns,
-                               buckets, clusters, extra=ex)
+        feats = _sent_features(tokens, lexicon, use_patterns, buckets,
+                               clusters, extra=ex)
         data.append((feats, gold))
     return data
 

@@ -30,14 +30,6 @@ LEX_O = 2.0
 LEX_OTHER = -2.0
 
 
-def _stem(t: str) -> str:
-    """Tiny deterministic suffix stripper for lexicon fallback matching."""
-    for suf in ("ing", "ed", "es", "s"):
-        if t.endswith(suf) and len(t) > len(suf) + 2:
-            return t[: -len(suf)]
-    return t
-
-
 class TaggerKernel:
     def __init__(
         self,
@@ -62,18 +54,12 @@ class TaggerKernel:
         self.neural_scale = neural_scale
         self.decode = decode
         self.phrases = phrases if phrases is not None else gazetteer.phrase_index()
-        self.max_phrase = max((len(k) for k in self.phrases), default=1)
         self.use_patterns = use_patterns
-        # morphological fallback: stemmed phrase table ('loads and
-        # executing' matches a lexicon entry 'load and execute'); exact
-        # entries win on collision (exact checked first, and the stem
-        # table keeps the first-inserted mapping deterministically)
-        self.stem_fallback = stem_fallback
-        self.stem_phrases: dict[tuple[str, ...], tuple[str, str]] = {}
-        if stem_fallback:
-            for k, v in sorted(self.phrases.items()):
-                sk = tuple(_stem(w) for w in k)
-                self.stem_phrases.setdefault(sk, v)
+        # stem_fallback: morphological fallback for the lexicon emissions
+        # only — the trained CRF's lexicon features always match exactly
+        self.lexicon = gazetteer.PhraseMatcher(self.phrases, stem=stem_fallback)
+        self.crf_lexicon = (gazetteer.PhraseMatcher(self.phrases)
+                            if stem_fallback else self.lexicon)
         self.ls = label_space
         assert weights["emit_b"].shape[0] == label_space.n, (
             "weights were built for a different label space — pass the same "
@@ -105,44 +91,28 @@ class TaggerKernel:
     def lexicon_emissions(self, sents: list[list[str]], T: int) -> np.ndarray:
         """(B,T,L) log-potentials from longest-match gazetteer + indicator
         patterns. The high-precision branch (stands in for M7)."""
-        B = len(sents)
-        em = np.full((B, T, self.ls.n), LEX_OTHER, dtype=np.float32)
-        em[:, :, self.ls.o_id] = LEX_O
+        lab, o = self.ls.label2id, self.ls.o_id
+        em = np.full((len(sents), T, self.ls.n), LEX_OTHER, dtype=np.float32)
+        em[:, :, o] = LEX_O
         for b, sent in enumerate(sents):
-            n = min(len(sent), T)
-            i = 0
-            while i < n:
-                matched = 0
-                for span in range(min(self.max_phrase, n - i), 0, -1):
-                    key = tuple(t.lower() for t in sent[i : i + span])
-                    hit = self.phrases.get(key)
-                    if hit is None and self.stem_fallback:
-                        hit = self.stem_phrases.get(tuple(_stem(w) for w in key))
-                    if hit is not None:
-                        etype = hit[0]
-                        em[b, i, self.ls.label2id[f"B-{etype}"]] = LEX_HIT
-                        em[b, i, self.ls.o_id] = LEX_OTHER
-                        for j in range(i + 1, i + span):
-                            em[b, j, self.ls.label2id[f"I-{etype}"]] = LEX_HIT
-                            em[b, j, self.ls.o_id] = LEX_OTHER
-                        matched = span
-                        break
-                if matched:
-                    i += matched
+            sent = sent[:T]
+            covered: set[int] = set()
+            for i, j, etype in self.lexicon.matches(sent):
+                em[b, i, lab[f"B-{etype}"]] = LEX_HIT
+                em[b, i + 1 : j, lab[f"I-{etype}"]] = LEX_HIT
+                em[b, i:j, o] = LEX_OTHER
+                covered.update(range(i, j))
+            if not self.use_patterns:
+                continue
+            for i, tok in enumerate(sent):
+                if i in covered:
                     continue
-                if not self.use_patterns:
-                    i += 1
-                    continue
-                tok = sent[i]
-                if tok in self._class_cache:
-                    etype = self._class_cache[tok]
-                else:
-                    etype = gazetteer.classify_token(tok)
-                    self._class_cache[tok] = etype
+                if tok not in self._class_cache:
+                    self._class_cache[tok] = gazetteer.classify_token(tok)
+                etype = self._class_cache[tok]
                 if etype is not None:
-                    em[b, i, self.ls.label2id[f"B-{etype}"]] = LEX_HIT
-                    em[b, i, self.ls.o_id] = LEX_OTHER
-                i += 1
+                    em[b, i, lab[f"B-{etype}"]] = LEX_HIT
+                    em[b, i, o] = LEX_OTHER
         return em
 
     def _token_features(self, tokens: list[str]) -> np.ndarray:
@@ -413,8 +383,8 @@ class TaggerKernel:
                     ex = neural.stack_extra(lp, self.ls.id2label)
                 elif nmode == neural.MODE_SCORE:
                     nn_add_by_sent[b] = (nlam * lp).astype(np.float32)
-            feats = P._sent_features(sent[:n], self.phrases, self.max_phrase,
-                                     use_patterns, buckets, clusters, extra=ex)
+            feats = P._sent_features(sent[:n], self.crf_lexicon, use_patterns,
+                                     buckets, clusters, extra=ex)
             feats_by_sent[b] = feats
             em[b, :n, :] = W[feats].sum(axis=1) + em_mask
             if nn_add_by_sent[b] is not None:
@@ -439,8 +409,8 @@ class TaggerKernel:
                 n = int(lengths[b])
                 if n == 0:
                     continue
-                c = float(CW[P.clf_features(sent[:n], self.phrases,
-                                            self.max_phrase, clusters)].sum())
+                c = float(CW[P.clf_features(sent[:n], self.crf_lexicon,
+                                            clusters)].sum())
                 if emb_pair is not None:
                     c += float(self.w["clf_dw"] @ P.sent_mean_emb(
                         sent[:n], emb_pair[1], emb_pair[0]))

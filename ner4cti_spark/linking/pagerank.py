@@ -9,6 +9,7 @@ the standard formulation; deterministic for a fixed iteration count.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,26 +38,24 @@ def pagerank(edges: DataFrame, damping: float = 0.85, n_iter: int = 15,
     summation-order differences exactly as it already must between
     Spark's nondeterministic shuffle-merge order and the DuckDB oracle.
     """
-    rows = edges.select("src", "dst").limit(driver_threshold + 1).collect()
-    if len(rows) <= driver_threshold:
-        return _driver_pagerank(edges.sparkSession, rows, damping, n_iter)
+    # size probe through Arrow: up to threshold+1 edges arrive as two
+    # int64 columns, not as that many driver-side Row objects
+    pdf = edges.select("src", "dst").limit(driver_threshold + 1).toPandas()
+    if len(pdf) <= driver_threshold:
+        return _driver_pagerank(edges.sparkSession, pdf["src"].to_numpy(np.int64),
+                                pdf["dst"].to_numpy(np.int64), damping, n_iter)
     return _distributed_pagerank(edges, damping, n_iter, n_partitions)
 
 
-def _driver_pagerank(spark, rows, damping: float, n_iter: int) -> DataFrame:
+def _driver_pagerank(spark, src: np.ndarray, dst: np.ndarray, damping: float,
+                     n_iter: int) -> DataFrame:
     """numpy power iteration on a collected edge list — identical
     recurrence to _distributed_pagerank, vectorized."""
-    import numpy as np
-
-    if not rows:
+    if not len(src):
         return spark.createDataFrame([], "node long, rank double")
-    src = np.array([r["src"] for r in rows], dtype=np.int64)
-    dst = np.array([r["dst"] for r in rows], dtype=np.int64)
-    nodes = np.unique(np.concatenate([src, dst]))
+    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     n = len(nodes)
-    idx = {int(v): i for i, v in enumerate(nodes)}
-    si = np.array([idx[int(v)] for v in src], dtype=np.int64)
-    di = np.array([idx[int(v)] for v in dst], dtype=np.int64)
+    si, di = inv[: len(src)], inv[len(src) :]
     deg = np.bincount(si, minlength=n).astype(np.float64)
     w = 1.0 / deg[si]
     ranks = np.full(n, 1.0 / n, dtype=np.float64)

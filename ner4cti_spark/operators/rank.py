@@ -49,7 +49,13 @@ def global_row_number(
     ContextCleaner once the returned DataFrame is garbage-collected —
     callers need no explicit unpersist (unlike the module-handle
     caches, whose corpus-keyed entries outlive any one query and
-    therefore need explicit eviction)."""
+    therefore need explicit eviction).
+
+    localCheckpoint cannot be replayed: its lineage is cut, so a lost
+    executor fails the job instead of recomputing. Accepted because the
+    input is vocabulary-sized and the job short — a rare rerun costs less
+    than re-running the corpus aggregation per consumer, and a reliable
+    checkpoint would need a shared checkpoint directory."""
     df = df.localCheckpoint(eager=True)
     probe = df.limit(small_threshold + 1).count()
     if probe <= small_threshold:

@@ -3,7 +3,9 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
+from ner4cti_spark.linking.components import DRIVER_THRESHOLD
 from ner4cti_spark.linking.pagerank import pagerank
 
 
@@ -25,7 +27,10 @@ def numpy_pagerank(edge_list, damping=0.85, n_iter=15):
     return {v: r[idx[v]] for v in nodes}
 
 
-def test_pagerank_matches_numpy_oracle(spark):
+# default: numpy driver path; 0: every edge list takes the distributed loop
+@pytest.mark.parametrize("driver_threshold", [DRIVER_THRESHOLD, 0],
+                         ids=["driver", "distributed"])
+def test_pagerank_matches_numpy_oracle(spark, driver_threshold):
     edge_list = [
         (1, 2), (2, 3), (3, 1),        # cycle
         (4, 1), (4, 2),                # feeder
@@ -33,7 +38,8 @@ def test_pagerank_matches_numpy_oracle(spark):
         (3, 6),                        # 6 is dangling (no out-edges)
     ]
     edges = spark.createDataFrame(edge_list, "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(edges, n_iter=15).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(
+        edges, n_iter=15, driver_threshold=driver_threshold).collect()}
     want = numpy_pagerank(edge_list, n_iter=15)
     assert set(got) == set(want)
     for v in want:

@@ -5,10 +5,12 @@ from __future__ import annotations
 import itertools
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ner4cti_spark.kernel.crf import viterbi_decode
+from ner4cti_spark.kernel.gazetteer import PhraseMatcher, _stem
 from ner4cti_spark.kernel.labels import CTI
 from ner4cti_spark.kernel.tagger import TaggerKernel, casing_class, extract_spans
 from ner4cti_spark.kernel.weights import build_weights
@@ -111,3 +113,59 @@ def test_tagger_total_on_arbitrary_tokens(sents):
     # determinism: same input → same output
     tags2, _ = k.tag(sents)
     assert tags == tags2
+
+
+# a small vocabulary so generated lexicons share first tokens and stem
+# collisions ('load'/'loads'/'loading'/'loaded'), with cased variants
+_LEX_WORDS = ["load", "loads", "Loading", "loaded", "execute", "executes",
+              "apt", "APT", "bear", "Bears", "fancy", "x"]
+# keys are mostly lowercased, as phrase_index builds them; a cased key
+# can never match the lowercased input, in either implementation
+_phrase_key = st.tuples(
+    st.lists(st.sampled_from(_LEX_WORDS), min_size=1, max_size=4), st.booleans()
+).map(lambda p: tuple(w.lower() if p[1] else w for w in p[0]))
+
+
+def _reference_matches(tokens, phrases, stem):
+    """Brute force: at each position try every span length from the
+    longest down — exact lookup, then stem lookup — and take the first
+    hit; no first-token index, no length bound."""
+    stemmed = {}
+    if stem:
+        for k, v in sorted(phrases.items()):
+            stemmed.setdefault(tuple(_stem(w) for w in k), v)
+    lows = [t.lower() for t in tokens]
+    out, i = [], 0
+    while i < len(lows):
+        for span in range(len(lows) - i, 0, -1):
+            key = tuple(lows[i:i + span])
+            hit = phrases.get(key)
+            if hit is None and stem:
+                hit = stemmed.get(tuple(_stem(w) for w in key))
+            if hit is not None:
+                out.append((i, i + span, hit[0]))
+                i += span
+                break
+        else:
+            i += 1
+    return out
+
+
+@pytest.mark.parametrize("stem", [False, True])
+@given(
+    st.dictionaries(_phrase_key, st.sampled_from(["malware", "tool", "threat-actor"]),
+                    max_size=12),
+    st.lists(st.lists(st.sampled_from(_LEX_WORDS + ["the", "Load"]), max_size=12),
+             min_size=1, max_size=4),
+)
+@settings(max_examples=300, deadline=None)
+def test_phrase_matcher_matches_brute_force(stem, lexicon, sents):
+    phrases = {k: (etype, " ".join(k)) for k, etype in lexicon.items()}
+    m = PhraseMatcher(phrases, stem=stem)
+    for toks in sents:
+        want = _reference_matches(toks, phrases, stem)
+        assert m.matches(toks) == want
+        bio = ["O"] * len(toks)
+        for b, e, etype in want:
+            bio[b:e] = ["B-" + etype] + ["I-" + etype] * (e - b - 1)
+        assert m.bio(toks) == bio

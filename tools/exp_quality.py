@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import numpy as np
 
 from ner4cti_spark.kernel import perceptron
+from ner4cti_spark.kernel.gazetteer import PhraseMatcher
 from ner4cti_spark.kernel.labels import LabelSpace
 from ner4cti_spark.training import ARTIFACT_DIR, CORPORA, DNRTI_TYPES
 
@@ -209,11 +210,11 @@ def twopass():
 
     # ---------------- sentence classifier (binary averaged perceptron)
     B = 1 << 18
-    max_phrase = max((len(k) for k in lex), default=1)
+    lexicon = PhraseMatcher(lex)
 
     def clf_feats(tokens):
         lows = [t.lower() for t in tokens]
-        lt = perceptron.lexicon_bio(tokens, lex, max_phrase)
+        lt = lexicon.bio(tokens)
         fs = ["b"]
         fs += ["w=" + w for w in set(lows)]
         fs += ["bg=" + a + "_" + b for a, b in zip(lows, lows[1:])]
@@ -286,10 +287,6 @@ def twopass():
 def twopass2():
     """Honest hyperparameter protocol: fit on train, tune margin/combo on
     valid, refit on train+valid with frozen choices, report test."""
-    import zlib
-
-    from ner4cti_spark.kernel import pos as POS
-
     cfg = CORPORA["malwaredb"]
     ls = LabelSpace(cfg["etypes"])
     train, valid, test = load_corpus("malwaredb")
@@ -297,29 +294,10 @@ def twopass2():
     clusters = arts0.get("_sp_clusters")
 
     B = 1 << 18
-    max_phrase = max((len(k) for k in lex), default=1)
+    lexicon = PhraseMatcher(lex)
 
     def clf_feats(tokens):
-        lows = [t.lower() for t in tokens]
-        lt = perceptron.lexicon_bio(tokens, lex, max_phrase)
-        up = [POS.upos(t) for t in tokens]
-        fs = ["b"]
-        fs += ["w=" + w for w in set(lows)]
-        fs += ["bg=" + a + "_" + b for a, b in zip(lows, lows[1:])]
-        fs += ["lex=" + e for e in sorted({t[2:] for t in lt if t != "O"})]
-        fs.append("nlex=%d" % min(sum(t.startswith("B-") for t in lt), 5))
-        fs.append("len=%d" % min(len(tokens) // 5, 8))
-        fs += ["sh=" + perceptron._shape(t) for t in set(tokens)]
-        fs += ["up=" + u for u in set(up)]
-        fs.append("nv=%d" % min(sum(1 for u in up if u == "VERB"), 5))
-        if clusters:
-            cl = [clusters.get(w) for w in lows]
-            fs += ["c=%s" % c[0] for c in cl if c]
-            fs += ["C=%s" % c[1] for c in cl if c]
-        fs += ["dw=" + perceptron._digit_norm(w) for w in set(lows)]
-        return np.unique(
-            np.array([zlib.crc32(f.encode()) % B for f in fs], dtype=np.int64)
-        )
+        return perceptron.clf_features(tokens, lexicon, clusters)
 
     def train_clf(data, epochs=15, seed=7, tau=1.0, pos_w=2.0):
         """Margin perceptron with asymmetric update weight on positives
@@ -472,7 +450,7 @@ def decode_fused(sents, arts, ls, lex, use_patterns, clusters,
     W, TR = arts["sp_w"], arts["sp_trans"]
     buckets = W.shape[0]
     mask, em_mask, first_mask = perceptron._decode_masks(ls)
-    max_phrase = max((len(k) for k in lex), default=1)
+    lexicon = PhraseMatcher(lex)
     out = []
     for sent, lg in zip(sents, logit_list):
         if not sent:
@@ -480,7 +458,7 @@ def decode_fused(sents, arts, ls, lex, use_patterns, clusters,
             continue
         sent_t = list(sent)[:perceptron.MAX_LEN]
         feats = perceptron._sent_features(
-            sent_t, lex, max_phrase, use_patterns, buckets, clusters)
+            sent_t, lexicon, use_patterns, buckets, clusters)
         e = W[feats].sum(axis=1) + em_mask
         if lam:
             e = e + lam * neural.log_softmax(lg.astype(np.float64))
@@ -856,13 +834,13 @@ def mdbclf(dim: int = 50, mc: int = 2, it: int = 1, wn: int = 5,
     v_toks = [t for t, _ in valid]
     v_gold = [g for _, g in valid]
     g_gold = [any(x != "O" for x in g) for g in v_gold]
-    max_phrase = max((len(k) for k in lex), default=1)
+    lexicon = PhraseMatcher(lex)
 
     def gate_scores(wc, wdv=None, dn=None):
         out = []
         for i, t in enumerate(v_toks):
             s = float(wc[perceptron.clf_features(
-                list(t)[:perceptron.MAX_LEN], lex, max_phrase, clusters)].sum())
+                list(t)[:perceptron.MAX_LEN], lexicon, clusters)].sum())
             if wdv is not None:
                 s += float(wdv @ dn[i])
             out.append(s)
