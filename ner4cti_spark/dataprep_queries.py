@@ -12,6 +12,8 @@ Jaccard join uses word-level shingles so bucket cardinalities stay high.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -654,24 +656,20 @@ SQL_EMBEDDING_TOPK = """
 _ANN_TABLES = 4
 _ANN_BITS = 16
 
-_ANN_PLANE_CACHE: dict[int, "object"] = {}
 
-
+@functools.cache
 def _ann_planes(dim: int):
     """(T·B, dim) float64 ±1 matrix; pure function of (t, b, k)."""
     import hashlib
 
     import numpy as np
 
-    R = _ANN_PLANE_CACHE.get(dim)
-    if R is None:
-        R = np.empty((_ANN_TABLES * _ANN_BITS, dim), dtype=np.float64)
-        for t in range(_ANN_TABLES):
-            for b in range(_ANN_BITS):
-                for k in range(dim):
-                    h = hashlib.md5(f"p:{t}:{b}:{k}".encode()).hexdigest()
-                    R[t * _ANN_BITS + b, k] = 1.0 if int(h[0], 16) < 8 else -1.0
-        _ANN_PLANE_CACHE[dim] = R
+    R = np.empty((_ANN_TABLES * _ANN_BITS, dim), dtype=np.float64)
+    for t in range(_ANN_TABLES):
+        for b in range(_ANN_BITS):
+            for k in range(dim):
+                h = hashlib.md5(f"p:{t}:{b}:{k}".encode()).hexdigest()
+                R[t * _ANN_BITS + b, k] = 1.0 if int(h[0], 16) < 8 else -1.0
     return R
 
 

@@ -301,10 +301,9 @@ def log_softmax(logits: np.ndarray) -> np.ndarray:
 # arrays (perceptron.save_artifact): dense BiLSTM + head weights, the
 # embedding table + vocab, and nn_cfg = [mode, lam] where mode 1 =
 # score fusion (emissions += lam*log-softmax) and mode 2 = stacked
-# prediction features (_sent_features extra columns). Both decode paths
-# (perceptron.decode_sents driver-side, TaggerKernel._tag_chunk_trained
-# executor-side) resolve the branch through these helpers, so the
-# fusion semantics cannot drift between them.
+# prediction features (_sent_features extra columns). The one trained
+# decode (perceptron.decode_batch, behind both TaggerKernel.tag and
+# perceptron.decode_sents) takes the branch these helpers resolve.
 
 MODE_OFF, MODE_SCORE, MODE_STACK = 0, 1, 2
 
@@ -375,8 +374,8 @@ def sent_logprob(tokens: list[str], members: list[dict], emb: np.ndarray,
                  lookup: dict[str, int]) -> np.ndarray:
     """(T, L) ensemble log-probabilities: mean of per-member
     log-softmax, renormalized (log of the geometric-mean distribution).
-    The (B=1) forward per member is T small GEMMs — vocabulary-scale
-    cost, and the corpus pipeline's kernel batches around it."""
+    The (B=1) forward per member is T small GEMMs; this is the
+    per-sentence reference for batch_logprob, which the decode uses."""
     lps = [log_softmax(sent_logits(tokens, w, emb, lookup).astype(np.float64))
            for w in members]
     return log_softmax(np.mean(lps, axis=0))
@@ -391,14 +390,14 @@ def batch_logprob(sents: list[list[str]], members: list[dict],
     per-sentence ones (measured: the branch was 91% of trained tag time
     per-sentence). Exact-length grouping means no padding, so the
     reverse LSTM direction never sees pad steps and the result matches
-    the per-sentence path (parity-tested).
+    the per-sentence sent_logprob (parity-tested).
 
-    Tolerance contract (not bit-identity): float32 GEMM blocking makes
-    the batched member forwards drift ~1e-6 in logits vs the B=1 path;
-    MODE_SCORE fusion multiplies emissions by lam (≤192), amplifying
-    that to ~2e-4 on fused emissions, so a near-exact Viterbi tie can
-    in principle resolve differently between the executor kernel and
-    driver-side decode_sents. The parity test asserts agreement at this
+    Tolerance contract against sent_logprob (not bit-identity): float32
+    GEMM blocking makes the batched member forwards drift ~1e-6 in
+    logits vs the B=1 path; MODE_SCORE fusion multiplies emissions by
+    lam (≤192), amplifying that to ~2e-4 on fused emissions, so a
+    near-exact Viterbi tie can in principle resolve differently from a
+    per-sentence decode. The parity test asserts agreement at this
     tolerance; consumers must not assume stronger."""
     from .tagger import casing_class
 

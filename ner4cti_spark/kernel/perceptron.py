@@ -71,7 +71,7 @@ def _shape(tok: str) -> str:
 
 
 def _casing(tok: str) -> int:
-    from .tagger import casing_class  # local import: tagger imports us lazily
+    from .tagger import casing_class  # local import: tagger imports this module
 
     return casing_class(tok)
 
@@ -348,76 +348,140 @@ def _decode_masks(ls: LabelSpace) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return mask, em, first
 
 
+def decode_batch(sents: list[list[str]], arts: dict, ls: LabelSpace,
+                 lexicon: gazetteer.PhraseMatcher, use_patterns: bool,
+                 clusters: dict | None = None, branch: tuple | None = None,
+                 extras: list[list[tuple[str, ...]]] | None = None,
+                 clf_dense_scores: list[float] | None = None
+                 ) -> tuple[list[list[str]], np.ndarray]:
+    """The trained decode: a batch of sentences (each at most MAX_LEN
+    tokens) → (BIO tags, Viterbi score per token). Hashed sparse features
+    (the `lexicon` longest-match included as features) plus the optional
+    score-fused or stacked neural `branch` (neural.branch_from_arts) →
+    batched Viterbi.
+
+    Two-pass bundles ("sp2_w"/"clf_w") run the sentence-attribution gate:
+    gated sentences take the attributed-trained decode (batched Viterbi
+    over the gated subset), everything else — including gated sentences
+    whose attr decode is all-O — keeps the full-split decode.
+
+    `extras` (per-sentence stacked feature strings, see _sent_features)
+    replaces the branch's stacked predictions; `clf_dense_scores`
+    replaces the dense attribution-classifier term per sentence."""
+    from . import neural
+
+    W = arts["sp_w"]
+    buckets, L = W.shape
+    mask_t, em_mask, first_mask = _decode_masks(ls)
+    lengths = np.array([len(s) for s in sents], dtype=np.int64)
+    B = len(sents)
+    T = max(1, int(lengths.max()))
+    feats_by_sent: list[np.ndarray | None] = [None] * B
+    nn_add_by_sent: list[np.ndarray | None] = [None] * B
+    em = np.zeros((B, T, L), dtype=np.float32)
+    em += em_mask[None, None, :]
+    if branch is not None:
+        members, nemb, nlook, nmode, nlam = branch
+        lps = neural.batch_logprob(sents, members, nemb, nlook)
+    for b, sent in enumerate(sents):
+        n = int(lengths[b])
+        if n == 0:
+            continue
+        ex = extras[b] if extras is not None else None
+        if branch is not None:
+            if nmode == neural.MODE_STACK and ex is None:
+                ex = neural.stack_extra(lps[b], ls.id2label)
+            elif nmode == neural.MODE_SCORE:
+                nn_add_by_sent[b] = (nlam * lps[b]).astype(np.float32)
+        feats = _sent_features(sent, lexicon, use_patterns, buckets,
+                               clusters, extra=ex)
+        feats_by_sent[b] = feats
+        em[b, :n, :] = W[feats].sum(axis=1) + em_mask
+        if nn_add_by_sent[b] is not None:
+            em[b, :n, :] += nn_add_by_sent[b]
+        em[b, 0, :] += first_mask
+    paths, scores = viterbi_decode(em, arts["sp_trans"] + mask_t, lengths)
+    tags = [
+        [ls.id2label[int(paths[b, t])] for t in range(int(lengths[b]))]
+        for b in range(B)
+    ]
+    if "sp2_w" in arts and "clf_w" in arts:
+        W2 = arts["sp2_w"]
+        TR2m = arts["sp2_trans"] + mask_t
+        CW = arts["clf_w"]
+        o_id = ls.o_id
+        # classifier pass: candidates = sentences above the low bar
+        cand = []
+        cscores = np.zeros(B)
+        emb_pair = (neural.emb_from_arts(arts)
+                    if "clf_dw" in arts and clf_dense_scores is None else None)
+        for b, sent in enumerate(sents):
+            if lengths[b] == 0:
+                continue
+            c = float(CW[clf_features(sent, lexicon, clusters)].sum())
+            if clf_dense_scores is not None:
+                c += float(clf_dense_scores[b])
+            elif emb_pair is not None:
+                c += float(arts["clf_dw"] @ sent_mean_emb(
+                    sent, emb_pair[1], emb_pair[0]))
+            cscores[b] = c
+            if c > GATE_C_LO:
+                cand.append(b)
+        if cand:
+            em2 = np.zeros((len(cand), T, L), dtype=np.float32)
+            em2 += em_mask[None, None, :]
+            for j, b in enumerate(cand):
+                n = int(lengths[b])
+                em2[j, :n, :] = W2[feats_by_sent[b]].sum(axis=1) + em_mask
+                if nn_add_by_sent[b] is not None:
+                    em2[j, :n, :] += nn_add_by_sent[b]
+                em2[j, 0, :] += first_mask
+            p2, s2 = viterbi_decode(em2, TR2m, lengths[cand])
+            for j, b in enumerate(cand):
+                n = int(lengths[b])
+                allo = em2[j, :n, o_id].sum() + (n - 1) * TR2m[o_id, o_id]
+                gated = cscores[b] > GATE_C_HI or (
+                    float(s2[j]) - allo > GATE_M_TAU
+                )
+                if gated and (p2[j, :n] != o_id).any():
+                    attr_tags = [ls.id2label[int(p2[j, t])] for t in range(n)]
+                    # span-level union: attr spans win, plus base spans
+                    # that don't overlap them
+                    tags[b] = merge_tag_spans(attr_tags, tags[b])
+                    scores[b] = s2[j]
+    return tags, (scores / np.maximum(lengths, 1)).astype(np.float32)
+
+
 def decode_sents(sents: list[list[str]], arts: dict, ls: LabelSpace,
                  phrases: dict, use_patterns: bool,
                  clusters: dict | None = None,
                  extras: list[list[tuple[str, ...]]] | None = None,
                  clf_dense_scores: list[float] | None = None
                  ) -> list[list[str]]:
-    """Decode with trained weights (driver-side helper; the distributed
-    path lives in TaggerKernel._tag_chunk). With a two-pass bundle
-    ("sp2_w"/"clf_w" present) each sentence is gated by the attribution
-    classifier (+ attr-model margin); gated sentences take the
-    attributed-trained decode, everything else — including gated
-    sentences whose attr decode is all-O — falls back to the full-split
-    model. Semantics identical to TaggerKernel._tag_chunk_trained."""
+    """Driver-side decode with trained weights: decode_batch over
+    length-sorted chunks, each sentence truncated to MAX_LEN and its tags
+    padded with 'O' past it, so the output aligns 1:1 with the input
+    tokens. `extras` and `clf_dense_scores` are per-sentence (see
+    decode_batch)."""
     from . import neural
+    from .tagger import TaggerKernel
 
-    W, TR = arts["sp_w"], arts["sp_trans"]
-    buckets = W.shape[0]
-    mask, em_mask, first_mask = _decode_masks(ls)
     lexicon = gazetteer.PhraseMatcher(phrases)
-    two = "sp2_w" in arts and "clf_w" in arts
-    nb = neural.branch_from_arts(arts)
-    o_id = ls.o_id
-    out = []
-    for si, sent in enumerate(sents):
-        if not sent:
-            out.append([])
-            continue
-        sent_t = sent[:MAX_LEN]
-        ex = extras[si][:MAX_LEN] if extras is not None else None
-        nn_add = None
-        if nb is not None:
-            members, nemb, nlook, nmode, nlam = nb
-            lp = neural.sent_logprob(sent_t, members, nemb, nlook)
-            if nmode == neural.MODE_STACK and ex is None:
-                ex = neural.stack_extra(lp, ls.id2label)
-            elif nmode == neural.MODE_SCORE:
-                nn_add = (nlam * lp).astype(np.float32)
-        feats = _sent_features(sent_t, lexicon, use_patterns, buckets,
-                               clusters, extra=ex)
-        e = W[feats].sum(axis=1) + em_mask
-        if nn_add is not None:
-            e = e + nn_add
-        e[0] += first_mask
-        p, _ = viterbi_decode(e[None], TR + mask, np.array([len(sent_t)]))
-        tags = [ls.id2label[int(i)] for i in p[0][: len(sent_t)]]
-        if two:
-            c = float(arts["clf_w"][
-                clf_features(sent_t, lexicon, clusters)].sum())
-            if clf_dense_scores is not None:
-                c += float(clf_dense_scores[si])
-            elif "clf_dw" in arts:
-                pair = neural.emb_from_arts(arts)
-                if pair is not None:
-                    c += float(arts["clf_dw"] @ sent_mean_emb(
-                        sent_t, pair[1], pair[0]))
-            if c > GATE_C_LO:
-                TR2m = arts["sp2_trans"] + mask
-                e2 = arts["sp2_w"][feats].sum(axis=1) + em_mask
-                if nn_add is not None:
-                    e2 = e2 + nn_add
-                e2[0] += first_mask
-                p2, s2 = viterbi_decode(e2[None], TR2m, np.array([len(sent_t)]))
-                allo = e2[:, o_id].sum() + (len(sent_t) - 1) * TR2m[o_id, o_id]
-                if c > GATE_C_HI or float(s2[0]) - allo > GATE_M_TAU:
-                    cand = p2[0][: len(sent_t)]
-                    if (cand != o_id).any():
-                        attr_tags = [ls.id2label[int(i)] for i in cand]
-                        tags = merge_tag_spans(attr_tags, tags)
-        tags += ["O"] * (len(sent) - len(tags))
-        out.append(tags)
+    branch = neural.branch_from_arts(arts)
+    order = sorted(range(len(sents)), key=lambda i: len(sents[i]))
+    out: list[list[str]] = [[] for _ in sents]
+    for start in range(0, len(order), TaggerKernel.CHUNK):
+        idx = order[start : start + TaggerKernel.CHUNK]
+        tags, _ = decode_batch(
+            [sents[i][:MAX_LEN] for i in idx], arts, ls, lexicon,
+            use_patterns, clusters, branch,
+            extras=(None if extras is None
+                    else [extras[i][:MAX_LEN] for i in idx]),
+            clf_dense_scores=(None if clf_dense_scores is None
+                              else [clf_dense_scores[i] for i in idx]),
+        )
+        for i, t in zip(idx, tags):
+            out[i] = t + ["O"] * (len(sents[i]) - len(t))
     return out
 
 

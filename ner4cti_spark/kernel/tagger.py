@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from . import gazetteer, nn, pos
+from . import gazetteer, nn, perceptron, pos
 from .crf import greedy_decode, viterbi_decode
 from .labels import CTI, LabelSpace
 
@@ -311,12 +311,18 @@ class TaggerKernel:
         return tags_out, scores_out  # type: ignore[return-value]
 
     def _tag_chunk(self, sents: list[list[str]]) -> tuple[list[list[str]], np.ndarray]:
-        lengths = np.array([min(len(s), MAX_SEQ_LEN) for s in sents], dtype=np.int64)
-        T = max(1, int(lengths.max()))
         sents = [s[:MAX_SEQ_LEN] for s in sents]
-        mask = np.arange(T)[None, :] < lengths[:, None]
         if "sp_w" in self.w:
-            return self._tag_chunk_trained(sents, lengths, T)
+            # TRAINED perceptron-CRF bundle: its decode replaces the
+            # gazetteer-potentials + random-neural fusion below
+            use_patterns = (bool(self.w["_sp_meta"][1]) if "_sp_meta" in self.w
+                            else self.use_patterns)
+            return perceptron.decode_batch(
+                sents, self.w, self.ls, self.crf_lexicon, use_patterns,
+                self.w.get("_sp_clusters"), self._branch())
+        lengths = np.array([len(s) for s in sents], dtype=np.int64)
+        T = max(1, int(lengths.max()))
+        mask = np.arange(T)[None, :] < lengths[:, None]
         em = self.lexicon_emissions(sents, T)
         if self.neural_scale > 0.0:
             neural = self.neural_emissions(sents, T, mask)
@@ -336,111 +342,6 @@ class TaggerKernel:
         ]
         scores = (scores / np.maximum(lengths, 1)).astype(np.float32)
         return tags, scores
-
-    def _tag_chunk_trained(self, sents: list[list[str]], lengths: np.ndarray, T: int
-                           ) -> tuple[list[list[str]], np.ndarray]:
-        """Decode with TRAINED perceptron-CRF weights (kernel/perceptron.py)
-        when the bundle carries "sp_w": hashed sparse features (lexicon
-        longest-match included as features) → batched Viterbi. Replaces
-        the gazetteer-potentials + random-neural fusion for corpora with
-        a fitted model; the Spark plumbing above is identical.
-
-        Two-pass bundles ("sp2_w"/"clf_w") run the sentence-attribution
-        gate first: gated sentences take the attributed-trained decode
-        (batched Viterbi over the gated subset), everything else —
-        including gated sentences whose attr decode is all-O — falls
-        back to the full-split model. Semantics identical to
-        perceptron.decode_sents (parity-tested)."""
-        from . import neural
-        from . import perceptron as P
-
-        W = self.w["sp_w"]
-        buckets, L = W.shape
-        use_patterns = bool(self.w["_sp_meta"][1]) if "_sp_meta" in self.w else self.use_patterns
-        clusters = self.w.get("_sp_clusters")
-        mask_t, em_mask, first_mask = P._decode_masks(self.ls)
-        nb = self._branch()
-        B = len(sents)
-        feats_by_sent: list[np.ndarray | None] = [None] * B
-        nn_add_by_sent: list[np.ndarray | None] = [None] * B
-        em = np.zeros((B, T, L), dtype=np.float32)
-        em += em_mask[None, None, :]
-        lps = None
-        if nb is not None:
-            members, nemb, nlook, nmode, nlam = nb
-            lps = neural.batch_logprob(
-                [sents[b][: int(lengths[b])] for b in range(B)],
-                members, nemb, nlook,
-            )
-        for b, sent in enumerate(sents):
-            n = int(lengths[b])
-            if n == 0:
-                continue
-            ex = None
-            if nb is not None:
-                lp = lps[b]
-                if nmode == neural.MODE_STACK:
-                    ex = neural.stack_extra(lp, self.ls.id2label)
-                elif nmode == neural.MODE_SCORE:
-                    nn_add_by_sent[b] = (nlam * lp).astype(np.float32)
-            feats = P._sent_features(sent[:n], self.crf_lexicon, use_patterns,
-                                     buckets, clusters, extra=ex)
-            feats_by_sent[b] = feats
-            em[b, :n, :] = W[feats].sum(axis=1) + em_mask
-            if nn_add_by_sent[b] is not None:
-                em[b, :n, :] += nn_add_by_sent[b]
-            em[b, 0, :] += first_mask
-        paths, scores = viterbi_decode(em, self.w["sp_trans"] + mask_t, lengths)
-        tags = [
-            [self.ls.id2label[int(paths[b, t])] for t in range(int(lengths[b]))]
-            for b in range(B)
-        ]
-        if "sp2_w" in self.w and "clf_w" in self.w:
-            W2 = self.w["sp2_w"]
-            TR2m = self.w["sp2_trans"] + mask_t
-            CW = self.w["clf_w"]
-            o_id = self.ls.o_id
-            # classifier pass: candidates = sentences above the low bar
-            cand = []
-            cscores = np.zeros(B)
-            emb_pair = (neural.emb_from_arts(self.w)
-                        if "clf_dw" in self.w else None)
-            for b, sent in enumerate(sents):
-                n = int(lengths[b])
-                if n == 0:
-                    continue
-                c = float(CW[P.clf_features(sent[:n], self.crf_lexicon,
-                                            clusters)].sum())
-                if emb_pair is not None:
-                    c += float(self.w["clf_dw"] @ P.sent_mean_emb(
-                        sent[:n], emb_pair[1], emb_pair[0]))
-                cscores[b] = c
-                if c > P.GATE_C_LO:
-                    cand.append(b)
-            if cand:
-                em2 = np.zeros((len(cand), T, L), dtype=np.float32)
-                em2 += em_mask[None, None, :]
-                for j, b in enumerate(cand):
-                    n = int(lengths[b])
-                    em2[j, :n, :] = W2[feats_by_sent[b]].sum(axis=1) + em_mask
-                    if nn_add_by_sent[b] is not None:
-                        em2[j, :n, :] += nn_add_by_sent[b]
-                    em2[j, 0, :] += first_mask
-                p2, s2 = viterbi_decode(em2, TR2m, lengths[cand])
-                for j, b in enumerate(cand):
-                    n = int(lengths[b])
-                    allo = em2[j, :n, o_id].sum() + (n - 1) * TR2m[o_id, o_id]
-                    gated = cscores[b] > P.GATE_C_HI or (
-                        float(s2[j]) - allo > P.GATE_M_TAU
-                    )
-                    if gated and (p2[j, :n] != o_id).any():
-                        attr_tags = [self.ls.id2label[int(p2[j, t])]
-                                     for t in range(n)]
-                        # span-level union: attr spans win, plus base
-                        # spans that don't overlap them (decode_sents ≡)
-                        tags[b] = P.merge_tag_spans(attr_tags, tags[b])
-                        scores[b] = s2[j]
-        return tags, (scores / np.maximum(lengths, 1)).astype(np.float32)
 
 
 def build_hard_aug_table(weights: dict[str, np.ndarray],

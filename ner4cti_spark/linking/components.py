@@ -13,6 +13,8 @@ label-propagation loop (join+min-agg until fixpoint)".
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -23,7 +25,7 @@ DRIVER_THRESHOLD = 2_000_000
 def connected_components(edges: DataFrame, max_iter: int = 20,
                          n_partitions: int = 8,
                          driver_threshold: int = DRIVER_THRESHOLD,
-                         probe_rows: list | None = None) -> DataFrame:
+                         probe_rows: pd.DataFrame | None = None) -> DataFrame:
     """edges(src long, dst long) undirected → (node long, component long),
     component = min reachable node id. Deterministic.
 
@@ -35,23 +37,26 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     there. Above the threshold the distributed min-label fixpoint with
     pointer jumping runs (O(log diameter) rounds).
 
-    `probe_rows`: pre-collected `edges.limit(driver_threshold + 1)` rows
-    — callers that already ran a probe job (canonicalize piggybacks the
-    surface count on it) pass them in so no second job runs here."""
-    # single probe job: collect up to threshold+1 edges; only if the graph
-    # exceeds the threshold does the distributed fixpoint run (and the
-    # collected prefix is discarded)
-    rows = probe_rows if probe_rows is not None else (
-        edges.select("src", "dst").limit(driver_threshold + 1).collect()
+    `probe_rows`: pre-collected `edges.limit(driver_threshold + 1)` as a
+    pandas frame of int64 src/dst — callers that already ran a probe job
+    (canonicalize piggybacks the surface count on it) pass it in so no
+    second job runs here."""
+    # single probe job, collected through Arrow: up to threshold+1 edges
+    # arrive as two int64 columns, not as that many driver-side Row
+    # objects; only if the graph exceeds the threshold does the
+    # distributed fixpoint run (and the collected prefix is discarded)
+    pdf = probe_rows if probe_rows is not None else (
+        edges.select("src", "dst").limit(driver_threshold + 1).toPandas()
     )
-    if len(rows) <= driver_threshold:
-        return _driver_union_find(edges, rows)
+    if len(pdf) <= driver_threshold:
+        return _driver_union_find(edges.sparkSession, pdf["src"].to_numpy(np.int64),
+                                  pdf["dst"].to_numpy(np.int64))
     return _distributed_cc(edges, max_iter, n_partitions)
 
 
-def _driver_union_find(edges: DataFrame, rows=None) -> DataFrame:
-    if rows is None:
-        rows = edges.select("src", "dst").collect()
+def _driver_union_find(spark, src: np.ndarray, dst: np.ndarray) -> DataFrame:
+    """Union-find on a collected edge list — the same (node, component =
+    min reachable node id) output as _distributed_cc."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -62,24 +67,21 @@ def _driver_union_find(edges: DataFrame, rows=None) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    for r in rows:
-        a, b = find(int(r["src"])), find(int(r["dst"]))
+    for a, b in zip(src.tolist(), dst.tolist()):
+        a, b = find(a), find(b)
         if a != b:
             if a < b:
                 parent[b] = a
             else:
                 parent[a] = b
-    nodes = {int(r["src"]) for r in rows} | {int(r["dst"]) for r in rows}
-    out = [(n, find(n)) for n in sorted(nodes)]
-    spark = edges.sparkSession
-    if not out:
+    nodes = np.unique(np.concatenate([src, dst]))
+    if not len(nodes):
         return spark.createDataFrame([], "node long, component long")
+    comp = np.array([find(n) for n in nodes.tolist()], dtype=np.int64)
     # pandas → Arrow createDataFrame path (r6): the list-of-tuples form
     # pickles row by row through the JVM gateway; Arrow ships the whole
     # column batch at once (guide §6 driver-transfer note)
-    import pandas as pd
-
-    pdf = pd.DataFrame(out, columns=["node", "component"]).astype("int64")
+    pdf = pd.DataFrame({"node": nodes, "component": comp})
     return spark.createDataFrame(pdf, "node long, component long")
 
 
@@ -182,7 +184,8 @@ def canonicalize(surfaces: DataFrame, pairs: DataFrame,
     )
     probe_rows = None
     if stats is not None:
-        # one job: up to threshold+1 edges plus a 1-row surface count
+        # one job, through Arrow: up to threshold+1 edges plus a 1-row
+        # surface count
         probe = (
             edges.select("src", "dst", F.lit(0).alias("marker"))
             .limit(DRIVER_THRESHOLD + 1)
@@ -191,12 +194,11 @@ def canonicalize(surfaces: DataFrame, pairs: DataFrame,
                 .select("src", F.lit(0).cast("long").alias("dst"),
                         F.lit(1).alias("marker"))
             )
-            .collect()
+            .toPandas()
         )
-        probe_rows = [r for r in probe if r["marker"] == 0]
-        stats["n_surfaces"] = int(
-            next(r["src"] for r in probe if r["marker"] == 1)
-        )
+        is_edge = probe["marker"].to_numpy() == 0
+        probe_rows = probe.loc[is_edge, ["src", "dst"]]
+        stats["n_surfaces"] = int(probe.loc[~is_edge, "src"].iloc[0])
     comp = connected_components(edges, probe_rows=probe_rows)
     edges.unpersist(blocking=False)
     labeled = (

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,11 +25,6 @@ MENTION_SCHEMA = (
     "repo string, path string, commit string, sha256 string, sent_id long, "
     "begin int, end int, surface string, etype string, score float, "
     "canonical_hint string"
-)
-
-TAGGED_SCHEMA = (
-    "repo string, path string, commit string, sha256 string, sent_id long, "
-    "tokens array<string>, tags array<string>, score float"
 )
 
 
@@ -103,25 +97,6 @@ def salted_repartition(sentences: DataFrame, num_partitions: int, salt_buckets: 
         F.col("repo"),
         F.pmod(F.hash(F.col("path"), F.col("sent_id")), F.lit(salt_buckets)),
     )
-
-
-def tag_sentences(sentences: DataFrame, weights_bc, neural_scale: float = 0.1,
-                  decode: str = "viterbi", sent_cache: bool = True) -> DataFrame:
-    """sentences → tagged rows (tokens + aligned BIO tags + score)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kernel = _get_kernel(weights_bc, neural_scale, decode, sent_cache=sent_cache)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            sents = [list(t) for t in pdf["tokens"]]
-            tags, scores = kernel.tag(sents)
-            out = pdf[["repo", "path", "commit", "sha256", "sent_id", "tokens"]].copy()
-            out["tags"] = tags
-            out["score"] = scores.astype(np.float32)
-            yield out
-
-    return sentences.mapInPandas(run, schema=TAGGED_SCHEMA)
 
 
 def tag_mentions(sentences: DataFrame, weights_bc, neural_scale: float = 0.1,

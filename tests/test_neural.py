@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from decode_reference import reference_decode_sents
 
 from ner4cti_spark.kernel import neural
 from ner4cti_spark.kernel.nn import lstm_layer
@@ -164,10 +165,11 @@ def _toy_branch_bundle():
 @pytest.mark.parametrize("mode,lam", [(neural.MODE_SCORE, 4.0),
                                       (neural.MODE_STACK, 0.0)])
 def test_branch_decode_parity_and_artifact_roundtrip(mode, lam, tmp_path):
-    """decode_sents ≡ TaggerKernel._tag_chunk_trained with the neural
-    branch active, through a save/load_artifact roundtrip, in both
-    fusion modes; unseen same-shape names must be classified by the
-    branch (score mode — the discrete features alone cannot)."""
+    """TaggerKernel.tag and decode_sents both equal the per-sentence
+    reference decode with the neural branch active, through a
+    save/load_artifact roundtrip, in both fusion modes; unseen
+    same-shape names must be classified by the branch (score mode — the
+    discrete features alone cannot)."""
     from ner4cti_spark.kernel import perceptron as P
     from ner4cti_spark.kernel.tagger import TaggerKernel
     from ner4cti_spark.kernel.weights import build_weights
@@ -183,12 +185,22 @@ def test_branch_decode_parity_and_artifact_roundtrip(mode, lam, tmp_path):
     toks = [["alpha", "nx3", "does", "beta"],
             ["alpha", "ny7", "does", "beta"],
             ["alpha", "nx11", "does", "beta"]]
-    want = P.decode_sents(toks, arts2, ls, {}, False)
+    want = reference_decode_sents(toks, arts2, ls, {}, False)
     w = build_weights(label_space=ls)
     w.update(arts2)
     kernel = TaggerKernel(w, phrases={}, use_patterns=False, label_space=ls)
     got, _ = kernel.tag(toks)
     assert got == want
+    assert P.decode_sents(toks, arts2, ls, {}, False) == want
+    if mode == neural.MODE_STACK:
+        # the stacked-feature hook replaces the branch's predictions per
+        # sentence, also when the length sort reorders the batch
+        mixed = toks + [["alpha", "nx3"], ["beta", "ny7", "does", "alpha", "nx1"]]
+        extras = [neural.stack_extra(lp[::-1], ls.id2label) for lp in
+                  neural.batch_logprob(mixed, *nb[:3])]
+        assert (P.decode_sents(mixed, arts2, ls, {}, False, extras=extras)
+                == reference_decode_sents(mixed, arts2, ls, {}, False,
+                                          extras=extras))
     if mode == neural.MODE_SCORE:
         assert [t[1] for t in want] == ["B-X", "B-Y", "B-X"], want
 

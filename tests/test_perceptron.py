@@ -7,6 +7,7 @@ import os
 
 import numpy as np
 import pytest
+from decode_reference import reference_decode_sents
 
 from ner4cti_spark.kernel import perceptron as P
 from ner4cti_spark.kernel import pos
@@ -123,8 +124,76 @@ def test_kernel_trained_path_matches_decode_sents():
     kernel = TaggerKernel(w, phrases={}, use_patterns=False, label_space=LS)
     toks = [s for s, _ in sents[:25]] + [["alpha", "unseen_tok", "does", "beta"]]
     got, _ = kernel.tag(toks)
-    want = P.decode_sents(toks, arts, LS, {}, False)
+    want = reference_decode_sents(toks, arts, LS, {}, False)
     assert got == want
+    assert P.decode_sents(toks, arts, LS, {}, False) == want
+
+
+def _artifact_sentences(arts: dict, phrases: dict, n: int = 200) -> list[list[str]]:
+    """n fixed sentences for a shipped artifact: distinct corpus-generator
+    lines, word salad over the artifact's own vocabulary with lexicon
+    phrases spliced in, one empty sentence and one past MAX_LEN."""
+    import random
+
+    from ner4cti_spark.corpus import _doc_text
+
+    out: list[list[str]] = []
+    seen: set[str] = set()
+    d = 0
+    while len(out) < n // 2:
+        for line in _doc_text(d)[0].split("\n"):
+            if line.strip() and line not in seen and len(out) < n // 2:
+                seen.add(line)
+                out.append(line.split())
+        d += 1
+    rng = random.Random(11)
+    words = [str(w) for w in arts["nn_words"]]
+    keys = sorted(phrases)
+    while len(out) < n - 2:
+        toks: list[str] = []
+        for _ in range(rng.randint(1, 30)):
+            if rng.random() < 0.2:
+                toks.extend(rng.choice(keys))
+            else:
+                w = rng.choice(words)
+                toks.append(w.capitalize() if rng.random() < 0.2 else w)
+        out.append(toks)
+    out.append([])
+    out.append([rng.choice(words) for _ in range(P.MAX_LEN + 44)])
+    return out
+
+
+@pytest.mark.parametrize("corpus", ["dnrti", "malwaredb"])
+def test_shipped_artifact_decodes_match_reference(corpus):
+    """The committed DNRTI (score fusion, lambda 16) and MalwareDB (score
+    fusion, lambda 192, two-pass) artifacts: TaggerKernel.tag and
+    decode_sents both equal the per-sentence reference decode on fixed
+    sentences. Real trained weights, no reference corpus needed."""
+    from ner4cti_spark.kernel.tagger import TaggerKernel
+    from ner4cti_spark.kernel.weights import build_weights
+    from ner4cti_spark.training import ARTIFACT_DIR, label_space_for
+
+    arts, phrases, etypes = P.load_artifact(
+        os.path.join(ARTIFACT_DIR, f"{corpus}_crf.npz"))
+    ls = label_space_for(corpus)
+    assert etypes == ls.etypes
+    use_patterns = bool(arts["_sp_meta"][1])
+    clusters = arts["_sp_clusters"]
+    sents = _artifact_sentences(arts, phrases)
+    want = reference_decode_sents(sents, arts, ls, phrases, use_patterns, clusters)
+    assert [len(t) for t in want] == [len(s) for s in sents]
+    assert sum(any(t != "O" for t in ts) for ts in want) >= 20
+    w = build_weights(label_space=ls)
+    w.update(arts)
+    kernel = TaggerKernel(w, phrases=phrases, label_space=ls)
+    got, _ = kernel.tag(sents)
+    assert got == want
+    assert P.decode_sents(sents, arts, ls, phrases, use_patterns, clusters) == want
+    if "sp2_w" in arts:
+        # the attribution gate changes some decodes: the two-pass branch runs
+        one_pass = {k: v for k, v in arts.items() if k not in ("sp2_w", "clf_w")}
+        assert P.decode_sents(sents, one_pass, ls, phrases, use_patterns,
+                              clusters) != want
 
 
 def test_distributed_parameter_mixing_learns(spark):
@@ -219,11 +288,21 @@ def test_two_pass_kernel_matches_decode_sents():
     base["sp2_trans"] = arts2["sp_trans"]
     base["clf_w"] = P.train_sentence_clf(sents, {}, epochs=8)
     toks = [s for s, _ in sents[:30]] + [["filler", "words", "only", "here"]]
-    want = P.decode_sents(toks, base, LS, {}, False)
+    want = reference_decode_sents(toks, base, LS, {}, False)
     w = build_weights(label_space=LS)
     w.update(base)
     kernel = TaggerKernel(w, phrases={}, use_patterns=False, label_space=LS)
     got, _ = kernel.tag(toks)
     assert got == want
+    assert P.decode_sents(toks, base, LS, {}, False) == want
     # the gate actually fires: filler decodes all-O
     assert want[-1] == ["O"] * 4
+    # the dense-score hook overrides the gate per sentence, also when
+    # the length sort reorders the batch
+    mixed = [["filler", "alpha", "n3", "words"], ["gamma", "zz", "does"],
+             ["filler", "words", "n4", "here", "beta"], ["alpha", "n9"]]
+    dense = [-1e6, -1e6, 1e6, -1e6]
+    hooked = P.decode_sents(mixed, base, LS, {}, False, clf_dense_scores=dense)
+    assert hooked == reference_decode_sents(mixed, base, LS, {}, False,
+                                            clf_dense_scores=dense)
+    assert hooked != P.decode_sents(mixed, base, LS, {}, False)

@@ -106,7 +106,7 @@ def test_triples_predicates(result):
 
 
 def test_connected_components_chain_and_clique(spark):
-    from ner4cti_spark.linking.components import _distributed_cc, _driver_union_find
+    from ner4cti_spark.linking.components import _distributed_cc
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 10), (20, 21), (21, 22), (20, 22)],
@@ -114,8 +114,10 @@ def test_connected_components_chain_and_clique(spark):
     )
     expected = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
     # both physical strategies must agree (size-adaptive dispatch picks
-    # driver union-find here; the distributed fixpoint runs at scale)
-    for impl in (connected_components, _driver_union_find,
+    # driver union-find here; the distributed fixpoint runs at scale, or
+    # here when the threshold is 0)
+    for impl in (connected_components,
+                 lambda e: connected_components(e, driver_threshold=0),
                  lambda e: _distributed_cc(e, max_iter=20, n_partitions=4)):
         comp = {r["node"]: r["component"] for r in impl(edges).collect()}
         assert comp == expected, impl
