@@ -28,7 +28,11 @@ def main(argv: list[str] | None = None) -> int:
                     help="generate a deterministic synthetic corpus of N docs instead of --input")
     ap.add_argument("--link-threshold", type=float, default=0.5)
     ap.add_argument("--decode", choices=["viterbi", "greedy"], default="viterbi")
-    ap.add_argument("--neural-scale", type=float, default=0.1)
+    ap.add_argument("--neural-scale", type=float, default=0.0,
+                    help="weight of the untrained contextual branch fused onto the "
+                         "lexicon potentials; 0 (default) skips its forward. While "
+                         "2*scale + 2*spread(trans) < 4 (the lexicon margin) it "
+                         "moves mentions.score by less than the scale and no tag")
     ap.add_argument("--cores", type=int, default=0,
                     help="local-mode cores (ignored under a real cluster master)")
     args = ap.parse_args(argv)

@@ -14,6 +14,19 @@ gazetteer/pattern emission model (`lexicon_emissions`), which is the
 branch that carries entity identity; the numpy network supplies the
 contextual branch. Swapping in real BERT weights changes only
 `neural_emissions`' internals, none of the Spark plumbing.
+
+The untrained contextual branch is opt-in (`neural_scale > 0`; default
+0.0, which skips its forward). Its weights are seeded random, and it is
+fused as `neural_scale·g·tanh(neural)`, so it moves each token's
+potentials by less than `neural_scale`. Every lexicon potential has a
+unique argmax with margin `LEX_O - LEX_OTHER` = 4 over the other labels,
+and the argmax path is BIO-valid. A path that differs from it at k
+tokens loses ≥ 4k of emission score and can win back < 2k·neural_scale
+from the branch and ≤ 2k·spread(valid `trans` entries) from
+transitions. So while 2·neural_scale + 2·spread < 4 the decoded tags
+equal the lexicon + CRF tags and only the per-token score moves.
+Trained `sp_w` bundles decode through `perceptron.decode_batch` and
+ignore `neural_scale`.
 """
 
 from __future__ import annotations
@@ -34,7 +47,7 @@ class TaggerKernel:
     def __init__(
         self,
         weights: dict[str, np.ndarray],
-        neural_scale: float = 0.1,
+        neural_scale: float = 0.0,
         decode: str = "viterbi",
         phrases: dict[tuple[str, ...], tuple[str, str]] | None = None,
         use_patterns: bool = True,
@@ -335,7 +348,11 @@ class TaggerKernel:
             paths, scores = viterbi_decode(em, self.w["trans"], lengths)
         else:
             paths = greedy_decode(em, lengths)
-            scores = np.take_along_axis(em, paths[:, :, None], axis=2)[:, :, 0].sum(axis=1)
+            # padding positions count for nothing: the score is the
+            # sentence's own, whatever the chunk's padded length
+            scores = np.where(
+                mask, np.take_along_axis(em, paths[:, :, None], axis=2)[:, :, 0], 0.0
+            ).sum(axis=1)
         tags = [
             [self.ls.id2label[int(paths[b, t])] for t in range(int(lengths[b]))]
             for b in range(len(sents))

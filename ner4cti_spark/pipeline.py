@@ -27,7 +27,7 @@ from .tagging import salted_repartition, tag_mentions
 
 @dataclass
 class PipelineConfig:
-    neural_scale: float = 0.1
+    neural_scale: float = 0.0
     decode: str = "viterbi"
     link_threshold: float = 0.5
     num_partitions: int = 0          # 0 → default parallelism

@@ -26,7 +26,7 @@ def stream_corpus_mentions(
     out_dir: str,
     checkpoint_dir: str,
     weights_bc,
-    neural_scale: float = 0.1,
+    neural_scale: float = 0.0,
 ) -> None:
     """Incrementally tag corpus parquet files as they land. foreachBatch
     applies the SAME batch operators (sentencize → tag_mentions), so

@@ -21,6 +21,10 @@ from .kernel.tagger import TaggerKernel, extract_spans, lookup_canonical
 
 _KERNEL_CACHE: dict[int, TaggerKernel] = {}
 
+# score: the decoded path's mean per-token Viterbi score over lexicon
+# potentials and BIO transitions (greedy decode: the mean emission).
+# With neural_scale > 0 it moves by less than neural_scale; tags stay
+# fixed while 2*neural_scale + 2*spread(trans) < LEX_O - LEX_OTHER.
 MENTION_SCHEMA = (
     "repo string, path string, commit string, sha256 string, sent_id long, "
     "begin int, end int, surface string, etype string, score float, "
@@ -66,7 +70,7 @@ def _get_kernel(weights_bc, neural_scale: float, decode: str,
 
 
 def tag_token_frames(df: DataFrame, weights_bc, phrases_bc=None,
-                     use_patterns: bool = True, neural_scale: float = 0.1,
+                     use_patterns: bool = True, neural_scale: float = 0.0,
                      decode: str = "viterbi", label_space=None) -> DataFrame:
     """Generic tagging over (doc_id, sent_id, tokens) frames (e.g. CoNLL
     splits) with an optional corpus-induced lexicon broadcast."""
@@ -99,9 +103,15 @@ def salted_repartition(sentences: DataFrame, num_partitions: int, salt_buckets: 
     )
 
 
-def tag_mentions(sentences: DataFrame, weights_bc, neural_scale: float = 0.1,
+def tag_mentions(sentences: DataFrame, weights_bc, neural_scale: float = 0.0,
                  decode: str = "viterbi", sent_cache: bool = True) -> DataFrame:
-    """sentences → exploded mention rows (the UDTF shape, SURVEY §2.9)."""
+    """sentences → exploded mention rows (the UDTF shape, SURVEY §2.9).
+
+    `score` is the sentence's decoded-path mean per-token Viterbi score
+    over the lexicon potentials and the BIO transitions. neural_scale > 0
+    adds the untrained contextual branch, which moves `score` by less
+    than neural_scale and changes no tag while 2*neural_scale +
+    2*spread(trans) < LEX_O - LEX_OTHER (kernel/tagger.py docstring)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         kernel = _get_kernel(weights_bc, neural_scale, decode, sent_cache=sent_cache)

@@ -149,13 +149,58 @@ def test_tagger_finds_planted_entities():
 
 
 def test_tagger_deterministic_and_batch_invariant():
-    k = TaggerKernel(build_weights())
+    # the contextual branch on: padding and the attention mask are what
+    # could make a sentence's decode depend on its batch
+    k = TaggerKernel(build_weights(), neural_scale=0.1)
     other = "The Lazarus Group used Mimikatz for credential dumping .".split()
     tags_a, _ = k.tag([SENT, other])
     tags_b, _ = k.tag([other])          # different batch composition
     tags_c, _ = k.tag([SENT, other])    # repeat
     assert tags_a == tags_c
     assert tags_a[1] == tags_b[0]
+
+
+def test_greedy_score_ignores_chunk_padding():
+    """A sentence's greedy score is its own mean emission, whatever the
+    padded length of the chunk it decodes in."""
+    k = TaggerKernel(build_weights(), decode="greedy", sent_cache=False)
+    _, alone = k.tag([["APT28"]])
+    _, padded = k.tag([["APT28"], SENT])
+    assert alone[0] == padded[0] == 8.0
+
+
+def test_kernel_cache_is_a_bounded_lru(monkeypatch):
+    """tagging._get_kernel holds at most 4 kernels, evicts the least
+    recently used first, refreshes a hit, and keys on neural_scale."""
+    from ner4cti_spark import tagging
+
+    monkeypatch.setattr(tagging, "_KERNEL_CACHE", {})
+    w = build_weights()
+
+    class StubBroadcast:
+        def __init__(self, path):
+            self._path, self.value = path, w
+
+    bcs = [StubBroadcast(f"/broadcast/{i}") for i in range(5)]
+
+    def get(i, scale=0.0):
+        return tagging._get_kernel(bcs[i], scale, "viterbi")
+
+    def held():
+        return [(key[0], key[2]) for key in tagging._KERNEL_CACHE]
+
+    first = [get(i) for i in range(4)]
+    assert len(tagging._KERNEL_CACHE) == 4
+    assert get(0) is first[0]                      # hit: 0 becomes most recent
+    get(4)                                         # evicts 1, the LRU
+    assert held() == [("/broadcast/2", 0.0), ("/broadcast/3", 0.0),
+                      ("/broadcast/0", 0.0), ("/broadcast/4", 0.0)]
+    assert get(1) is not first[1]                  # rebuilt; evicts 2
+    on = get(4, 0.1)                               # separate entry; evicts 3
+    assert on.neural_scale == 0.1 and get(4).neural_scale == 0.0
+    assert held() == [("/broadcast/0", 0.0), ("/broadcast/1", 0.0),
+                      ("/broadcast/4", 0.1), ("/broadcast/4", 0.0)]
+    assert get(4, 0.1) is on
 
 
 def test_tags_align_with_tokens():
@@ -171,15 +216,15 @@ def test_reference_dims_profile_builds_and_tags():
     4 BiLSTM layers, 8 heads) runs the same code path."""
     from ner4cti_spark.kernel.weights import REFERENCE
 
-    k = TaggerKernel(build_weights(REFERENCE))
+    k = TaggerKernel(build_weights(REFERENCE), neural_scale=0.1)
     tags, _ = k.tag([SENT])
     found = {(s, e) for _, _, s, e in extract_spans(SENT, tags[0])}
     assert ("APT28", "threat-actor") in found
 
 
 def test_sentence_cache_does_not_change_output():
-    k_on = TaggerKernel(build_weights(), sent_cache=True)
-    k_off = TaggerKernel(build_weights(), sent_cache=False)
+    k_on = TaggerKernel(build_weights(), neural_scale=0.1, sent_cache=True)
+    k_off = TaggerKernel(build_weights(), neural_scale=0.1, sent_cache=False)
     sents = [SENT, ["int", "x", "=", "1"], SENT, ["APT28"], SENT]
     tags_on, sc_on = k_on.tag(sents)
     tags_off, sc_off = k_off.tag(sents)
@@ -190,14 +235,15 @@ def test_sentence_cache_does_not_change_output():
 def test_feat_cache_eviction_bound_is_enforced():
     """Regression for the r4 snapshot crash: FEAT_CACHE_MAX must exist as a
     class attribute and the eviction clear must not corrupt the current
-    batch (rows snapshotted before the clear)."""
-    k = TaggerKernel(build_weights())
+    batch (rows snapshotted before the clear). The contextual branch must
+    be on: at neural_scale 0 the feature cache is never filled."""
+    k = TaggerKernel(build_weights(), neural_scale=0.1)
     assert isinstance(TaggerKernel.FEAT_CACHE_MAX, int)
     k.FEAT_CACHE_MAX = 4  # force eviction on a tiny vocabulary
     sents = [["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]]
     tags_a, sc_a = k.tag(sents)          # crosses the bound mid-call
-    assert len(k._feat_cache) <= 4 + len(sents[0])
-    k2 = TaggerKernel(build_weights())   # default bound, no eviction
+    assert 0 < len(k._feat_cache) <= 4 + len(sents[0])
+    k2 = TaggerKernel(build_weights(), neural_scale=0.1)  # default bound
     tags_b, sc_b = k2.tag(sents)
     assert tags_a == tags_b
     assert np.allclose(sc_a, sc_b)

@@ -9,11 +9,14 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from ner4cti_spark.kernel import gazetteer
 from ner4cti_spark.kernel.crf import viterbi_decode
 from ner4cti_spark.kernel.gazetteer import PhraseMatcher, _stem
 from ner4cti_spark.kernel.labels import CTI
-from ner4cti_spark.kernel.tagger import TaggerKernel, casing_class, extract_spans
-from ner4cti_spark.kernel.weights import build_weights
+from ner4cti_spark.kernel.tagger import (
+    LEX_O, LEX_OTHER, MAX_SEQ_LEN, TaggerKernel, casing_class, extract_spans,
+)
+from ner4cti_spark.kernel.weights import FAST, REFERENCE, build_weights
 
 
 def _reference_case_oracle(token: str) -> int:
@@ -169,3 +172,54 @@ def test_phrase_matcher_matches_brute_force(stem, lexicon, sents):
         for b, e, etype in want:
             bio[b:e] = ["B-" + etype] + ["I-" + etype] * (e - b - 1)
         assert m.bio(toks) == bio
+
+
+# ---- the untrained contextual branch cannot move a tag ----
+
+_NEURAL_SCALE = 0.1  # the pipeline's former default
+_MARGIN_WEIGHTS = {"fast": build_weights(FAST), "reference": build_weights(REFERENCE)}
+
+
+def _valid_trans_spread(trans: np.ndarray) -> float:
+    valid = trans[np.asarray(CTI.bio_transition_mask()) == 0.0]
+    return float(valid.max() - valid.min())
+
+
+@pytest.mark.parametrize("profile", sorted(_MARGIN_WEIGHTS))
+def test_lexicon_margin_exceeds_neural_and_transition_reach(profile):
+    """A path that leaves the lexicon argmax at k tokens loses ≥ k·margin
+    of emission score; the branch wins back < 2k·scale, the valid
+    transitions ≤ 2k·spread."""
+    spread = _valid_trans_spread(_MARGIN_WEIGHTS[profile]["trans"])
+    assert 2 * _NEURAL_SCALE + 2 * spread < LEX_O - LEX_OTHER
+
+
+_alias = st.sampled_from(sorted({a for _, _, a in gazetteer.alias_rows()})).flatmap(
+    lambda a: st.sampled_from([a, a.lower(), a.upper()])).map(str.split)
+_indicator = st.one_of(
+    st.builds("CVE-{}-{:04d}".format, st.integers(1999, 2030), st.integers(0, 999_999)),
+    st.ip_addresses(v=4).map(str),
+    st.binary(min_size=16, max_size=16).map(bytes.hex),
+    st.binary(min_size=32, max_size=32).map(bytes.hex),
+).map(lambda t: [t])
+_filler = st.sampled_from(
+    ["the", "The", "used", "a", "dropper", "via", ",", ".", "=", "int", "x", "APT",
+     "28", "Bear", "spear", "Group", "Cobalt", "CVE-2017", "10.0.0", "to"]).map(lambda t: [t])
+_sentence = st.lists(st.one_of(_alias, _indicator, _filler), max_size=20).map(
+    lambda parts: [t for p in parts for t in p])
+
+
+@pytest.mark.parametrize("decode", ["viterbi", "greedy"])
+@pytest.mark.parametrize("profile", sorted(_MARGIN_WEIGHTS))
+@given(st.lists(_sentence, min_size=1, max_size=6))
+@settings(max_examples=15, deadline=None)
+def test_untrained_neural_branch_changes_no_tag(profile, decode, sents):
+    w = _MARGIN_WEIGHTS[profile]
+    flat = [t for s in sents for t in s] + ["the"]
+    sents = sents + [[], flat * (MAX_SEQ_LEN // len(flat) + 1)]  # empty, > MAX_SEQ_LEN
+    on = TaggerKernel(w, neural_scale=_NEURAL_SCALE, decode=decode, sent_cache=False)
+    off = TaggerKernel(w, neural_scale=0.0, decode=decode, sent_cache=False)
+    tags_on, sc_on = on.tag(sents)
+    tags_off, sc_off = off.tag(sents)
+    assert tags_on == tags_off
+    assert np.abs(sc_on - sc_off).max() < _NEURAL_SCALE

@@ -6,7 +6,10 @@ sentences, BLAS pinned to 1 thread) in K concurrent single-core
 processes for K in (1, 8, 32) and reports per-process wall-time
 inflation. Pure numpy — no Spark, no shuffle, no Python-worker reuse —
 so any slowdown at higher K is the box's shared L3/memory bandwidth,
-not the engine. Usage: python tools/contention_probe.py
+not the engine. The kernel runs with the untrained contextual branch on
+(neural_scale=0.1, the pipeline default when the recorded 8→32 evidence
+was measured); the pipeline now defaults to 0.0, which skips that
+forward. Usage: python tools/contention_probe.py
 """
 
 from __future__ import annotations
@@ -29,7 +32,8 @@ from ner4cti_spark.kernel.tagger import TaggerKernel
 from ner4cti_spark.kernel.gazetteer import phrase_index
 
 w = build_weights(FAST)
-k = TaggerKernel(w, phrases=phrase_index(), use_patterns=True, sent_cache=False)
+k = TaggerKernel(w, neural_scale=0.1, phrases=phrase_index(), use_patterns=True,
+                 sent_cache=False)
 rng = np.random.default_rng(0)
 vocab = ["alpha", "beta", "the", "APT28", "dropper", "used", "CVE-2017-0144",
          "malware", "implant", "c2", "infrastructure", "loader"]
