@@ -116,8 +116,8 @@ def mode_stage(sf_dir: str) -> None:
         t1 = time.time()
         spark.sparkContext.setJobDescription("stage: link")
         stats: dict = {}
-        entities = link_entities(mentions, cfg, stats=stats).cache()
-        n_alias = stats.get("n_surfaces") or entities.count()
+        entities = link_entities(mentions, cfg, stats=stats)  # eager
+        n_alias = stats["n_surfaces"]
         t2 = time.time()
         spark.sparkContext.setJobDescription("stage: triples")
         linked = graph.link_mentions(mentions, entities, alias_count=n_alias)
@@ -132,8 +132,6 @@ def mode_stage(sf_dir: str) -> None:
         }), flush=True)
         mentions.unpersist(blocking=False)
         entities.unpersist(blocking=False)
-        if "surface_agg" in stats:
-            stats["surface_agg"].unpersist(blocking=False)
 
 
 if __name__ == "__main__":

@@ -10,6 +10,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+TRIPLE_SCHEMA = (
+    "subj string, pred string, obj string, repo string, commit string, sha256 string"
+)
+
 
 def doc_uri() -> "F.Column":
     return F.concat_ws("@", F.col("repo"), F.col("path"), F.col("commit"))

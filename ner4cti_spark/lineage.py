@@ -59,6 +59,19 @@ def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
     )
 
 
+def read_checkpoint(spark: SparkSession, out_dir: str, table: str,
+                    schema: str) -> DataFrame:
+    """A bucketed checkpoint table, without its bucket column. A zero-row
+    partitioned write leaves the table directory with no `bucket=`
+    subdirectory (only `_SUCCESS`), from which parquet cannot infer a
+    schema: such a table reads as an empty frame of `schema`."""
+    path = os.path.join(out_dir, table)
+    if not (os.path.isdir(path)
+            and any(n.startswith("bucket=") for n in os.listdir(path))):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(path).drop("bucket")
+
+
 def _lineage_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_lineage")
 

@@ -9,6 +9,11 @@ on a real cluster (checkpoint dir instead of local).
 
 SURVEY §4.2: "GraphFrames if available; else a small iterative DataFrame
 label-propagation loop (join+min-agg until fixpoint)".
+
+Below the size gates everything runs on the driver over one array
+union-find core (`union_find`): `connected_components` for collected
+edge lists, and `canonicalize_local` for the pipeline's collected
+surface vocabulary.
 """
 
 from __future__ import annotations
@@ -21,11 +26,13 @@ from pyspark.sql import functions as F
 
 DRIVER_THRESHOLD = 2_000_000
 
+# alias table: one row per distinct (etype, surface) of the linked vocabulary
+ENTITY_SCHEMA = "entity_id long, canonical string, etype string, alias string"
+
 
 def connected_components(edges: DataFrame, max_iter: int = 20,
                          n_partitions: int = 8,
-                         driver_threshold: int = DRIVER_THRESHOLD,
-                         probe_rows: pd.DataFrame | None = None) -> DataFrame:
+                         driver_threshold: int = DRIVER_THRESHOLD) -> DataFrame:
     """edges(src long, dst long) undirected → (node long, component long),
     component = min reachable node id. Deterministic.
 
@@ -35,28 +42,22 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     edges they are collected and solved with driver union-find in
     milliseconds — ~10 distributed rounds of shuffle latency buy nothing
     there. Above the threshold the distributed min-label fixpoint with
-    pointer jumping runs (O(log diameter) rounds).
-
-    `probe_rows`: pre-collected `edges.limit(driver_threshold + 1)` as a
-    pandas frame of int64 src/dst — callers that already ran a probe job
-    (canonicalize piggybacks the surface count on it) pass it in so no
-    second job runs here."""
+    pointer jumping runs (O(log diameter) rounds)."""
     # single probe job, collected through Arrow: up to threshold+1 edges
     # arrive as two int64 columns, not as that many driver-side Row
     # objects; only if the graph exceeds the threshold does the
     # distributed fixpoint run (and the collected prefix is discarded)
-    pdf = probe_rows if probe_rows is not None else (
-        edges.select("src", "dst").limit(driver_threshold + 1).toPandas()
-    )
+    pdf = edges.select("src", "dst").limit(driver_threshold + 1).toPandas()
     if len(pdf) <= driver_threshold:
         return _driver_union_find(edges.sparkSession, pdf["src"].to_numpy(np.int64),
                                   pdf["dst"].to_numpy(np.int64))
     return _distributed_cc(edges, max_iter, n_partitions)
 
 
-def _driver_union_find(spark, src: np.ndarray, dst: np.ndarray) -> DataFrame:
-    """Union-find on a collected edge list — the same (node, component =
-    min reachable node id) output as _distributed_cc."""
+def union_find(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Union-find on an undirected edge list → (nodes, component): the
+    sorted distinct endpoints and, aligned with them, the min node id
+    reachable from each. A self-edge (a, a) adds the isolated node a."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -75,9 +76,16 @@ def _driver_union_find(spark, src: np.ndarray, dst: np.ndarray) -> DataFrame:
             else:
                 parent[a] = b
     nodes = np.unique(np.concatenate([src, dst]))
+    comp = np.array([find(n) for n in nodes.tolist()], dtype=np.int64)
+    return nodes, comp
+
+
+def _driver_union_find(spark, src: np.ndarray, dst: np.ndarray) -> DataFrame:
+    """Union-find on a collected edge list — the same (node, component =
+    min reachable node id) output as _distributed_cc."""
+    nodes, comp = union_find(src, dst)
     if not len(nodes):
         return spark.createDataFrame([], "node long, component long")
-    comp = np.array([find(n) for n in nodes.tolist()], dtype=np.int64)
     # pandas → Arrow createDataFrame path (r6): the list-of-tuples form
     # pickles row by row through the JVM gateway; Arrow ships the whole
     # column batch at once (guide §6 driver-transfer note)
@@ -147,8 +155,7 @@ def _distributed_cc(edges: DataFrame, max_iter: int, n_partitions: int) -> DataF
     return labels
 
 
-def canonicalize(surfaces: DataFrame, pairs: DataFrame,
-                 stats: dict | None = None) -> DataFrame:
+def canonicalize(surfaces: DataFrame, pairs: DataFrame) -> DataFrame:
     """surfaces(etype, surface, freq) + linked pairs → alias table
     (entity_id, canonical, etype, alias).
 
@@ -157,13 +164,7 @@ def canonicalize(surfaces: DataFrame, pairs: DataFrame,
     re-shuffle the corpus-scale mention table). The canonical surface of
     a component is its most frequent alias (freq desc, surface asc
     tiebreak). Singleton surfaces form their own entity.
-
-    With a `stats` dict, the probe job that sizes the CC strategy ALSO
-    counts the surface vocabulary (stats["n_surfaces"] = alias-table row
-    count — the output here is exactly one row per surfaces row), so the
-    caller's downstream broadcast-vs-shuffle decision costs no extra
-    blocking job. At local[N] the pipeline tail is bounded by serialized
-    job COUNT, not data volume (NOTES_r2), so every fused probe matters."""
+    `canonicalize_local` is the driver twin of this function."""
     from pyspark.sql import Window as W
 
     from ..linking.minhash_lsh import normalize_surface
@@ -182,24 +183,7 @@ def canonicalize(surfaces: DataFrame, pairs: DataFrame,
         .select("src", "dst")
         .persist()
     )
-    probe_rows = None
-    if stats is not None:
-        # one job, through Arrow: up to threshold+1 edges plus a 1-row
-        # surface count
-        probe = (
-            edges.select("src", "dst", F.lit(0).alias("marker"))
-            .limit(DRIVER_THRESHOLD + 1)
-            .unionByName(
-                surfaces.agg(F.count(F.lit(1)).alias("src"))
-                .select("src", F.lit(0).cast("long").alias("dst"),
-                        F.lit(1).alias("marker"))
-            )
-            .toPandas()
-        )
-        is_edge = probe["marker"].to_numpy() == 0
-        probe_rows = probe.loc[is_edge, ["src", "dst"]]
-        stats["n_surfaces"] = int(probe.loc[~is_edge, "src"].iloc[0])
-    comp = connected_components(edges, probe_rows=probe_rows)
+    comp = connected_components(edges)
     edges.unpersist(blocking=False)
     labeled = (
         ids.join(comp, ids.node == comp.node, "left")
@@ -214,3 +198,30 @@ def canonicalize(surfaces: DataFrame, pairs: DataFrame,
         F.col("component").alias("entity_id"), "canonical", "etype",
         F.col("surface").alias("alias"),
     )
+
+
+def canonicalize_local(vocab: pd.DataFrame, src: np.ndarray,
+                       dst: np.ndarray) -> pd.DataFrame:
+    """Driver twin of `canonicalize`: vocab(etype, surface, freq, node),
+    one row per distinct (etype, surface) with node = xxhash64(etype,
+    normalized surface) as Spark computed it, plus node-id edges →
+    pandas alias table (entity_id, canonical, etype, alias). Same
+    contract: entity_id = min node id in the component, canonical =
+    its (freq desc, surface asc) first alias."""
+    node = vocab["node"].to_numpy(np.int64)
+    # every vocabulary node joins the graph as a self-edge, so singletons
+    # come back as their own component
+    nodes, comp = union_find(np.concatenate([src, node]), np.concatenate([dst, node]))
+    labeled = pd.DataFrame({
+        "entity_id": comp[np.searchsorted(nodes, node)],
+        "etype": vocab["etype"].to_numpy(object),
+        "alias": vocab["surface"].to_numpy(object),
+        "freq": vocab["freq"].to_numpy(np.int64),
+    })
+    canon = (
+        labeled.sort_values(["entity_id", "freq", "alias"], ascending=[True, False, True])
+        .drop_duplicates("entity_id")
+        .set_index("entity_id")["alias"]
+    )
+    labeled["canonical"] = labeled["entity_id"].map(canon)
+    return labeled[["entity_id", "canonical", "etype", "alias"]]

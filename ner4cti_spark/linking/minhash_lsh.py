@@ -6,15 +6,23 @@ distinct normalized surfaces → character n-gram shingles → MinHash
 signatures → band-bucket join. Only candidates sharing a band bucket are
 scored — the O(n²) pair space never materializes.
 
-Two implementations:
-- `candidate_pairs_ml`: pyspark.ml MinHashLSH.approxSimilarityJoin
-  (JVM-side, exact Jaccard on candidates).
+Implementations:
 - `candidate_pairs_sql`: pure DataFrame minhash banding (md5-based,
   engine-portable — the same algorithm the DuckDB oracle can run).
-Both restrict pairs to equal etype and return exact Jaccard similarity.
+- `candidate_pairs_local`: its driver twin for a collected vocabulary.
+  It shares the md5 family string for string — minhash i = min over
+  md5('h{i}:' + shingle), band key = md5('band{b}|' + the band's
+  minhashes joined by '|'), shingles from '^' + norm + '$' — so on the
+  same normalized surfaces it returns the same pairs. The pipeline runs
+  it below the driver gate in `pipeline.link_entities`.
+- `candidate_pairs_ml`: pyspark.ml MinHashLSH.approxSimilarityJoin
+  (JVM-side, exact Jaccard on candidates).
+All restrict pairs to equal etype and re-score with exact Jaccard.
 """
 
 from __future__ import annotations
+
+from hashlib import md5
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -157,6 +165,57 @@ def candidate_pairs_sql(
         .dropDuplicates(["etype", "surface_a", "surface_b"])
         .select("etype", "surface_a", "surface_b", F.round("jaccard", 6).alias("jaccard"))
     )
+
+
+def shingle_set(norm: str, n: int = 3) -> frozenset[str]:
+    """Driver twin of `surface_shingles`: distinct char n-grams of
+    '^norm$' (a norm shorter than n - 2 gives the one short shingle)."""
+    padded = f"^{norm}$"
+    return frozenset(padded[i:i + n] for i in range(max(len(padded) - n, 0) + 1))
+
+
+def candidate_pairs_local(
+    keys: list[tuple[str, str]],
+    sim_threshold: float = 0.5,
+    n_hashes: int = N_HASHES,
+    band_size: int = BAND_SIZE,
+) -> list[tuple[int, int]]:
+    """Driver twin of `candidate_pairs_sql` over distinct (etype, norm)
+    keys, norm as `normalize_surface` computed it → index pairs (i, j),
+    i < j: same etype, sharing a band bucket, exact Jaccard of their
+    shingle sets >= sim_threshold.
+
+    Surfaces with equal norm have equal shingles, so keying by norm
+    instead of by surface loses no pair the SQL path would link: those
+    pairs already share a node id. Each distinct shingle is hashed once;
+    driver memory stays O(vocabulary + linked pairs)."""
+    memo: dict[str, tuple[str, ...]] = {}
+
+    def hashes(s: str) -> tuple[str, ...]:
+        h = memo.get(s)
+        if h is None:
+            h = memo[s] = tuple(md5(f"h{i}:{s}".encode()).hexdigest()
+                                for i in range(n_hashes))
+        return h
+
+    sets = [shingle_set(norm) for _etype, norm in keys]
+    buckets: dict[tuple[str, str], list[int]] = {}
+    for idx, ((etype, _norm), sh) in enumerate(zip(keys, sets)):
+        mins = [min(col) for col in zip(*map(hashes, sh))]
+        for b in range(n_hashes // band_size):
+            band = "|".join([f"band{b}", *mins[b * band_size:(b + 1) * band_size]])
+            buckets.setdefault((etype, md5(band.encode()).hexdigest()), []).append(idx)
+    # a pair sharing several buckets is scored once per bucket; only the
+    # pairs that pass are kept, so no candidate set is ever materialized
+    pairs = set()
+    for members in buckets.values():
+        for x, i in enumerate(members):
+            si = sets[i]
+            for j in members[x + 1:]:
+                inter = len(si & sets[j])
+                if inter / (len(si) + len(sets[j]) - inter) >= sim_threshold:
+                    pairs.add((i, j))
+    return sorted(pairs)
 
 
 def candidate_pairs_ml(surfaces: DataFrame, sim_threshold: float = 0.5) -> DataFrame:

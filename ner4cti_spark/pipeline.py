@@ -8,19 +8,31 @@ One DataFrame DAG per stage; the only corpus-scale shuffles are the
 salted repartition before tagging and the per-sentence groupBy for
 co-occurrence. Linking and canonicalization operate on the distinct
 surface vocabulary (orders of magnitude smaller than the corpus) and
-re-attach via broadcast joins.
+re-attach via broadcast joins. `link_entities` is eager and size-
+adaptive: up to components.DRIVER_THRESHOLD surfaces and
+DRIVER_FUZZY_SURFACES fuzzy-etype surfaces it runs as one Spark job (an
+Arrow collect of the vocabulary) plus driver MinHash, union-find and
+canonical pick; above that gate it runs the distributed
+`candidate_pairs_sql` + `canonicalize` path.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from . import graph, lineage
 from .kernel.weights import FAST, KernelProfile, build_weights
-from .linking.components import canonicalize
-from .linking.minhash_lsh import candidate_pairs_sql
+from .linking.components import (
+    DRIVER_THRESHOLD, ENTITY_SCHEMA, canonicalize, canonicalize_local,
+)
+from .linking.minhash_lsh import (
+    FUZZY_ETYPES, candidate_pairs_local, candidate_pairs_sql, normalize_surface,
+)
 from .operators.sentencize import sentencize, with_sha256
 from .tagging import salted_repartition, tag_mentions
 
@@ -67,35 +79,120 @@ def extract_mentions(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig
     return mentions
 
 
+DRIVER_FUZZY_SURFACES = 100_000
+"""Driver linking path cap on distinct fuzzy-etype surfaces (named
+entities, the only ones MinHash touches).
+
+Measured on 4 CPUs (local[4], warm JVM), `_link_entities(...)` + count
+over synthetic vocabularies of distinct 3-word names built from 16
+syllables — a collision-heavy alphabet, so band buckets are large and
+candidate pairs grow faster than the vocabulary:
+
+    fuzzy surfaces    driver path    SQL path (driver_threshold=0)
+            19,978         3.2 s       17.3 s
+            49,890         9.3 s       45.8 s
+            99,561        27.3 s      153.6 s
+
+No crossover up to 100k on 4 CPUs: the serial driver path stays ~5×
+faster. The cap sits at the largest measured size. Beyond it the
+driver's cost is unmeasured and superlinear, while the SQL path's is
+parallel: at 100k it ties the driver with ~5.6× these 4 CPUs.
+"""
+
+
 def link_entities(mentions: DataFrame, cfg: PipelineConfig,
                   stats: dict | None = None) -> DataFrame:
-    """Edges = exact-normalized equality (all etypes) ∪ MinHash-LSH fuzzy
-    pairs (named etypes only — indicators/CVEs are identities).
+    """Edges = exact-normalized equality (all etypes) ∪ knowledge hints ∪
+    MinHash-LSH fuzzy pairs (named etypes only — indicators/CVEs are
+    identities) → alias table (entity_id, canonical, etype, alias).
 
-    The distinct-surface vocabulary is aggregated from the corpus-scale
-    mention table exactly ONCE and cached; every linking stage reads the
-    cache (orders of magnitude smaller than the corpus). No blocking
-    action runs here — the caller's first action on the result (e.g.
-    entities.cache().count()) materializes the whole chain in one job,
-    and that count is exactly the alias-table row count (distinct mention
-    surfaces plus any hint bridge nodes — canonical forms never observed
-    verbatim), which is the right number for link_mentions' broadcast
-    decision. The old separate agg.count() probe serialized an extra
-    corpus-scale job into the pipeline tail."""
-    from pyspark.sql import functions as F
+    Eager: the stage runs when called — one Spark job below the driver
+    gate (see `_link_entities`) — and returns a frame whose row count is
+    known. With a `stats` dict, stats["n_surfaces"] is that count: one
+    row per distinct mention surface plus hint bridge nodes, the number
+    link_mentions' broadcast decision needs."""
+    entities, n_aliases = _link_entities(mentions, cfg)
+    if stats is not None:
+        stats["n_surfaces"] = n_aliases
+    return entities
 
+
+def _link_entities(mentions: DataFrame, cfg: PipelineConfig,
+                   driver_threshold: int = DRIVER_THRESHOLD) -> tuple[DataFrame, int]:
+    """→ (alias table, its row count).
+
+    The surface vocabulary is aggregated from the corpus-scale mention
+    table and collected through Arrow in ONE job, limited to
+    driver_threshold + 1 rows: Spark computes each surface's node id
+    xxhash64(etype, normalize_surface(surface)) and its normalized form,
+    and the same for its canonical hint, so entity ids are the SQL
+    path's bit for bit. If the vocabulary fits (≤ driver_threshold rows,
+    ≤ DRIVER_FUZZY_SURFACES fuzzy-etype surfaces), the driver adds hint
+    bridge nodes and hint edges, runs MinHash-LSH with exact-Jaccard
+    re-scoring (`candidate_pairs_local`), union-find and the canonical
+    pick (`canonicalize_local`), and ships the alias table back as one
+    Arrow frame. Nothing is persisted.
+
+    Above the gate the distributed path runs: the aggregation is
+    persisted, `candidate_pairs_sql` + `canonicalize` build the alias
+    table, which is persisted and counted, and the aggregation is
+    unpersisted before returning. `driver_threshold=0` forces that path
+    for any non-empty vocabulary."""
     has_hints = "canonical_hint" in mentions.columns
     hint_col = F.col("canonical_hint") if has_hints else F.lit(None).cast("string")
     agg = mentions.groupBy("etype", "surface").agg(
         F.count(F.lit(1)).alias("freq"),
         F.max(hint_col).alias("hint"),  # hints are phrase-deterministic
-    ).persist()
-    if stats is not None:
-        stats["surface_agg"] = agg
+    )
+    probe = agg.select(
+        "etype", "surface", "freq", "hint",
+        F.xxhash64("etype", normalize_surface(F.col("surface"))).alias("node"),
+        normalize_surface(F.col("surface")).alias("norm"),
+        F.xxhash64("etype", normalize_surface(F.col("hint"))).alias("hint_node"),
+        normalize_surface(F.col("hint")).alias("hint_norm"),
+    ).limit(driver_threshold + 1).toPandas()
+    if len(probe) <= driver_threshold:
+        linked = _link_local(probe, cfg.link_threshold)
+        if linked is not None:
+            return mentions.sparkSession.createDataFrame(linked, ENTITY_SCHEMA), len(linked)
+    return _link_sql(agg.persist(), cfg.link_threshold)
+
+
+def _link_local(probe: pd.DataFrame, link_threshold: float) -> pd.DataFrame | None:
+    """Collected vocabulary → pandas alias table, or None when its
+    fuzzy-etype surfaces exceed DRIVER_FUZZY_SURFACES."""
+    hinted = probe[probe["hint"].notna()]
     # node set = mention surfaces ∪ hint targets (a hint may name a
     # canonical form that never appears verbatim in the corpus — it then
     # acts purely as a bridge node with freq 0, so canonical selection
     # still prefers an actually-observed surface)
+    bridges = pd.DataFrame({
+        "etype": hinted["etype"], "surface": hinted["hint"], "freq": 0,
+        "node": hinted["hint_node"], "norm": hinted["hint_norm"],
+    })
+    vocab = (
+        pd.concat([probe[["etype", "surface", "freq", "node", "norm"]], bridges])
+        .sort_values("freq", kind="stable")
+        .drop_duplicates(["etype", "surface"], keep="last")
+    )
+    fuzzy = vocab[vocab["etype"].isin(FUZZY_ETYPES)].drop_duplicates(["etype", "norm"])
+    if len(fuzzy) > DRIVER_FUZZY_SURFACES:
+        return None
+    # edges: knowledge prior (surface ↔ its gazetteer/lexicon canonical,
+    # e.g. 'Sofacy' ↔ 'APT28') ∪ MinHash-LSH fuzzy pairs; exact-normalized
+    # equality is folded into the node ids
+    keys = list(zip(fuzzy["etype"], fuzzy["norm"]))
+    pairs = np.array(candidate_pairs_local(keys, sim_threshold=link_threshold),
+                     dtype=np.int64).reshape(-1, 2)
+    fnode = fuzzy["node"].to_numpy(np.int64)
+    src = np.concatenate([hinted["node"].to_numpy(np.int64), fnode[pairs[:, 0]]])
+    dst = np.concatenate([hinted["hint_node"].to_numpy(np.int64), fnode[pairs[:, 1]]])
+    return canonicalize_local(vocab, src, dst)
+
+
+def _link_sql(agg: DataFrame, link_threshold: float) -> tuple[DataFrame, int]:
+    """The distributed linking path over the persisted surface
+    aggregation (etype, surface, freq, hint), which it unpersists."""
     hint_nodes = (
         agg.filter(F.col("hint").isNotNull())
         .select("etype", F.col("hint").alias("surface"), F.lit(0).alias("freq"))
@@ -107,9 +204,6 @@ def link_entities(mentions: DataFrame, cfg: PipelineConfig,
         .groupBy("etype", "surface")
         .agg(F.max("freq").alias("freq"))
     )
-    # edges: knowledge prior (surface ↔ its gazetteer/lexicon canonical,
-    # e.g. 'Sofacy' ↔ 'APT28') ∪ MinHash-LSH fuzzy pairs; exact-normalized
-    # equality is folded into canonicalize's node ids
     hint_pairs = (
         agg.filter(F.col("hint").isNotNull() & (F.col("hint") != F.col("surface")))
         .select(
@@ -120,9 +214,12 @@ def link_entities(mentions: DataFrame, cfg: PipelineConfig,
         )
         .distinct()
     )
-    fuzzy = candidate_pairs_sql(surfaces, sim_threshold=cfg.link_threshold)
+    fuzzy = candidate_pairs_sql(surfaces, sim_threshold=link_threshold)
     pairs = hint_pairs.unionByName(fuzzy).dropDuplicates(["etype", "surface_a", "surface_b"])
-    return canonicalize(surfaces, pairs, stats=stats)
+    entities = canonicalize(surfaces, pairs).persist()
+    n_aliases = entities.count()
+    agg.unpersist(blocking=False)
+    return entities, n_aliases
 
 
 def run_pipeline(spark: SparkSession, corpus: DataFrame,
@@ -134,9 +231,10 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     With out_dir: the tag stage checkpoints per-bucket (resume-aware,
     append); linking/canonicalize/materialize are global functions of the
     full mentions checkpoint and are recomputed with overwrite semantics
-    — see lineage.py module docstring for why the split lands there."""
-    import os
-
+    — see lineage.py module docstring for why the split lands there.
+    Without it, mentions come back cached; entities are persisted only
+    above the linking gate. Unpersisting the returned frames frees
+    everything the run persisted."""
     from .tagging import MENTION_SCHEMA
 
     cfg = cfg or PipelineConfig()
@@ -146,37 +244,17 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
         lineage.write_checkpoint(
             spark, new_mentions, out_dir, table="mentions", stage="tag", mode="append"
         )
-        mentions_path = f"{out_dir}/mentions"
-        if os.path.exists(mentions_path):
-            mentions = spark.read.parquet(mentions_path).drop("bucket")
-        else:  # empty corpus: partitioned write of zero rows creates no dir
-            mentions = spark.createDataFrame([], MENTION_SCHEMA)
+        mentions = lineage.read_checkpoint(spark, out_dir, "mentions", MENTION_SCHEMA)
     else:
         mentions = extract_mentions(spark, corpus, cfg, weights_bc=weights_bc).cache()
-    stats: dict = {}
-    entities = link_entities(mentions, cfg, stats=stats).cache()
-    # alias-table row count (distinct surfaces + hint bridge nodes) — the
-    # exact quantity link_mentions' broadcast-vs-shuffle choice needs —
-    # comes from canonicalize's CC probe job (piggybacked 1-row count),
-    # so NO separate entities.count() job serializes into the tail; the
-    # caller's first action on triples materializes the (cached) linking
-    # chain, reading the still-persisted surface aggregation.
-    n_alias_rows = stats.get("n_surfaces")
-    if n_alias_rows is None:  # defensive: canonicalize probe skipped
-        n_alias_rows = entities.count()
+    # eager: the alias-table row count — the exact quantity
+    # link_mentions' broadcast-vs-shuffle choice needs — comes back with it
+    entities, n_alias_rows = _link_entities(mentions, cfg)
     linked = graph.link_mentions(mentions, entities, alias_count=n_alias_rows)
     triples = graph.build_triples(linked, entities)
     if out_dir is not None:
         lineage.write_checkpoint(
             spark, triples, out_dir, table="triples", stage="materialize", mode="overwrite"
         )
-        triples = spark.read.parquet(f"{out_dir}/triples").drop("bucket")
-        if "surface_agg" in stats:  # triples are materialized: safe to free
-            stats["surface_agg"].unpersist(blocking=False)
-    out = {"mentions": mentions, "entities": entities, "triples": triples}
-    if out_dir is None and "surface_agg" in stats:
-        # lazy path: the persisted surface aggregation must survive until
-        # the caller's first action populates the entities cache; hand the
-        # handle back so callers that unpersist their outputs free it too
-        out["_surface_agg"] = stats["surface_agg"]
-    return out
+        triples = lineage.read_checkpoint(spark, out_dir, "triples", graph.TRIPLE_SCHEMA)
+    return {"mentions": mentions, "entities": entities, "triples": triples}

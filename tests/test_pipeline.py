@@ -131,3 +131,49 @@ def test_parallelism_invariance(spark, corpus):
     ta = run_pipeline(spark, corpus, cfg_a)["triples"].select("subj", "pred", "obj")
     tb = run_pipeline(spark, corpus, cfg_b)["triples"].select("subj", "pred", "obj")
     assert ta.exceptAll(tb).count() == 0 and tb.exceptAll(ta).count() == 0
+
+
+def _columns(df):
+    return [(f.name, f.dataType) for f in df.schema]
+
+
+def test_empty_corpus_in_memory_and_checkpointed(spark, tmp_path):
+    """A zero-row corpus gives zero mentions, entities and triples with
+    the documented schemas, both in memory and with a checkpoint dir (a
+    zero-row partitioned write leaves only _SUCCESS in the table dir)."""
+    from ner4cti_spark.graph import TRIPLE_SCHEMA
+    from ner4cti_spark.linking.components import ENTITY_SCHEMA
+    from ner4cti_spark.tagging import MENTION_SCHEMA
+
+    empty = generate_corpus(spark, n_docs=10).limit(0)
+    want = {name: _columns(spark.createDataFrame([], schema)) for name, schema in (
+        ("mentions", MENTION_SCHEMA), ("entities", ENTITY_SCHEMA),
+        ("triples", TRIPLE_SCHEMA))}
+    for out_dir in (None, str(tmp_path / "kg")):
+        out = run_pipeline(spark, empty, out_dir=out_dir)
+        for name, cols in want.items():
+            assert _columns(out[name]) == cols, (out_dir, name)
+            assert out[name].count() == 0, (out_dir, name)
+
+
+def test_run_pipeline_leaves_no_persisted_rdd(spark):
+    """Unpersisting run_pipeline's outputs frees everything it persisted,
+    and the SQL linking path (forced with driver_threshold=0) keeps only
+    its returned alias table persisted. Compared as persistent-RDD ids,
+    not counts: the context cleaner may drop RDDs of earlier tests
+    meanwhile. The corpus is one no other test caches, because
+    unpersisting a frame frees every cached frame of equal plan."""
+    from ner4cti_spark.pipeline import _link_entities
+
+    def persistent_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent_ids()
+    out = run_pipeline(spark, generate_corpus(spark, n_docs=17))
+    out["triples"].count()
+    sql_entities, _ = _link_entities(out["mentions"], PipelineConfig(), driver_threshold=0)
+    assert persistent_ids() - before, "the SQL path persists its alias table"
+    sql_entities.unpersist()
+    for df in out.values():
+        df.unpersist()
+    assert persistent_ids() - before == set()
