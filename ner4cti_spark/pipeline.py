@@ -1,15 +1,20 @@
 """End-to-end KG construction pipeline.
 
 scan → sha256 → sentencize → salted repartition → tag (mapInPandas,
-broadcast weights) → MinHash-LSH linking → connected-component
-canonicalization → triples → partitioned write + lineage (resumable).
+broadcast weights; one row per sentence with its mentions as arrays) →
+MinHash-LSH linking → connected-component canonicalization → triples
+(one mapInPandas over the sentence rows) → partitioned write + lineage
+(resumable).
 
-One DataFrame DAG per stage; the only corpus-scale shuffles are the
-salted repartition before tagging and the per-sentence groupBy for
-co-occurrence. Linking and canonicalization operate on the distinct
-surface vocabulary (orders of magnitude smaller than the corpus) and
-re-attach via broadcast joins. `link_entities` is eager and size-
-adaptive: up to components.DRIVER_THRESHOLD surfaces and
+One DataFrame DAG per stage. In memory the only corpus-scale shuffles
+are the salted repartition before tagging and the final triple dedup:
+the tag stage already emits each sentence's mentions together, so
+co-occurrence needs no regroup, and the alias table reaches the triple
+emission as a broadcast dict, so there is no mention↔alias join.
+Linking and canonicalization operate on the distinct surface vocabulary
+(orders of magnitude smaller than the corpus), aggregated from the flat
+`mentions` view of the cached sentence rows. `link_entities` is eager
+and size-adaptive: up to components.DRIVER_THRESHOLD surfaces and
 DRIVER_FUZZY_SURFACES fuzzy-etype surfaces it runs as one Spark job (an
 Arrow collect of the vocabulary) plus driver MinHash, union-find and
 canonical pick; above that gate it runs the distributed
@@ -34,7 +39,9 @@ from .linking.minhash_lsh import (
     FUZZY_ETYPES, candidate_pairs_local, candidate_pairs_sql, normalize_surface,
 )
 from .operators.sentencize import sentencize, with_sha256
-from .tagging import salted_repartition, tag_mentions
+from .tagging import (
+    MENTION_SCHEMA, flatten_mentions, nest_mentions, salted_repartition, tag_sentences,
+)
 
 
 @dataclass
@@ -54,8 +61,16 @@ def broadcast_weights(spark: SparkSession, cfg: PipelineConfig):
 
 def extract_mentions(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
                      weights_bc=None, out_dir: str | None = None) -> DataFrame:
-    """Sentencize + tag. With out_dir: resume-aware — buckets already in
-    the tag-stage lineage are skipped BEFORE any model compute runs."""
+    """Sentencize + tag → one row per mention (`MENTION_SCHEMA`). With
+    out_dir: resume-aware — buckets already in the tag-stage lineage are
+    skipped BEFORE any model compute runs."""
+    return flatten_mentions(extract_sentences(spark, corpus, cfg, weights_bc, out_dir))
+
+
+def extract_sentences(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
+                      weights_bc=None, out_dir: str | None = None) -> DataFrame:
+    """Sentencize + tag → one row per sentence with mentions
+    (`tagging.SENTENCE_SCHEMA`); `out_dir` as in `extract_mentions`."""
     bc = weights_bc or broadcast_weights(spark, cfg)
     sents = sentencize(with_sha256(corpus))
     if out_dir is not None:
@@ -72,11 +87,10 @@ def extract_mentions(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig
     # cfg.num_partitions explicitly.
     n_part = cfg.num_partitions or spark.sparkContext.defaultParallelism
     sents = salted_repartition(sents, n_part, cfg.salt_buckets)
-    mentions = tag_mentions(
+    return tag_sentences(
         sents.drop("bucket"), bc, neural_scale=cfg.neural_scale, decode=cfg.decode,
         sent_cache=cfg.sent_cache,
     )
-    return mentions
 
 
 DRIVER_FUZZY_SURFACES = 100_000
@@ -111,7 +125,7 @@ def link_entities(mentions: DataFrame, cfg: PipelineConfig,
     known. With a `stats` dict, stats["n_surfaces"] is that count: one
     row per distinct mention surface plus hint bridge nodes, the number
     link_mentions' broadcast decision needs."""
-    entities, n_aliases = _link_entities(mentions, cfg)
+    entities, n_aliases, _ = _link(mentions, cfg)
     if stats is not None:
         stats["n_surfaces"] = n_aliases
     return entities
@@ -119,7 +133,15 @@ def link_entities(mentions: DataFrame, cfg: PipelineConfig,
 
 def _link_entities(mentions: DataFrame, cfg: PipelineConfig,
                    driver_threshold: int = DRIVER_THRESHOLD) -> tuple[DataFrame, int]:
-    """→ (alias table, its row count).
+    """→ (alias table, its row count); see `_link`."""
+    return _link(mentions, cfg, driver_threshold)[:2]
+
+
+def _link(mentions: DataFrame, cfg: PipelineConfig,
+          driver_threshold: int = DRIVER_THRESHOLD
+          ) -> tuple[DataFrame, int, pd.DataFrame | None]:
+    """→ (alias table, its row count, its pandas copy on the driver or
+    None).
 
     The surface vocabulary is aggregated from the corpus-scale mention
     table and collected through Arrow in ONE job, limited to
@@ -131,7 +153,8 @@ def _link_entities(mentions: DataFrame, cfg: PipelineConfig,
     bridge nodes and hint edges, runs MinHash-LSH with exact-Jaccard
     re-scoring (`candidate_pairs_local`), union-find and the canonical
     pick (`canonicalize_local`), and ships the alias table back as one
-    Arrow frame. Nothing is persisted.
+    Arrow frame, keeping the pandas table for the triple emission's
+    alias dict. Nothing is persisted.
 
     Above the gate the distributed path runs: the aggregation is
     persisted, `candidate_pairs_sql` + `canonicalize` build the alias
@@ -154,8 +177,9 @@ def _link_entities(mentions: DataFrame, cfg: PipelineConfig,
     if len(probe) <= driver_threshold:
         linked = _link_local(probe, cfg.link_threshold)
         if linked is not None:
-            return mentions.sparkSession.createDataFrame(linked, ENTITY_SCHEMA), len(linked)
-    return _link_sql(agg.persist(), cfg.link_threshold)
+            entities = mentions.sparkSession.createDataFrame(linked, ENTITY_SCHEMA)
+            return entities, len(linked), linked
+    return (*_link_sql(agg.persist(), cfg.link_threshold), None)
 
 
 def _link_local(probe: pd.DataFrame, link_threshold: float) -> pd.DataFrame | None:
@@ -226,17 +250,19 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
                  cfg: PipelineConfig | None = None,
                  out_dir: str | None = None,
                  weights_bc=None) -> dict[str, DataFrame]:
-    """Returns {'mentions', 'entities', 'triples'} DataFrames.
+    """Returns {'sentences', 'mentions', 'entities', 'triples'} DataFrames.
 
-    With out_dir: the tag stage checkpoints per-bucket (resume-aware,
-    append); linking/canonicalize/materialize are global functions of the
-    full mentions checkpoint and are recomputed with overwrite semantics
-    — see lineage.py module docstring for why the split lands there.
-    Without it, mentions come back cached; entities are persisted only
-    above the linking gate. Unpersisting the returned frames frees
-    everything the run persisted."""
-    from .tagging import MENTION_SCHEMA
-
+    Without out_dir: `sentences` (the tag stage's rows, one per sentence
+    with mentions) come back cached, `mentions` is their flat view, and
+    `triples` are lazy over them. With out_dir: the tag stage checkpoints
+    flat mentions per-bucket (resume-aware, append); `sentences` regroups
+    the checkpoint by sentence, and linking/canonicalize/materialize are
+    global functions of the full mentions checkpoint, recomputed with
+    overwrite semantics — see lineage.py module docstring for why the
+    split lands there. Entities are persisted only above the linking
+    gate. Unpersisting the returned frames frees everything the run
+    persisted. The alias-dict broadcast is destroyed once the triples
+    are written; in memory it lives as long as the lazy triples' plan."""
     cfg = cfg or PipelineConfig()
     if out_dir is not None:
         new_mentions = extract_mentions(spark, corpus, cfg, weights_bc=weights_bc,
@@ -245,16 +271,22 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
             spark, new_mentions, out_dir, table="mentions", stage="tag", mode="append"
         )
         mentions = lineage.read_checkpoint(spark, out_dir, "mentions", MENTION_SCHEMA)
+        sentences = nest_mentions(mentions)
     else:
-        mentions = extract_mentions(spark, corpus, cfg, weights_bc=weights_bc).cache()
-    # eager: the alias-table row count — the exact quantity
-    # link_mentions' broadcast-vs-shuffle choice needs — comes back with it
-    entities, n_alias_rows = _link_entities(mentions, cfg)
-    linked = graph.link_mentions(mentions, entities, alias_count=n_alias_rows)
-    triples = graph.build_triples(linked, entities)
+        sentences = extract_sentences(spark, corpus, cfg, weights_bc=weights_bc).cache()
+        mentions = flatten_mentions(sentences)
+    # eager: the alias-table row count — the exact quantity the
+    # broadcast-vs-shuffle choice needs — comes back with it
+    entities, n_alias_rows, aliases = _link(mentions, cfg)
+    triples, aliases_bc = graph.sentence_triples(
+        sentences, entities, alias_count=n_alias_rows, aliases=aliases
+    )
     if out_dir is not None:
         lineage.write_checkpoint(
             spark, triples, out_dir, table="triples", stage="materialize", mode="overwrite"
         )
+        if aliases_bc is not None:
+            aliases_bc.destroy()
         triples = lineage.read_checkpoint(spark, out_dir, "triples", graph.TRIPLE_SCHEMA)
-    return {"mentions": mentions, "entities": entities, "triples": triples}
+    return {"sentences": sentences, "mentions": mentions, "entities": entities,
+            "triples": triples}

@@ -6,7 +6,8 @@ streaming mapping for sources that ARE streams:
 
 - stream_corpus_mentions: file-source corpus → sentencize → tag
   (foreachBatch reuses the exact batch operators — one code path) →
-  append mention parquet, Trigger.AvailableNow for catch-up-then-stop.
+  flat mention rows → append parquet, at most default-parallelism files
+  per micro-batch, Trigger.AvailableNow for catch-up-then-stop.
 - windowed_event_counts: event-time tumbling-window aggregation with
   watermark for late data.
 """
@@ -29,11 +30,18 @@ def stream_corpus_mentions(
     neural_scale: float = 0.0,
 ) -> None:
     """Incrementally tag corpus parquet files as they land. foreachBatch
-    applies the SAME batch operators (sentencize → tag_mentions), so
-    streaming and batch can never drift semantically. AvailableNow
-    processes the backlog and stops — the streaming analog of the
-    resumable batch job (source progress tracked in the stream
-    checkpoint instead of the lineage table)."""
+    applies the SAME batch operators (sentencize → tag_mentions, the
+    flat view of the tag stage's sentence rows), so streaming and batch
+    can never drift semantically. AvailableNow processes the backlog and
+    stops — the streaming analog of the resumable batch job (source
+    progress tracked in the stream checkpoint instead of the lineage
+    table).
+
+    Each micro-batch writes at most defaultParallelism files instead of
+    one small file per read task, however large its backlog: a coalesce
+    on the write path only. It merges tasks without a shuffle, and the
+    tag stage still runs as many tasks at once as there are cores."""
+    n_files = spark.sparkContext.defaultParallelism
     corpus_stream = (
         spark.readStream.schema(
             "repo string, path string, commit string, lang string, content string"
@@ -44,7 +52,7 @@ def stream_corpus_mentions(
         mentions = tag_mentions(
             sentencize(with_sha256(batch_df)), weights_bc, neural_scale=neural_scale
         )
-        mentions.write.mode("append").parquet(out_dir)
+        mentions.coalesce(n_files).write.mode("append").parquet(out_dir)
 
     (
         corpus_stream.writeStream.foreachBatch(process)

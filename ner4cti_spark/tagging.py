@@ -2,8 +2,11 @@
 
 The engine's hot path (SURVEY §3.3 rebuild): broadcast weights once,
 lazy-init the kernel per executor process, tag whole Arrow batches,
-emit exploded mention rows (a UDTF-shaped mapInPandas). No per-row
-Python — each batch is one vectorized forward + one batched Viterbi.
+emit one row per sentence that has mentions, its spans as parallel
+arrays (`SENTENCE_SCHEMA`). No per-row Python — each batch is one
+vectorized forward + one batched Viterbi. `flatten_mentions` is the one
+flat view (`MENTION_SCHEMA`, one row per mention); `nest_mentions`
+regroups a flat table by sentence.
 
 Skew: giant repos are spread by salted repartition on
 (repo, pmod(hash(path), S)) before tagging, per SURVEY §4.2.
@@ -29,6 +32,17 @@ MENTION_SCHEMA = (
     "repo string, path string, commit string, sha256 string, sent_id long, "
     "begin int, end int, surface string, etype string, score float, "
     "canonical_hint string"
+)
+
+SENTENCE_KEY = ("repo", "path", "commit", "sha256", "sent_id")
+SPAN_COLUMNS = ("begin", "end", "surface", "etype", "canonical_hint")
+
+# the tag stage's output: one row per sentence with at least one mention,
+# its spans in begin order as parallel arrays
+SENTENCE_SCHEMA = (
+    "repo string, path string, commit string, sha256 string, sent_id long, "
+    "score float, begin array<int>, end array<int>, surface array<string>, "
+    "etype array<string>, canonical_hint array<string>"
 )
 
 
@@ -103,9 +117,9 @@ def salted_repartition(sentences: DataFrame, num_partitions: int, salt_buckets: 
     )
 
 
-def tag_mentions(sentences: DataFrame, weights_bc, neural_scale: float = 0.0,
-                 decode: str = "viterbi", sent_cache: bool = True) -> DataFrame:
-    """sentences → exploded mention rows (the UDTF shape, SURVEY §2.9).
+def tag_sentences(sentences: DataFrame, weights_bc, neural_scale: float = 0.0,
+                  decode: str = "viterbi", sent_cache: bool = True) -> DataFrame:
+    """sentences → one row per sentence with mentions (`SENTENCE_SCHEMA`).
 
     `score` is the sentence's decoded-path mean per-token Viterbi score
     over the lexicon potentials and the BIO transitions. neural_scale > 0
@@ -120,27 +134,54 @@ def tag_mentions(sentences: DataFrame, weights_bc, neural_scale: float = 0.0,
                 continue
             sents = [list(t) for t in pdf["tokens"]]
             tags, scores = kernel.tag(sents)
-            rows: dict[str, list] = {c: [] for c in (
-                "repo", "path", "commit", "sha256", "sent_id",
-                "begin", "end", "surface", "etype", "score", "canonical_hint")}
+            keep: list[int] = []
+            spans: dict[str, list] = {c: [] for c in SPAN_COLUMNS}
             for i, (toks, tg) in enumerate(zip(sents, tags)):
-                spans = extract_spans(toks, tg)
-                if not spans:
+                found = extract_spans(toks, tg)
+                if not found:
                     continue
-                for b, e, surface, etype in spans:
-                    rows["canonical_hint"].append(
-                        lookup_canonical(kernel.phrases, toks[b:e], etype)
-                    )
-                    rows["repo"].append(pdf["repo"].iat[i])
-                    rows["path"].append(pdf["path"].iat[i])
-                    rows["commit"].append(pdf["commit"].iat[i])
-                    rows["sha256"].append(pdf["sha256"].iat[i])
-                    rows["sent_id"].append(int(pdf["sent_id"].iat[i]))
-                    rows["begin"].append(b)
-                    rows["end"].append(e)
-                    rows["surface"].append(surface)
-                    rows["etype"].append(etype)
-                    rows["score"].append(float(scores[i]))
-            yield pd.DataFrame(rows)
+                keep.append(i)
+                # found is (begin, end, surface, etype) tuples: the first
+                # four span columns, transposed
+                for c, vals in zip(SPAN_COLUMNS, zip(*found)):
+                    spans[c].append(list(vals))
+                spans["canonical_hint"].append([
+                    lookup_canonical(kernel.phrases, toks[b:e], et) for b, e, _, et in found
+                ])
+            if not keep:  # Arrow cannot type an empty untyped list column
+                continue
+            out = pdf.iloc[keep][list(SENTENCE_KEY)].reset_index(drop=True)
+            out["score"] = [float(scores[i]) for i in keep]
+            for c in SPAN_COLUMNS:
+                out[c] = spans[c]
+            yield out
 
-    return sentences.mapInPandas(run, schema=MENTION_SCHEMA)
+    return sentences.mapInPandas(run, schema=SENTENCE_SCHEMA)
+
+
+def flatten_mentions(sentences: DataFrame) -> DataFrame:
+    """Sentence rows → one row per mention, in `MENTION_SCHEMA` order."""
+    return sentences.select(
+        *SENTENCE_KEY, "score", F.inline(F.arrays_zip(*SPAN_COLUMNS))
+    ).select(*SENTENCE_KEY, "begin", "end", "surface", "etype", "score", "canonical_hint")
+
+
+def nest_mentions(mentions: DataFrame) -> DataFrame:
+    """A flat mention table → one row per sentence key: `score` plus every
+    other non-key column as a begin-ordered array (a `MENTION_SCHEMA`
+    table gives `SENTENCE_SCHEMA`). One shuffle, keyed on the sentence."""
+    per = [c for c in mentions.columns if c not in SENTENCE_KEY and c != "score"]
+    return mentions.groupBy(*SENTENCE_KEY).agg(
+        F.max("score").alias("score"),
+        F.sort_array(F.collect_list(F.struct(*per))).alias("m"),
+    ).select(*SENTENCE_KEY, "score", *[F.col("m")[c].alias(c) for c in per])
+
+
+def tag_mentions(sentences: DataFrame, weights_bc, neural_scale: float = 0.0,
+                 decode: str = "viterbi", sent_cache: bool = True) -> DataFrame:
+    """sentences → exploded mention rows (the UDTF shape, SURVEY §2.9):
+    `flatten_mentions` over `tag_sentences`."""
+    return flatten_mentions(tag_sentences(
+        sentences, weights_bc, neural_scale=neural_scale, decode=decode,
+        sent_cache=sent_cache,
+    ))

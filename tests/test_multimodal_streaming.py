@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -66,6 +68,29 @@ def test_streaming_mentions_match_batch(spark, tmp_path):
     # restart with same checkpoint: no new input → no duplicates
     st.stream_corpus_mentions(spark, src, out, ckpt, bc)
     assert spark.read.parquet(out).count() == streamed.count()
+
+
+def test_streaming_sink_writes_bounded_files_per_batch(spark, tmp_path):
+    """A micro-batch whose backlog reads as more tasks than the default
+    parallelism writes at most default-parallelism mention files."""
+    from ner4cti_spark.corpus import generate_corpus
+    from ner4cti_spark.pipeline import PipelineConfig, broadcast_weights
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    generate_corpus(spark, n_docs=40).repartition(32).write.parquet(src)
+    bound = spark.sparkContext.defaultParallelism
+    # one read task per small file (the default packs them into about
+    # `bound` tasks)
+    spark.conf.set("spark.sql.files.minPartitionNum", "32")
+    try:
+        assert spark.read.parquet(src).rdd.getNumPartitions() > bound
+        bc = broadcast_weights(spark, PipelineConfig())
+        st.stream_corpus_mentions(spark, src, out, str(tmp_path / "ckpt"), bc)
+    finally:
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+    files = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert 1 <= len(files) <= bound, files
+    assert spark.read.parquet(out).count() > 0
 
 
 def test_windowed_event_counts_batch_semantics(spark):

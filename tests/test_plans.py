@@ -16,24 +16,46 @@ def plan_of(df) -> str:
     )
 
 
-def executed_shuffles(df) -> int:
-    """Run `df`, then count ShuffleExchangeExec nodes in its executed
-    physical plan — stepping through the adaptive wrapper and query
-    stages, whose subplans are not among their children."""
+def executed_nodes(df) -> list:
+    """Run `df`, then list the nodes of its executed physical plan —
+    stepping through the adaptive wrapper, query stages and cached
+    relations, whose subplans are not among their children."""
     df.collect()
+    out = []
 
-    def walk(node) -> int:
+    def walk(node) -> None:
+        out.append(node)
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
             kids = [node.executedPlan()]
         elif name.endswith("QueryStageExec"):
             kids = [node.plan()]
+        elif name == "InMemoryTableScanExec":
+            kids = [node.relation().cachedPlan()]
         else:
             ch = node.children()
             kids = [ch.apply(i) for i in range(ch.size())]
-        return (name == "ShuffleExchangeExec") + sum(walk(k) for k in kids)
+        for k in kids:
+            walk(k)
 
-    return walk(df._jdf.queryExecution().executedPlan())
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def executed_shuffles(df) -> int:
+    """Number of ShuffleExchangeExec nodes in `df`'s executed plan."""
+    return sum(n.getClass().getSimpleName() == "ShuffleExchangeExec"
+               for n in executed_nodes(df))
+
+
+def shuffle_keys(node) -> frozenset[str]:
+    """Names of the columns a ShuffleExchangeExec's partitioning reads."""
+    exprs = node.outputPartitioning().expressions()
+    names = set()
+    for i in range(exprs.size()):
+        refs = exprs.apply(i).references().toSeq()
+        names |= {refs.apply(j).name() for j in range(refs.size())}
+    return frozenset(names)
 
 
 def test_filter_pushdown_and_column_pruning(spark):
@@ -62,19 +84,27 @@ def test_vocab_agg_has_partial_aggregation(spark):
     assert "Exchange" in plan, plan
 
 
-def test_mention_alias_join_is_broadcast(spark):
-    """link_mentions must broadcast the vocabulary-sized alias table —
-    a sort-merge join here would shuffle the whole corpus."""
-    from ner4cti_spark import graph
+def test_pipeline_triples_have_no_sentence_shuffle_or_mention_join(spark):
+    """The in-memory pipeline's triples read the cached sentence rows,
+    whose mentions the tag stage already emitted together, and look
+    canonicals up in a broadcast dict: the executed plan has no join at
+    all and exactly two Exchanges — the salted repartition before
+    tagging and the final triple dedup — none keyed on the sentence."""
     from ner4cti_spark.corpus import generate_corpus
-    from ner4cti_spark.pipeline import PipelineConfig, extract_mentions, link_entities
+    from ner4cti_spark.pipeline import PipelineConfig, run_pipeline
+    from ner4cti_spark.tagging import SENTENCE_KEY
 
-    corpus = generate_corpus(spark, n_docs=30)
-    cfg = PipelineConfig(num_partitions=4)
-    mentions = extract_mentions(spark, corpus, cfg)
-    ents = link_entities(mentions, cfg)
-    plan = plan_of(graph.link_mentions(mentions, ents))
-    assert "BroadcastHashJoin" in plan, plan
+    out = run_pipeline(spark, generate_corpus(spark, n_docs=30), PipelineConfig(num_partitions=4))
+    nodes = executed_nodes(out["triples"])
+    names = [n.getClass().getSimpleName() for n in nodes]
+    assert "InMemoryTableScanExec" in names, names
+    assert not [n for n in names if "Join" in n], names
+    keys = sorted(sorted(shuffle_keys(n)) for n in nodes
+                  if n.getClass().getSimpleName() == "ShuffleExchangeExec")
+    assert not [k for k in keys if set(SENTENCE_KEY) <= set(k)], keys
+    assert keys == [["obj", "pred", "subj"], ["path", "repo", "sent_id"]], keys
+    for df in out.values():
+        df.unpersist()
 
 
 def test_whole_stage_codegen_in_relational_path(spark):

@@ -43,8 +43,8 @@ bc = broadcast_weights(spark, cfg)  # broadcast ONCE per job (north-star
 warm = generate_corpus(spark, n_docs=2000).localCheckpoint(eager=True)
 warm_out = run_pipeline(spark, warm, cfg, weights_bc=bc)
 warm_out["triples"].count()
-warm_out["mentions"].unpersist(blocking=True)
-warm_out["entities"].unpersist(blocking=True)
+for df in warm_out.values():
+    df.unpersist(blocking=True)
 
 # best-of-2 trials per measurement: single runs on this box vary up to
 # ~30% (page-cache state, frequency scaling); min-of-trials is the
@@ -56,8 +56,8 @@ for _trial in range(2):
     out = run_pipeline(spark, corpus, cfg, weights_bc=bc)
     n_triples = out["triples"].count()
     pipe_sec = min(pipe_sec, time.time() - t0)
-    out["mentions"].unpersist(blocking=True)
-    out["entities"].unpersist(blocking=True)
+    for df in out.values():
+        df.unpersist(blocking=True)
     t0 = time.time()
     n_mentions = extract_mentions(spark, corpus, cfg, weights_bc=bc).count()
     tag_sec = min(tag_sec, time.time() - t0)
