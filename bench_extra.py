@@ -106,7 +106,7 @@ def mode_stage(sf_dir: str) -> None:
     run_pipeline(spark, warm, cfg, weights_bc=weights_bc)["triples"].count()
     corpus = generate_corpus(spark, n_docs=n_docs).localCheckpoint(eager=True)
     for trial in range(N_TRIALS):
-        from ner4cti_spark.pipeline import extract_mentions, link_entities
+        from ner4cti_spark.pipeline import _link, extract_mentions
         from ner4cti_spark import graph
 
         t0 = time.time()
@@ -115,9 +115,7 @@ def mode_stage(sf_dir: str) -> None:
         n_m = mentions.count()
         t1 = time.time()
         spark.sparkContext.setJobDescription("stage: link")
-        stats: dict = {}
-        entities = link_entities(mentions, cfg, stats=stats)  # eager
-        n_alias = stats["n_surfaces"]
+        entities, n_alias, _ = _link(mentions, cfg)  # eager
         t2 = time.time()
         spark.sparkContext.setJobDescription("stage: triples")
         linked = graph.link_mentions(mentions, entities, alias_count=n_alias)

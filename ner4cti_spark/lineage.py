@@ -2,25 +2,30 @@
 
 north_rule: "resumable from checkpoint with per-partition lineage +
 metrics". Stage outputs are written partitioned by a repo bucket
-(pmod(xxhash64(repo), N) — the Iceberg `bucket(N, repo)` transform
-expressed portably); the `_lineage` table records, per completed
-(stage, bucket): row counts, repo ranges, and an order-insensitive
-content-sha256 digest (bit_xor of the leading 60 bits).
+(pmod(xxhash64(repo), N), the Iceberg `bucket(N, repo)` transform). The
+manifest `_lineage/manifest.parquet` holds a row per completed (stage,
+bucket): row count, repo and commit ranges, and an order-insensitive
+content digest (bit_xor of the sha256s' leading 60 bits). The driver
+commits it like Iceberg metadata: pyarrow writes a hidden temp file
+beside it, fsync, `os.replace`. (Inside `_lineage/`, because Spark
+ignores an explicitly named file whose name starts with `_`.)
 
-Resume model (matches where the cost lives at 10^12-file scale):
-- the TAG stage (model inference — the dominant cost) checkpoints
-  per-bucket; resume anti-joins input buckets against completed lineage
-  rows and reprocesses only the missing ones. Bucket → content is
-  deterministic, so reprocessing is idempotent.
-- linking/canonicalization/materialize are GLOBAL stages over the
-  vocabulary-sized mention surface table; they are cheap and recomputed
-  (mode=overwrite) from the mentions checkpoint, because entity
-  canonicalization is a function of the whole mention set — resuming it
-  per-bucket would change canonical choices.
+A bucket is complete for a stage iff the manifest has its row.
+`write_checkpoint` (1) reads the manifest, (2) removes the `bucket=`
+directories not recorded for the stage (overwrite: all), (3) writes the
+data, (4) aggregates the new buckets' rows from the files just written,
+(5) commits old ∪ new rows (overwrite: minus the stage's old rows). A
+crash before step 5's `os.replace` leaves the old manifest, (append)
+the recorded buckets' files intact, and unrecorded files, which the
+next run's step 2 removes even when its input lacks their repos; a
+crash after it leaves the new manifest. Overwrite stages rerun in
+full every time, so their rows are never a resume key.
 
-In production these are Iceberg tables (snapshot isolation,
-rewrite-per-partition); here the same layout is parquet directories —
-bucketing, lineage and anti-join resume logic are identical.
+Resume: the TAG stage (model inference, the dominant cost) appends per
+bucket; a rerun drops the recorded buckets before any model compute
+(`filter_resumable`). Linking, canonicalization and materialize are
+cheap global functions of the whole mention set, recomputed with
+overwrite. Iceberg tables in production; parquet directories here.
 """
 
 from __future__ import annotations
@@ -28,10 +33,21 @@ from __future__ import annotations
 import os
 import shutil
 
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 N_BUCKETS = 64
+MANIFEST = os.path.join("_lineage", "manifest.parquet")
+MANIFEST_SCHEMA = pa.schema([
+    ("stage", pa.string()), ("partition_key", pa.string()),
+    ("repo_min", pa.string()), ("repo_max", pa.string()),
+    ("commit_min", pa.string()), ("commit_max", pa.string()),
+    ("row_count", pa.int64()), ("content_sha256_xor", pa.string()),
+    ("completed_at", pa.timestamp("us", tz="UTC")),
+])
 
 
 def with_bucket(df: DataFrame, col: str = "repo", n_buckets: int = N_BUCKETS) -> DataFrame:
@@ -40,11 +56,13 @@ def with_bucket(df: DataFrame, col: str = "repo", n_buckets: int = N_BUCKETS) ->
 
 def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
     """Aggregate per-bucket lineage from a bucketed DataFrame (must carry
-    repo + sha256 + bucket columns)."""
+    repo + commit + sha256 + bucket columns). min/max skip null commits."""
     return df.groupBy("bucket").agg(
         F.lit(stage).alias("stage"),
         F.min("repo").alias("repo_min"),
         F.max("repo").alias("repo_max"),
+        F.min("commit").alias("commit_min"),
+        F.max("commit").alias("commit_max"),
         F.count(F.lit(1)).alias("row_count"),
         F.format_string(
             "%015x",
@@ -52,10 +70,10 @@ def lineage_rows(df: DataFrame, stage: str) -> DataFrame:
             # triple); xor over duplicates would cancel even-count hashes
             F.expr("bit_xor(DISTINCT cast(conv(substring(sha256, 1, 15), 16, 10) as bigint))"),
         ).alias("content_sha256_xor"),
-        F.current_timestamp().alias("completed_at"),
     ).select(
         "stage", F.col("bucket").cast("string").alias("partition_key"),
-        "repo_min", "repo_max", "row_count", "content_sha256_xor", "completed_at",
+        "repo_min", "repo_max", "commit_min", "commit_max", "row_count",
+        "content_sha256_xor",
     )
 
 
@@ -66,78 +84,81 @@ def read_checkpoint(spark: SparkSession, out_dir: str, table: str,
     subdirectory (only `_SUCCESS`), from which parquet cannot infer a
     schema: such a table reads as an empty frame of `schema`."""
     path = os.path.join(out_dir, table)
-    if not (os.path.isdir(path)
-            and any(n.startswith("bucket=") for n in os.listdir(path))):
+    if not _bucket_keys(path):
         return spark.createDataFrame([], schema)
     return spark.read.parquet(path).drop("bucket")
 
 
-def _lineage_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_lineage")
+def read_manifest(out_dir: str) -> pd.DataFrame:
+    """The committed lineage rows; none before the first commit."""
+    path = os.path.join(out_dir, MANIFEST)
+    table = pq.read_table(path) if os.path.exists(path) else MANIFEST_SCHEMA.empty_table()
+    return table.to_pandas()
+
+
+def commit(out_dir: str, rows: pd.DataFrame) -> None:
+    """Atomically replace the manifest with `rows`."""
+    folder = os.path.join(out_dir, "_lineage")
+    os.makedirs(folder, exist_ok=True)
+    tmp = os.path.join(folder, ".manifest.parquet.tmp")
+    with open(tmp, "wb") as f:
+        pq.write_table(pa.Table.from_pandas(rows, schema=MANIFEST_SCHEMA, preserve_index=False), f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, os.path.join(out_dir, MANIFEST))
+    fd = os.open(folder, os.O_RDONLY)  # make the rename durable
+    os.fsync(fd)
+    os.close(fd)
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = _lineage_path(out_dir)
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
+    path = os.path.join(out_dir, MANIFEST)
+    return spark.read.parquet(path) if os.path.exists(path) else None
 
 
-def completed_buckets(spark: SparkSession, out_dir: str, stage: str) -> DataFrame | None:
-    lin = read_lineage(spark, out_dir)
-    if lin is None:
-        return None
-    return (
-        lin.filter(F.col("stage") == stage)
-        .select(F.col("partition_key").cast("int").alias("bucket"))
-        .distinct()
-    )
+def _done(out_dir: str, stage: str) -> set[str]:
+    manifest = read_manifest(out_dir)
+    return set(manifest.loc[manifest["stage"] == stage, "partition_key"])
 
 
-def filter_resumable(spark: SparkSession, bucketed_input: DataFrame, out_dir: str,
-                     stage: str) -> DataFrame:
-    """Drop buckets already recorded complete for `stage` (left_anti)."""
-    done = completed_buckets(spark, out_dir, stage)
-    if done is None:
-        return bucketed_input
-    return bucketed_input.join(F.broadcast(done), "bucket", "left_anti")
+def completed_buckets(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
+    return spark.createDataFrame([(int(k),) for k in _done(out_dir, stage)], "bucket int")
 
 
-def _append_lineage(spark: SparkSession, out_dir: str, rows: DataFrame,
-                    replace_stage: str | None = None) -> None:
-    path = _lineage_path(out_dir)
-    if replace_stage is not None and os.path.exists(path):
-        existing = spark.read.parquet(path).filter(F.col("stage") != replace_stage)
-        merged = existing.unionByName(rows)
-        tmp = path + ".tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp).localCheckpoint(eager=True)
-        shutil.rmtree(path)
-        final.coalesce(1).write.mode("overwrite").parquet(path)
-        shutil.rmtree(tmp)
-    else:
-        rows.write.mode("append").parquet(path)
+def filter_resumable(df: DataFrame, out_dir: str, stage: str) -> DataFrame:
+    """Drop the rows of the repo buckets recorded complete for `stage`."""
+    done = [int(k) for k in _done(out_dir, stage)]
+    return with_bucket(df).filter(~F.col("bucket").isin(done)).drop("bucket") if done else df
+
+
+def _bucket_keys(table_path: str) -> set[str]:
+    if not os.path.isdir(table_path):
+        return set()
+    return {n[len("bucket="):] for n in os.listdir(table_path) if n.startswith("bucket=")}
+
+
+def _clear(table_path: str, keep: set[str]) -> None:
+    for key in _bucket_keys(table_path) - keep:
+        shutil.rmtree(os.path.join(table_path, f"bucket={key}"))
 
 
 def write_checkpoint(spark: SparkSession, df: DataFrame, out_dir: str, table: str,
                      stage: str, mode: str = "append") -> None:
-    """Write bucketed parquet + lineage. Data first, lineage last: a crash
-    between the two re-does the bucket on resume. To keep the re-do
-    idempotent in append mode, the bucket's directory (possibly holding
-    partial files from the crashed attempt) is cleared before rewriting —
-    the parquet analog of Iceberg's overwrite-by-partition commit."""
-    bucketed = df if "bucket" in df.columns else with_bucket(df)
+    """Write bucketed parquet, then commit its lineage (steps in the
+    module docstring). append keeps the buckets recorded for `stage` and
+    adds `df`, which must hold none of them (`filter_resumable`);
+    overwrite replaces the table and the stage's rows."""
+    rows = read_manifest(out_dir)
+    done = _done(out_dir, stage) if mode == "append" else set()
+    if mode == "overwrite":
+        rows = rows[rows["stage"] != stage]
     table_path = os.path.join(out_dir, table)
-    if mode == "append" and os.path.exists(table_path):
-        # checkpoint first so the distinct-buckets probe and the write share
-        # one computation (cluster deployment: sparkContext.setCheckpointDir
-        # + .checkpoint() instead of localCheckpoint)
-        bucketed = bucketed.localCheckpoint(eager=False)
-        todo = [r["bucket"] for r in bucketed.select("bucket").distinct().collect()]
-        for b in todo:
-            shutil.rmtree(os.path.join(table_path, f"bucket={b}"), ignore_errors=True)
-    bucketed.write.mode(mode).partitionBy("bucket").parquet(table_path)
-    _append_lineage(
-        spark, out_dir, lineage_rows(bucketed, stage),
-        replace_stage=stage if mode == "overwrite" else None,
-    )
+    _clear(table_path, keep=done)
+    with_bucket(df).write.mode(mode).partitionBy("bucket").parquet(table_path)
+    new = [int(k) for k in _bucket_keys(table_path) - done]
+    if new:
+        written = spark.read.parquet(table_path).filter(F.col("bucket").isin(new))
+        added = lineage_rows(written, stage).toPandas()
+        added["completed_at"] = pd.Timestamp.now(tz="UTC")
+        rows = pd.concat([rows, added], ignore_index=True)
+    commit(out_dir, rows)

@@ -60,23 +60,17 @@ def broadcast_weights(spark: SparkSession, cfg: PipelineConfig):
 
 
 def extract_mentions(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
-                     weights_bc=None, out_dir: str | None = None) -> DataFrame:
-    """Sentencize + tag → one row per mention (`MENTION_SCHEMA`). With
-    out_dir: resume-aware — buckets already in the tag-stage lineage are
-    skipped BEFORE any model compute runs."""
-    return flatten_mentions(extract_sentences(spark, corpus, cfg, weights_bc, out_dir))
+                     weights_bc=None) -> DataFrame:
+    """Sentencize + tag → one row per mention (`MENTION_SCHEMA`)."""
+    return flatten_mentions(extract_sentences(spark, corpus, cfg, weights_bc))
 
 
 def extract_sentences(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfig,
-                      weights_bc=None, out_dir: str | None = None) -> DataFrame:
+                      weights_bc=None) -> DataFrame:
     """Sentencize + tag → one row per sentence with mentions
-    (`tagging.SENTENCE_SCHEMA`); `out_dir` as in `extract_mentions`."""
+    (`tagging.SENTENCE_SCHEMA`)."""
     bc = weights_bc or broadcast_weights(spark, cfg)
     sents = sentencize(with_sha256(corpus))
-    if out_dir is not None:
-        sents = lineage.filter_resumable(
-            spark, lineage.with_bucket(sents), out_dir, stage="tag"
-        )
     # 1× defaultParallelism, not 2× (r6): the tag kernel is a
     # mapInPandas whose per-task cost amortizes over batch size — at
     # 2× the salted repartition halves every Arrow batch for no skew
@@ -88,7 +82,7 @@ def extract_sentences(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfi
     n_part = cfg.num_partitions or spark.sparkContext.defaultParallelism
     sents = salted_repartition(sents, n_part, cfg.salt_buckets)
     return tag_sentences(
-        sents.drop("bucket"), bc, neural_scale=cfg.neural_scale, decode=cfg.decode,
+        sents, bc, neural_scale=cfg.neural_scale, decode=cfg.decode,
         sent_cache=cfg.sent_cache,
     )
 
@@ -97,7 +91,7 @@ DRIVER_FUZZY_SURFACES = 100_000
 """Driver linking path cap on distinct fuzzy-etype surfaces (named
 entities, the only ones MinHash touches).
 
-Measured on 4 CPUs (local[4], warm JVM), `_link_entities(...)` + count
+Measured on 4 CPUs (local[4], warm JVM), `_link(...)` + count
 over synthetic vocabularies of distinct 3-word names built from 16
 syllables — a collision-heavy alphabet, so band buckets are large and
 candidate pairs grow faster than the vocabulary:
@@ -114,27 +108,14 @@ parallel: at 100k it ties the driver with ~5.6× these 4 CPUs.
 """
 
 
-def link_entities(mentions: DataFrame, cfg: PipelineConfig,
-                  stats: dict | None = None) -> DataFrame:
+def link_entities(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Edges = exact-normalized equality (all etypes) ∪ knowledge hints ∪
     MinHash-LSH fuzzy pairs (named etypes only — indicators/CVEs are
     identities) → alias table (entity_id, canonical, etype, alias).
 
     Eager: the stage runs when called — one Spark job below the driver
-    gate (see `_link_entities`) — and returns a frame whose row count is
-    known. With a `stats` dict, stats["n_surfaces"] is that count: one
-    row per distinct mention surface plus hint bridge nodes, the number
-    link_mentions' broadcast decision needs."""
-    entities, n_aliases, _ = _link(mentions, cfg)
-    if stats is not None:
-        stats["n_surfaces"] = n_aliases
-    return entities
-
-
-def _link_entities(mentions: DataFrame, cfg: PipelineConfig,
-                   driver_threshold: int = DRIVER_THRESHOLD) -> tuple[DataFrame, int]:
-    """→ (alias table, its row count); see `_link`."""
-    return _link(mentions, cfg, driver_threshold)[:2]
+    gate (see `_link`, which also returns the table's row count)."""
+    return _link(mentions, cfg)[0]
 
 
 def _link(mentions: DataFrame, cfg: PipelineConfig,
@@ -265,8 +246,8 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
     are written; in memory it lives as long as the lazy triples' plan."""
     cfg = cfg or PipelineConfig()
     if out_dir is not None:
-        new_mentions = extract_mentions(spark, corpus, cfg, weights_bc=weights_bc,
-                                        out_dir=out_dir)
+        todo = lineage.filter_resumable(corpus, out_dir, stage="tag")
+        new_mentions = extract_mentions(spark, todo, cfg, weights_bc=weights_bc)
         lineage.write_checkpoint(
             spark, new_mentions, out_dir, table="mentions", stage="tag", mode="append"
         )

@@ -3,7 +3,7 @@
 Mirrors the reference's implicit data model (SURVEY.md §1) with explicit
 Spark SQL types: corpus rows (BASELINE input_hint), sentences
 (data_utils.py:24-27 token lists), mentions (exploded tagger output),
-entities/aliases, triples, and lineage rows.
+entities/aliases and triples. Lineage rows: `lineage.MANIFEST_SCHEMA`.
 """
 
 from __future__ import annotations
@@ -68,17 +68,5 @@ TRIPLES = T.StructType(
         T.StructField("repo", T.StringType(), True),
         T.StructField("commit", T.StringType(), True),
         T.StructField("sha256", T.StringType(), True),
-    ]
-)
-
-LINEAGE = T.StructType(
-    [
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("repo_min", T.StringType(), True),
-        T.StructField("repo_max", T.StringType(), True),
-        T.StructField("row_count", T.LongType(), False),
-        T.StructField("content_sha256_xor", T.StringType(), True),
-        T.StructField("completed_at", T.TimestampType(), False),
     ]
 )

@@ -12,10 +12,9 @@ import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from graph_reference import reference_triples
-from ner4cti_spark import graph
+from ner4cti_spark import graph, lineage
 from ner4cti_spark.corpus import generate_corpus
 from ner4cti_spark.linking.components import ENTITY_SCHEMA
 from ner4cti_spark.pipeline import (
@@ -222,16 +221,11 @@ def test_checkpointed_resume_matches_in_memory(spark, in_memory, tmp_path):
     run_pipeline(spark, corpus, cfg, out_dir=out_dir)
     assert spo(spark.read.parquet(f"{out_dir}/triples")) == want
 
-    lin = spark.read.parquet(f"{out_dir}/_lineage")
-    victims = [r["partition_key"] for r in
-               lin.filter("stage = 'tag'").select("partition_key").limit(3).collect()]
-    keep = lin.filter(
-        ~((F.col("stage") == "tag") & F.col("partition_key").isin(victims))
-    ).localCheckpoint(eager=True)
+    lin = lineage.read_manifest(out_dir)
+    victims = list(lin.loc[lin["stage"] == "tag", "partition_key"])[:3]
     for pk in victims:
         shutil.rmtree(f"{out_dir}/mentions/bucket={pk}")
-    shutil.rmtree(f"{out_dir}/_lineage")
-    keep.write.mode("overwrite").parquet(f"{out_dir}/_lineage")
+    lineage.commit(out_dir, lin[~((lin["stage"] == "tag") & lin["partition_key"].isin(victims))])
 
     out = run_pipeline(spark, corpus, cfg, out_dir=out_dir)
     assert spo(out["triples"]) == want

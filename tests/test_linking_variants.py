@@ -161,12 +161,12 @@ def test_driver_and_sql_linking_agree(spark, vocab):
     union-find, pandas canonical pick) and the distributed path it
     replaces below the gate (driver_threshold=0) give set-identical
     alias tables, entity_id included."""
-    from ner4cti_spark.pipeline import PipelineConfig, _link_entities
+    from ner4cti_spark.pipeline import PipelineConfig, _link
 
     mentions = _mentions(spark, vocab)
     cfg = PipelineConfig()
-    local, n_local = _link_entities(mentions, cfg)
-    sql, n_sql = _link_entities(mentions, cfg, driver_threshold=0)
+    local, n_local, _ = _link(mentions, cfg)
+    sql, n_sql, _ = _link(mentions, cfg, driver_threshold=0)
     try:
         a, b = _alias_table(local), _alias_table(sql)
     finally:
@@ -179,13 +179,13 @@ def test_driver_link_singletons_have_hashed_ids(spark):
     """No fuzzy surface and no hint: every surface is its own entity,
     entity_id = xxhash64(etype, normalized surface) as Spark computes it."""
     from ner4cti_spark.linking.minhash_lsh import normalize_surface
-    from ner4cti_spark.pipeline import PipelineConfig, _link_entities
+    from ner4cti_spark.pipeline import PipelineConfig, _link
 
     mentions = _mentions(spark, [
         ("cve", "CVE-2014-1111", None, 2), ("cve", "CVE-2014-1112", None, 1),
         ("indicator", "10.0.0.1", None, 1), ("indicator", "10.0.0.2", None, 3),
     ])
-    entities, n = _link_entities(mentions, PipelineConfig())
+    entities, n, _ = _link(mentions, PipelineConfig())
     got = {(r["etype"], r["alias"]): (r["entity_id"], r["canonical"])
            for r in entities.collect()}
     want = {
@@ -202,13 +202,13 @@ def test_driver_link_merges_hint_chain(spark):
     """Hints a→b and b→c put a, b and the never-observed c in one
     entity; c is a freq-0 bridge node, so an observed surface is the
     canonical."""
-    from ner4cti_spark.pipeline import PipelineConfig, _link_entities
+    from ner4cti_spark.pipeline import PipelineConfig, _link
 
     mentions = _mentions(spark, [
         ("threat-actor", "Zirconium", "Nobelium", 1),
         ("threat-actor", "Nobelium", "Yttrium", 2),
     ])
-    rows = _link_entities(mentions, PipelineConfig())[0].collect()
+    rows = _link(mentions, PipelineConfig())[0].collect()
     assert {r["alias"] for r in rows} == {"Zirconium", "Nobelium", "Yttrium"}
     assert len({r["entity_id"] for r in rows}) == 1
     assert {r["canonical"] for r in rows} == {"Nobelium"}
@@ -218,13 +218,13 @@ def test_driver_link_exact_normalized_aliases_share_a_node(spark):
     """'APT 28'/'APT-28'/'apt28' normalize alike: one node id, so one
     entity, with no MinHash pair between them."""
     from ner4cti_spark.linking.minhash_lsh import candidate_pairs_local
-    from ner4cti_spark.pipeline import PipelineConfig, _link_entities
+    from ner4cti_spark.pipeline import PipelineConfig, _link
 
     mentions = _mentions(spark, [
         ("threat-actor", "APT 28", None, 1), ("threat-actor", "APT-28", None, 3),
         ("threat-actor", "apt28", None, 1),
     ])
-    rows = _link_entities(mentions, PipelineConfig())[0].collect()
+    rows = _link(mentions, PipelineConfig())[0].collect()
     assert len({r["entity_id"] for r in rows}) == 1 and len(rows) == 3
     assert {r["canonical"] for r in rows} == {"APT-28"}
     assert candidate_pairs_local([("threat-actor", "apt28")]) == []

@@ -163,7 +163,7 @@ def test_run_pipeline_leaves_no_persisted_rdd(spark):
     not counts: the context cleaner may drop RDDs of earlier tests
     meanwhile. The corpus is one no other test caches, because
     unpersisting a frame frees every cached frame of equal plan."""
-    from ner4cti_spark.pipeline import _link_entities
+    from ner4cti_spark.pipeline import _link
 
     def persistent_ids():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
@@ -171,7 +171,7 @@ def test_run_pipeline_leaves_no_persisted_rdd(spark):
     before = persistent_ids()
     out = run_pipeline(spark, generate_corpus(spark, n_docs=17))
     out["triples"].count()
-    sql_entities, _ = _link_entities(out["mentions"], PipelineConfig(), driver_threshold=0)
+    sql_entities, _, _ = _link(out["mentions"], PipelineConfig(), driver_threshold=0)
     assert persistent_ids() - before, "the SQL path persists its alias table"
     sql_entities.unpersist()
     for df in out.values():
