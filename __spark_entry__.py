@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ner4cti_spark import dataprep_queries as D
 from ner4cti_spark import entry_queries as Q
+from ner4cti_spark.session import corpus_cached, ship_package
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -31,24 +32,16 @@ def _cti_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return entity_pagerank(triples, n_iter=8)
 
 
-# One pipeline run shared across the four cti_* registry entries, keyed
-# by Spark appId (same discipline as dataprep_queries._SHINGLE_CACHE):
-# without it each entry re-runs the full tag→link→canonicalize pipeline
-# and the driver's correctness budget drops all four rows.
-_PIPELINE_CACHE: dict[str, dict[str, DataFrame]] = {}
-
-
+# One pipeline run per Spark app, shared across the four cti_* registry
+# entries: without it each entry re-runs the full tag→link→canonicalize
+# pipeline and the driver's correctness budget drops all four rows.
+@corpus_cached
 def _pipeline_out(spark: SparkSession) -> dict[str, DataFrame]:
     from ner4cti_spark.corpus import generate_corpus
     from ner4cti_spark.pipeline import run_pipeline
-    from ner4cti_spark.session import ship_package
 
-    key = spark.sparkContext.applicationId
-    if key not in _PIPELINE_CACHE:
-        ship_package(spark)
-        _PIPELINE_CACHE.clear()  # a new app invalidates old DataFrames
-        _PIPELINE_CACHE[key] = run_pipeline(spark, generate_corpus(spark, n_docs=150))
-    return _PIPELINE_CACHE[key]
+    ship_package(spark)
+    return run_pipeline(spark, generate_corpus(spark, n_docs=150))
 
 
 def _cti_query(which: str) -> Callable[[SparkSession, str], DataFrame]:
@@ -80,7 +73,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "pos_skipgram_pairs": (Q.q_pos_skipgram_pairs, Q.SQL_POS_SKIPGRAM_PAIRS),
     "span_extract": (Q.q_span_extract_sql, Q.SQL_SPAN_EXTRACT),
     # CTI pipeline (model kernels — non-SQL-expressible, rows-only
-    # checks; one run_pipeline shared via _PIPELINE_CACHE) + the two
+    # checks; one run_pipeline per app shared via _pipeline_out) + the two
     # reference-corpus evals + multimodal features. Ordered INSIDE the
     # first 50 registry positions: the driver's correctness artifact
     # records exactly the first 50 entries (observed r2-r5 — always

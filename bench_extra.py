@@ -106,29 +106,36 @@ def mode_stage(sf_dir: str) -> None:
     run_pipeline(spark, warm, cfg, weights_bc=weights_bc)["triples"].count()
     corpus = generate_corpus(spark, n_docs=n_docs).localCheckpoint(eager=True)
     for trial in range(N_TRIALS):
-        from ner4cti_spark.pipeline import _link, extract_mentions
+        from ner4cti_spark.pipeline import _link, extract_sentences
+        from ner4cti_spark.tagging import flatten_mentions
         from ner4cti_spark import graph
 
+        # the stages run_pipeline runs in memory: cached sentence rows,
+        # linking over their flat view, one-pass triple emission
         t0 = time.time()
         spark.sparkContext.setJobDescription("stage: tag")
-        mentions = extract_mentions(spark, corpus, cfg, weights_bc=weights_bc).cache()
+        sentences = extract_sentences(spark, corpus, cfg, weights_bc=weights_bc).cache()
+        mentions = flatten_mentions(sentences)
         n_m = mentions.count()
         t1 = time.time()
         spark.sparkContext.setJobDescription("stage: link")
-        entities, n_alias, _ = _link(mentions, cfg)  # eager
+        entities, n_alias, aliases = _link(mentions, cfg)  # eager
         t2 = time.time()
         spark.sparkContext.setJobDescription("stage: triples")
-        linked = graph.link_mentions(mentions, entities, alias_count=n_alias)
-        triples = graph.build_triples(linked, entities)
+        triples, aliases_bc = graph.sentence_triples(
+            sentences, entities, alias_count=n_alias, aliases=aliases
+        )
         n_t = triples.count()
         t3 = time.time()
+        if aliases_bc is not None:
+            aliases_bc.destroy()
         print(json.dumps({
             "trial": trial, "tag_s": round(t1 - t0, 3),
             "link_s": round(t2 - t1, 3), "triples_s": round(t3 - t2, 3),
             "total_s": round(t3 - t0, 3),
             "n_mentions": n_m, "n_triples": n_t,
         }), flush=True)
-        mentions.unpersist(blocking=False)
+        sentences.unpersist(blocking=False)
         entities.unpersist(blocking=False)
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .entry_queries import load
+from .session import corpus_cached
 
 # ---------------------------------------------------------------- shingles
 
@@ -35,29 +36,22 @@ _WORD_SHINGLES_SQL = """
 """
 
 
-# module-level handle: one persisted (doc_id, shs) DataFrame per
-# (spark app, sf_dir, n). Persisting per query CALL leaked cache entries
-# across a long session (each call registered a fresh RDD until LRU
-# eviction); the shared handle means repeated dedup queries over the same
-# corpus reuse one cached scan and the persistent-RDD count stays flat.
-_SHINGLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
+_SHINGLE_WORDS = 5  # word n-gram length of every dedup query's shingles
 
 
-def _doc_shingle_arrays(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFrame:
-    """(doc_id, shs array<string>): distinct word n-gram shingles (n=5)
-    per document, as ONE array column — the single-corpus-scan shape,
-    persisted once per corpus (see _SHINGLE_CACHE). Dedup queries derive
-    both the minhash signatures (via explode) and the exact-Jaccard
-    rescore (via array_intersect on the carried arrays) from the same
-    cached scan."""
-    key = (spark.sparkContext.applicationId, sf_dir, n)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        return hit
+@corpus_cached
+def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shs array<string>): distinct word n-gram shingles
+    (n = _SHINGLE_WORDS) per document, as ONE array column — the
+    single-corpus-scan shape, persisted once per corpus (corpus_cached).
+    Dedup queries derive both the minhash signatures (via explode) and
+    the exact-Jaccard rescore (via array_intersect on the carried arrays)
+    from the same cached scan."""
+    n = _SHINGLE_WORDS
     docs = load(spark, sf_dir, "documents")
     ws = F.filter(F.split("text", r"\s+"), lambda x: x != "")
     idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - n, F.lit(0)))
-    out = (
+    return (
         docs
         # small-file parquet arrives as ONE partition, and the shingle
         # transform is interpreted higher-order-function work — spread
@@ -74,21 +68,11 @@ def _doc_shingle_arrays(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFra
         )
         .persist()
     )
-    # at most one corpus cached at a time: evict (and free) other
-    # shingle entries (simhash entries use n == -1 and evict separately)
-    for old_key, old_df in list(_SHINGLE_CACHE.items()):
-        if old_key[2] == -1:
-            continue
-        if old_key[0] == key[0]:  # same Spark app — safe to unpersist
-            old_df.unpersist(blocking=False)
-        del _SHINGLE_CACHE[old_key]
-    _SHINGLE_CACHE[key] = out
-    return out
 
 
-def _word_shingles(spark: SparkSession, sf_dir: str, n: int = 5) -> DataFrame:
+def _word_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh): exploded distinct word n-gram shingles."""
-    return _doc_shingle_arrays(spark, sf_dir, n).select(
+    return _doc_shingle_arrays(spark, sf_dir).select(
         "doc_id", F.explode("shs").alias("sh")
     )
 
@@ -172,7 +156,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen, see linking/minhash_lsh.py), and the exact-Jaccard rescore
     joins the carried arrays with array_intersect — no shingle-level
     inverted-index shuffle."""
-    sh_arr = _doc_shingle_arrays(spark, sf_dir)  # persisted (module cache)
+    sh_arr = _doc_shingle_arrays(spark, sf_dir)  # persisted (corpus_cached)
     sh = sh_arr.select("doc_id", F.explode("shs").alias("sh"))
     mh = sh.groupBy("doc_id").agg(
         *[
@@ -253,19 +237,13 @@ SQL_DEDUP_MINHASH = _minhash_sql()
 _SIMHASH_BITS = 16
 
 
+@corpus_cached
 def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Persisted (doc_id, simhash) signature table, one per corpus —
-    module-handle cached (key n == -1 in _SHINGLE_CACHE) so the
-    corpus-scan + 16-way bit-sum aggregation runs ONCE per corpus and
-    BOTH simhash queries (signatures + the banded near-dup detector)
-    and both sides of the detector's band self-join read the cache.
-    r6: previously the cache was populated only inside
-    q_simhash_neardup, so a dedup_simhash → simhash_neardup sequence
-    computed the signature aggregation twice."""
-    key = (spark.sparkContext.applicationId, sf_dir, -1)
-    sim = _SHINGLE_CACHE.get(key)
-    if sim is not None:
-        return sim
+    """Persisted (doc_id, simhash) signature table, one per corpus
+    (corpus_cached), so the corpus-scan + 16-way bit-sum aggregation
+    runs ONCE per corpus and BOTH simhash queries (signatures + the
+    banded near-dup detector) and both sides of the detector's band
+    self-join read the cache."""
     toks = (
         load(spark, sf_dir, "documents")
         .select("doc_id", F.explode(F.split("text", r"\s+")).alias("word"))
@@ -283,14 +261,7 @@ def _simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in range(_SIMHASH_BITS):
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
         sig = term if sig is None else sig + term
-    out = bit_sums.select("doc_id", sig.cast("long").alias("simhash")).persist()
-    for old_key, old_df in list(_SHINGLE_CACHE.items()):
-        if old_key[2] == -1:  # evict only simhash entries
-            if old_key[0] == key[0]:
-                old_df.unpersist(blocking=False)
-            del _SHINGLE_CACHE[old_key]
-    _SHINGLE_CACHE[key] = out
-    return out
+    return bit_sums.select("doc_id", sig.cast("long").alias("simhash")).persist()
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,7 +311,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_count(xor) ≤ 3. Candidate space is the band-bucket collision set
     — never O(n²) — and at corpus scale each of the 4 band joins is an
     ordinary shuffle on a 4-bit-×-band key."""
-    sim = _simhash_sigs(spark, sf_dir)  # persisted, shared module cache
+    sim = _simhash_sigs(spark, sf_dir)  # persisted (corpus_cached)
     band_structs = F.array(*[
         F.struct(
             F.lit(b).alias("band"),
@@ -416,7 +387,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2) the Jaccard itself is re-scored exactly on the carried shingle
     arrays (array_intersect), so the cuts affect candidate RECALL only,
     never a reported score."""
-    sh_arr = _doc_shingle_arrays(spark, sf_dir)  # persisted (module cache)
+    sh_arr = _doc_shingle_arrays(spark, sf_dir)  # persisted (corpus_cached)
     sh = sh_arr.select("doc_id", F.explode("shs").alias("sh"))
     dfreq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     sh_df = sh.join(dfreq, "sh")
@@ -1203,21 +1174,12 @@ def _ivf_assign(emb: DataFrame, cents: list) -> DataFrame:
     )
 
 
-# one cached (vec_id, e) scan per corpus, shared by the Lloyd fit's
-# per-iteration reads AND the final search — same module-handle
-# discipline as _SHINGLE_CACHE (no per-call persist leak; repeated
-# embedding_ivf calls keep the persistent-RDD count flat, regression-
-# tested in tests/test_dataprep_cache.py)
-_IVF_EMB_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_cached
 def _ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _IVF_EMB_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """One cached (vec_id, e, ne) scan per corpus (corpus_cached), shared
+    by the Lloyd fit's per-iteration reads AND the final search."""
     e = F.col("embedding").cast("array<double>")
-    out = (
+    return (
         load(spark, sf_dir, "embeddings")
         .select(
             "vec_id", e.alias("e"),
@@ -1237,12 +1199,6 @@ def _ivf_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(max(4, spark.sparkContext.defaultParallelism // 2), "vec_id")
         .persist()
     )
-    for old_key, old_df in list(_IVF_EMB_CACHE.items()):
-        if old_key[0] == key[0]:
-            old_df.unpersist(blocking=False)
-        del _IVF_EMB_CACHE[old_key]
-    _IVF_EMB_CACHE[key] = out
-    return out
 
 
 def _ivf_fit_centroids(spark: SparkSession, emb: DataFrame, c: int) -> list:
@@ -1257,7 +1213,7 @@ def _ivf_fit_centroids(spark: SparkSession, emb: DataFrame, c: int) -> list:
     distributed). Means are rounded to 1e-6 so the DuckDB oracle —
     whose aggregation order differs — reproduces the centroids
     bit-for-bit. Empty cells keep their previous centroid. emb is the
-    module-cached scan (_ivf_embeddings) — the fit's per-iteration
+    corpus_cached scan (_ivf_embeddings) — the fit's per-iteration
     reads and the final search share one persisted copy. Returns the
     fitted [(cent_id, vector), ...] list (centroids are driver-side
     state throughout; callers build whatever table/closure they need)."""

@@ -105,6 +105,10 @@ class TaggerKernel:
         """(B,T,L) log-potentials from longest-match gazetteer + indicator
         patterns. The high-precision branch (stands in for M7)."""
         lab, o = self.ls.label2id, self.ls.o_id
+        # same bound as _feat_cache: near-unique indicator tokens (hashes,
+        # IPs) would otherwise grow the memo with the corpus
+        if len(self._class_cache) > self.FEAT_CACHE_MAX:
+            self._class_cache.clear()
         em = np.full((len(sents), T, self.ls.n), LEX_OTHER, dtype=np.float32)
         em[:, :, o] = LEX_O
         for b, sent in enumerate(sents):
@@ -267,9 +271,10 @@ class TaggerKernel:
     #              bandwidth-bound when many workers run per box
     #              (measured best under 16-32-worker concurrency)
 
-    FEAT_CACHE_MAX = 500_000  # bound on _feat_cache entries before a full
-    #              clear — per-executor-task memory cap for the fused
-    #              feature rows (98-dim float32 ≈ 400 B each → ~200 MB)
+    FEAT_CACHE_MAX = 500_000  # bound on _feat_cache (and _class_cache)
+    #              entries before a full clear — per-executor-task memory
+    #              cap for the fused feature rows (98-dim float32 ≈ 400 B
+    #              each → ~200 MB)
 
     def tag(self, sents: list[list[str]]) -> tuple[list[list[str]], np.ndarray]:
         """Batch decode → (BIO tag lists aligned 1:1 with tokens, scores).

@@ -15,8 +15,6 @@ Implementations:
   minhashes joined by '|'), shingles from '^' + norm + '$' — so on the
   same normalized surfaces it returns the same pairs. The pipeline runs
   it below the driver gate in `pipeline.link_entities`.
-- `candidate_pairs_ml`: pyspark.ml MinHashLSH.approxSimilarityJoin
-  (JVM-side, exact Jaccard on candidates).
 All restrict pairs to equal etype and re-score with exact Jaccard.
 """
 
@@ -40,38 +38,6 @@ FUZZY_ETYPES = ("threat-actor", "malware", "tool", "attack-pattern")
 def normalize_surface(col):
     """lowercase, strip separators — 'APT 28'/'APT-28'/'apt28' all meet."""
     return F.regexp_replace(F.lower(col), r"[\s\-_\.]+", "")
-
-
-def exact_pairs(surfaces: DataFrame) -> DataFrame:
-    """Edges between surfaces equal after normalization — the guaranteed
-    high-precision linker for every etype. One groupBy on (etype, norm);
-    pairs materialize per-group (groups are tiny alias sets)."""
-    base = (
-        surfaces.select("etype", "surface").distinct()
-        .withColumn("norm", normalize_surface(F.col("surface")))
-    )
-    grouped = (
-        base.groupBy("etype", "norm")
-        .agg(F.sort_array(F.collect_set("surface")).alias("ss"))
-        .filter(F.size("ss") >= 2)
-    )
-    return grouped.select(
-        "etype",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    F.col("ss"),
-                    lambda x, i: F.transform(
-                        F.slice(F.col("ss"), i + F.lit(2), F.size("ss")),
-                        lambda y: F.struct(x.alias("surface_a"), y.alias("surface_b")),
-                    ),
-                )
-            )
-        ).alias("p"),
-    ).select(
-        "etype", F.col("p.surface_a").alias("surface_a"),
-        F.col("p.surface_b").alias("surface_b"), F.lit(1.0).alias("jaccard"),
-    )
 
 
 def surface_shingles(df: DataFrame, text_col: str = "norm", n: int = 3) -> DataFrame:
@@ -216,36 +182,3 @@ def candidate_pairs_local(
                 if inter / (len(si) + len(sets[j]) - inter) >= sim_threshold:
                     pairs.add((i, j))
     return sorted(pairs)
-
-
-def candidate_pairs_ml(surfaces: DataFrame, sim_threshold: float = 0.5) -> DataFrame:
-    """pyspark.ml variant: HashingTF(binary) over shingles → MinHashLSH
-    approxSimilarityJoin. Used when ml jars are available; same output
-    contract as candidate_pairs_sql."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    base = (
-        surfaces.select("etype", "surface")
-        .filter(F.col("etype").isin(*FUZZY_ETYPES))
-        .distinct()
-        .withColumn("norm", normalize_surface(F.col("surface")))
-    )
-    sh = surface_shingles(base).filter(F.size("shingles") > 0)
-    tf = HashingTF(inputCol="shingles", outputCol="features", binary=True, numFeatures=1 << 18)
-    feats = tf.transform(sh)
-    lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=6, seed=42)
-    model = lsh.fit(feats)
-    joined = model.approxSimilarityJoin(feats, feats, 1.0 - sim_threshold, distCol="dist")
-    return (
-        joined.filter(
-            (F.col("datasetA.etype") == F.col("datasetB.etype"))
-            & (F.col("datasetA.surface") < F.col("datasetB.surface"))
-        )
-        .select(
-            F.col("datasetA.etype").alias("etype"),
-            F.col("datasetA.surface").alias("surface_a"),
-            F.col("datasetB.surface").alias("surface_b"),
-            F.round(1.0 - F.col("dist"), 6).alias("jaccard"),
-        )
-        .distinct()
-    )

@@ -47,8 +47,8 @@ def global_row_number(
     cache read. Lifecycle: the checkpointed RDD is sized to the ranked
     table (vocabulary-scale here) and is reclaimed by the
     ContextCleaner once the returned DataFrame is garbage-collected —
-    callers need no explicit unpersist (unlike the module-handle
-    caches, whose corpus-keyed entries outlive any one query and
+    callers need no explicit unpersist (unlike the `corpus_cached`
+    builders, whose corpus-keyed entries outlive any one query and
     therefore need explicit eviction).
 
     localCheckpoint cannot be replayed: its lineage is cut, so a lost

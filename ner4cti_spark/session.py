@@ -8,11 +8,41 @@ sized to the parallelism, Arrow for every Python crossing.
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
+
+
+def corpus_cached(build):
+    """Cache a builder's persisted result per corpus: one entry per
+    decorated builder, keyed by (Spark app id, *args).
+
+    A call with the entry's key returns the cached value (a DataFrame,
+    or a dict of them). A call with another key builds and replaces the
+    entry; the old value's frames are unpersisted when it belongs to the
+    same app, and just dropped when it belongs to another (stopped) one.
+    So repeated queries over one corpus share one persisted scan instead
+    of registering a fresh cache entry per call, and switching corpora
+    keeps the persistent-RDD count flat."""
+    entry: list = []  # [key, value] once built
+
+    @functools.wraps(build)
+    def cached(spark: SparkSession, *args):
+        key = (spark.sparkContext.applicationId, *args)
+        if entry and entry[0] == key:
+            return entry[1]
+        value = build(spark, *args)
+        if entry and entry[0][0] == key[0]:
+            old = entry[1]
+            for df in old.values() if isinstance(old, dict) else (old,):
+                df.unpersist(blocking=False)
+        entry[:] = [key, value]
+        return value
+
+    return cached
 
 
 def ship_package(spark: SparkSession) -> str:

@@ -58,12 +58,77 @@ def test_shingle_cache_evicts_on_corpus_switch(spark):
 
 
 def test_embedding_ivf_unpersists_fit_cache(spark):
-    """The Lloyd fit persists the vector set for its (eager) lifetime
-    and must release it before returning the search plan — repeated
-    embedding_ivf calls keep the persistent-RDD count flat."""
+    """The Lloyd fit and the search read one persisted vector scan,
+    kept per corpus (corpus_cached) rather than released after the
+    fit — repeated embedding_ivf calls reuse it and keep the
+    persistent-RDD count flat."""
     from ner4cti_spark import dataprep_queries as D
 
     D.q_embedding_ivf(spark, SF_DIR).count()
     before = _n_persistent(spark)
     D.q_embedding_ivf(spark, SF_DIR).count()
     assert _n_persistent(spark) <= before
+
+
+
+def _persistent_ids(spark) -> set[int]:
+    return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _build(name, spark, sf_dir):
+    """Call one corpus_cached builder and materialize what it persists."""
+    from ner4cti_spark import dataprep_queries as D
+
+    if name == "cti":
+        import __spark_entry__ as entry
+
+        value = entry._pipeline_out(spark)
+        value["sentences"].count()
+        return value
+    builder = {"shingles": D._doc_shingle_arrays, "simhash": D._simhash_sigs,
+               "ivf": D._ivf_embeddings}[name]
+    value = builder(spark, sf_dir)
+    value.count()
+    return value
+
+
+def _frames(value) -> list:
+    return list(value.values()) if isinstance(value, dict) else [value]
+
+
+def _is_persisted(value) -> bool:
+    level = (value["sentences"] if isinstance(value, dict) else value).storageLevel
+    return level.useMemory or level.useDisk
+
+
+@pytest.mark.parametrize("name", ["shingles", "simhash", "ivf", "cti"])
+def test_corpus_cached_builder_hits_switches_and_rebuilds_per_app(spark, monkeypatch, name):
+    """Every corpus_cached builder: a repeat call returns the same object
+    and persists nothing new; a corpus switch unpersists the old entry,
+    keeping the persistent-RDD count flat (the pipeline is keyed by app
+    alone, so it has no corpus switch); a changed Spark app id rebuilds
+    and leaves the old entry persisted."""
+    value = _build(name, spark, SF_DIR_01)
+    ids = _persistent_ids(spark)
+    assert _build(name, spark, SF_DIR_01) is value
+    assert _persistent_ids(spark) <= ids
+    if name != "cti":
+        old, value = value, _build(name, spark, SF_DIR)
+        assert len(_persistent_ids(spark)) <= len(ids)
+        assert not _is_persisted(old)
+        assert _build(name, spark, SF_DIR) is value
+        ids = _persistent_ids(spark)
+
+    monkeypatch.setattr(type(spark.sparkContext), "applicationId",
+                        property(lambda self: "another-app"))
+    other = None
+    try:
+        other = _build(name, spark, SF_DIR_01)
+        assert other is not value
+        assert _is_persisted(value)
+        assert len(_persistent_ids(spark)) > len(ids)
+    finally:
+        # the cache has dropped the old entry without unpersisting it,
+        # and the new one belongs to no live app id: free both here
+        for df in _frames(value) + (_frames(other) if other is not None else []):
+            df.unpersist(blocking=True)

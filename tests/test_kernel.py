@@ -249,6 +249,28 @@ def test_feat_cache_eviction_bound_is_enforced():
     assert np.allclose(sc_a, sc_b)
 
 
+def test_class_cache_eviction_bound_is_enforced():
+    """The indicator-pattern memo is bounded like the feature cache:
+    near-unique tokens (hashes, IPs, identifiers) must not grow it with
+    the corpus. Two batches of distinct uncovered tokens under a tiny
+    bound leave at most bound + one batch in the memo, and the tags
+    equal a fresh (default-bound) kernel's."""
+    batches = [
+        [[f"10.0.{b}.{i}", f"host{b}x{i}.example.com", f"tok{b}_{i}"] for i in range(4)]
+        for b in range(2)
+    ]
+    k = TaggerKernel(build_weights())
+    k.FEAT_CACHE_MAX = 4
+    fresh = TaggerKernel(build_weights())
+    for sents in batches:
+        tags, sc = k.tag(sents)
+        assert len(k._class_cache) <= 4 + sum(map(len, sents))
+        tags_f, sc_f = fresh.tag(sents)
+        assert tags == tags_f
+        assert np.allclose(sc, sc_f)
+    assert any(t != "O" for s in tags for t in s)  # patterns did fire
+
+
 def test_stem_fallback_matches_morphological_variants():
     """Opt-in recall-leaning mode: stemmed lexicon fallback. Measured on
     the reference corpora: MalwareDB span R +4.3pp / P -3pp (F1 +.004),

@@ -1,40 +1,11 @@
-"""Linking variants: ml-vs-sql LSH agreement, driver-vs-SQL linking parity,
-greedy decode, skew salting."""
+"""Linking variants: driver-vs-SQL linking parity, greedy decode, skew
+salting."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import Phase, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def alias_surfaces(spark):
-    from ner4cti_spark.kernel.gazetteer import alias_rows
-
-    return spark.createDataFrame(
-        [(e, a) for e, _c, a in alias_rows()], "etype string, surface string"
-    ).withColumn("freq", F.lit(1))
-
-
-def test_ml_and_sql_lsh_agree_on_high_similarity(spark, alias_surfaces):
-    """pyspark.ml MinHashLSH and the SQL-portable banding implementation
-    must agree on clearly-similar pairs (LSH families differ, so compare
-    at a threshold where both have ~certain recall)."""
-    from ner4cti_spark.linking.minhash_lsh import candidate_pairs_ml, candidate_pairs_sql
-
-    sql_pairs = {
-        (r["surface_a"], r["surface_b"])
-        for r in candidate_pairs_sql(alias_surfaces, sim_threshold=0.7).collect()
-    }
-    ml_pairs = {
-        (r["surface_a"], r["surface_b"])
-        for r in candidate_pairs_ml(alias_surfaces, sim_threshold=0.7).collect()
-    }
-    assert ("TrickBot", "Trickbot") in {tuple(sorted(p)) for p in sql_pairs}
-    # high-similarity pairs: both families should find the same set
-    assert sql_pairs == ml_pairs, (sql_pairs ^ ml_pairs)
 
 
 def test_greedy_decode_pipeline_path(spark):
@@ -78,18 +49,6 @@ def test_salted_repartition_spreads_hot_repo(spark):
         for r in unsalted.withColumn("pid", F.spark_partition_id()).groupBy("pid").count().collect()
     ]
     assert max(u_sizes) > max(counts), (u_sizes, counts)
-
-
-def test_exact_pairs_normalized_equality(spark, alias_surfaces):
-    """Standalone exact-normalization pair generator (the edge-based form
-    of what canonicalize folds into node ids)."""
-    from ner4cti_spark.linking.minhash_lsh import exact_pairs
-
-    rows = exact_pairs(alias_surfaces).collect()
-    pairs = {tuple(sorted((r["surface_a"], r["surface_b"]))) for r in rows}
-    assert ("APT 28", "APT28") in pairs
-    assert ("Cobalt Strike", "CobaltStrike") in {tuple(sorted(p)) for p in pairs}
-    assert all(r["jaccard"] == 1.0 for r in rows)
 
 
 # ---------------- driver linking path vs the SQL path ----------------
