@@ -129,35 +129,3 @@ def multihead_attention(x: np.ndarray, w: dict[str, np.ndarray], n_heads: int,
     sd = y.std(axis=-1, keepdims=True) + 1e-5
     return (y - mu) / sd * w["attn_ln_g"] + w["attn_ln_b"]
 
-
-def wordpiece_mean_pool(piece_vecs: np.ndarray, word_ids: np.ndarray,
-                        n_words: int) -> np.ndarray:
-    """A8 (Finetuning_BertCRF/BertModel.py:81-114): the reference's BERT
-    branch emits one state per WORDPIECE and mean-pools the pieces of
-    each original token back to one word vector. (P, D) piece vectors +
-    (P,) piece→word index → (n_words, D) means; words with zero pieces
-    (can't happen in WordPiece, [UNK] is one piece) stay zero."""
-    D = piece_vecs.shape[1]
-    out = np.zeros((n_words, D), dtype=np.float64)
-    np.add.at(out, word_ids, piece_vecs.astype(np.float64))
-    counts = np.bincount(word_ids, minlength=n_words).astype(np.float64)[:, None]
-    return (out / np.maximum(counts, 1.0)).astype(piece_vecs.dtype)
-
-
-def soft_augment(x: np.ndarray, nbr_vecs: np.ndarray, nbr_sims: np.ndarray,
-                 nbr_mask: np.ndarray) -> np.ndarray:
-    """M6 soft augmentation (security_augmentation.py:86-126): attention
-    over each word's top-k SIMILAR words — softmax of the similarity
-    scores weights the neighbors' embedding rows into a context vector,
-    which a sigmoid gate (driven by agreement ⟨x, ctx⟩) fuses into the
-    word representation. x (N,D), nbr_vecs (N,K,D), nbr_sims (N,K),
-    nbr_mask (N,K) True=real neighbor. Words with no neighbors pass
-    through unchanged."""
-    sims = np.where(nbr_mask, nbr_sims, -1e9)
-    m = sims.max(axis=-1, keepdims=True)
-    a = np.exp(sims - m)
-    a = a / np.maximum(a.sum(axis=-1, keepdims=True), 1e-12)
-    ctx = (a[..., None] * nbr_vecs).sum(axis=1)                     # (N,D)
-    has = nbr_mask.any(axis=-1, keepdims=True)
-    gate = 1.0 / (1.0 + np.exp(-np.clip((x * ctx).sum(-1, keepdims=True), -30, 30)))
-    return np.where(has, x + gate * ctx, x).astype(x.dtype)

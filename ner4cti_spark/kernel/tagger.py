@@ -85,7 +85,6 @@ class TaggerKernel:
         # no shuffle, identical results by determinism)
         self._feat_cache: dict[str, np.ndarray] = {}
         self._class_cache: dict[str, str | None] = {}
-        self._wp_vocab: dict[str, int] | None = None
         self._sent_cache: dict[tuple[str, ...], tuple[list[str], float]] = {}
         self._sent_cache_on = sent_cache
         # trained neural branch: resolved lazily ONCE per kernel — the
@@ -136,15 +135,7 @@ class TaggerKernel:
         """(N, feat_dim) rows for distinct tokens, cached per executor.
         Feature fusion M2 inputs: word(hash-emb) ‖ charCNN ‖ pos ‖ case —
         each a pure function of the token string, so distinct-token
-        compute + gather replaces per-position recompute.
-
-        Optional branches, switched by weight-bundle keys:
-        - "_wp_pool" (A8): the character branch runs per WORDPIECE and
-          mean-pools pieces back to the token (BertModel.py:81-114).
-        - "_aug_neighbors" (M6): softmax-attention over each word's
-          top-k similar words (corpus-trained Word2Vec neighbors),
-          gate-fused into the word embedding
-          (security_augmentation.py:86-126)."""
+        compute + gather replaces per-position recompute."""
         w = self.w
         # snapshot the rows this call needs BEFORE any cache eviction:
         # the bounded-size clear below must not invalidate tokens already
@@ -156,28 +147,10 @@ class TaggerKernel:
         if missing:
             wid = nn.stable_hash_ids(np.array(missing, dtype=object), self.word_vocab)
             word_v = w["word_emb"][wid]                                  # (N,50)
-            hard = w.get("_hard_aug_table")
-            if hard:  # M5: precomputed fused table, keyed by EXACT vocab
-                #       form — cased surface variants pass through
-                #       unaugmented (they hash to different embedding
-                #       rows; overriding them with the lowercase fusion
-                #       would replace their base vector, which the soft
-                #       path never does). Row overrides are safe: the
-                #       fancy-indexed word_v above is already a copy.
-                for i, t in enumerate(missing):
-                    hv = hard.get(t)
-                    if hv is not None:
-                        word_v[i] = hv
-            aug = w.get("_aug_neighbors")
-            if aug and not hard:
-                word_v = self._soft_augment(missing, word_v, aug)
-            if "_wp_pool" in w:
-                char_v = self._wordpiece_char_vecs(missing)
-            else:
-                cids = nn.char_ids([missing], len(missing), self.char_maxlen, self.char_vocab)[0]
-                char_v = nn.char_cnn(
-                    cids[:, None, :], w["char_emb"], w["char_conv_w"], w["char_conv_b"], 3
-                )[:, 0, :]                                               # (N,30)
+            cids = nn.char_ids([missing], len(missing), self.char_maxlen, self.char_vocab)[0]
+            char_v = nn.char_cnn(
+                cids[:, None, :], w["char_emb"], w["char_conv_w"], w["char_conv_b"], 3
+            )[:, 0, :]                                                   # (N,30)
             case_id = np.array([casing_class(t) for t in missing], dtype=np.int64)
             case_v = w["case_emb"][case_id]
             # F4: heuristic UPOS (kernel/pos.py) — the reference's
@@ -191,57 +164,6 @@ class TaggerKernel:
                 self._feat_cache[t] = feats[i]
                 rows[t] = feats[i]
         return np.stack([rows[t] for t in tokens])
-
-    def _wordpiece_char_vecs(self, tokens: list[str]) -> np.ndarray:
-        """A8: char-CNN per wordpiece, mean-pooled back to tokens."""
-        from . import wordpiece as wp
-
-        vocab = self._wp_vocab
-        if vocab is None:
-            vocab = self._wp_vocab = wp.default_vocab()
-        pieces: list[str] = []
-        word_ids: list[int] = []
-        for i, t in enumerate(tokens):
-            ps = wp.wordpiece(t.lower(), vocab)
-            pieces.extend(p.lstrip("#") or "#" for p in ps)
-            word_ids.extend([i] * len(ps))
-        cids = nn.char_ids([pieces], len(pieces), self.char_maxlen, self.char_vocab)[0]
-        pv = nn.char_cnn(
-            cids[:, None, :], self.w["char_emb"], self.w["char_conv_w"],
-            self.w["char_conv_b"], 3,
-        )[:, 0, :]
-        return nn.wordpiece_mean_pool(pv, np.array(word_ids, dtype=np.int64), len(tokens))
-
-    def _soft_augment(self, tokens: list[str], word_v: np.ndarray,
-                      aug: dict) -> np.ndarray:
-        """M6: gather each token's top-k similar words (corpus Word2Vec
-        neighbors), embed them through the SAME hashed word table, fuse
-        via softmax-attention + sigmoid gate (nn.soft_augment)."""
-        K = max((len(v[0]) for v in aug.values()), default=0)
-        if K == 0:
-            return word_v
-        N, D = word_v.shape
-        nbr_vecs = np.zeros((N, K, D), dtype=word_v.dtype)
-        nbr_sims = np.zeros((N, K), dtype=np.float32)
-        nbr_mask = np.zeros((N, K), dtype=bool)
-        flat_words: list[str] = []
-        slots: list[tuple[int, int]] = []
-        for i, t in enumerate(tokens):
-            hit = aug.get(t.lower())
-            if not hit:
-                continue
-            for j, (nw, sim) in enumerate(zip(hit[0][:K], hit[1][:K])):
-                flat_words.append(nw)
-                slots.append((i, j))
-                nbr_sims[i, j] = sim
-                nbr_mask[i, j] = True
-        if not flat_words:
-            return word_v
-        ids = nn.stable_hash_ids(np.array(flat_words, dtype=object), self.word_vocab)
-        vecs = self.w["word_emb"][ids]
-        for (i, j), v in zip(slots, vecs):
-            nbr_vecs[i, j] = v
-        return nn.soft_augment(word_v, nbr_vecs, nbr_sims, nbr_mask)
 
     def neural_emissions(self, sents: list[list[str]], T: int, mask: np.ndarray) -> np.ndarray:
         """(B,T,L) contextual branch: M1→M2→M3→M4→linear, batched numpy."""
@@ -364,41 +286,6 @@ class TaggerKernel:
         ]
         scores = (scores / np.maximum(lengths, 1)).astype(np.float32)
         return tags, scores
-
-
-def build_hard_aug_table(weights: dict[str, np.ndarray],
-                         neighbors: dict[str, tuple[tuple[str, ...], tuple[float, ...]]]
-                         ) -> dict[str, np.ndarray]:
-    """M5 hard augmentation (security_augmentation.py:68-83; gate
-    model.py:417-438): precompute, for every vocabulary word with
-    similar-word neighbors, the gate-fused augmented embedding as a
-    broadcastable table — the reference's 'hard' variant bakes the fusion
-    into a lookup table offline, while 'soft' (M6, nn.soft_augment inside
-    `_soft_augment`) computes the identical fusion at inference.
-    hard(w) ≡ soft(w) for exact vocabulary forms (parity tested); they
-    deliberately differ on CASED surface variants — hard is a table keyed
-    by vocab form (cased tokens pass through), soft looks neighbors up by
-    lowercased form and fuses into the cased token's own embedding.
-    Ship the result as weights['_hard_aug_table']."""
-    word_vocab = weights["word_emb"].shape[0]
-    words = sorted(neighbors)
-    if not words:
-        return {}
-    ids = nn.stable_hash_ids(np.array(words, dtype=object), word_vocab)
-    X = weights["word_emb"][ids]
-    K = max(len(neighbors[w][0]) for w in words)
-    D = X.shape[1]
-    nbr_vecs = np.zeros((len(words), K, D), dtype=X.dtype)
-    nbr_sims = np.zeros((len(words), K), dtype=np.float32)
-    nbr_mask = np.zeros((len(words), K), dtype=bool)
-    for i, w in enumerate(words):
-        ws, sims = neighbors[w]
-        nids = nn.stable_hash_ids(np.array(list(ws), dtype=object), word_vocab)
-        nbr_vecs[i, : len(ws)] = weights["word_emb"][nids]
-        nbr_sims[i, : len(ws)] = sims
-        nbr_mask[i, : len(ws)] = True
-    fused = nn.soft_augment(X, nbr_vecs, nbr_sims, nbr_mask)
-    return {w: fused[i] for i, w in enumerate(words)}
 
 
 def casing_class(tok: str) -> int:

@@ -38,6 +38,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 N_BUCKETS = 64
 MANIFEST = os.path.join("_lineage", "manifest.parquet")
@@ -82,10 +84,11 @@ def read_checkpoint(spark: SparkSession, out_dir: str, table: str,
     """A bucketed checkpoint table, without its bucket column. A zero-row
     partitioned write leaves the table directory with no `bucket=`
     subdirectory (only `_SUCCESS`), from which parquet cannot infer a
-    schema: such a table reads as an empty frame of `schema`."""
+    schema: such a table reads as an empty frame of `schema`, built from
+    an Arrow table so that it plans as a JVM-local scan."""
     path = os.path.join(out_dir, table)
     if not _bucket_keys(path):
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(to_arrow_schema(StructType.fromDDL(schema)).empty_table())
     return spark.read.parquet(path).drop("bucket")
 
 
@@ -111,18 +114,17 @@ def commit(out_dir: str, rows: pd.DataFrame) -> None:
     os.close(fd)
 
 
-def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = os.path.join(out_dir, MANIFEST)
-    return spark.read.parquet(path) if os.path.exists(path) else None
-
-
 def _done(out_dir: str, stage: str) -> set[str]:
     manifest = read_manifest(out_dir)
     return set(manifest.loc[manifest["stage"] == stage, "partition_key"])
 
 
 def completed_buckets(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    return spark.createDataFrame([(int(k),) for k in _done(out_dir, stage)], "bucket int")
+    """The buckets recorded complete for `stage`, one `bucket int` row
+    each. Built from an Arrow table, it plans as a JVM-local scan: no
+    action on it starts a Python task."""
+    keys = sorted(int(k) for k in _done(out_dir, stage))
+    return spark.createDataFrame(pa.table({"bucket": pa.array(keys, pa.int32())}))
 
 
 def filter_resumable(df: DataFrame, out_dir: str, stage: str) -> DataFrame:

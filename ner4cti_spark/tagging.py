@@ -9,7 +9,7 @@ flat view (`MENTION_SCHEMA`, one row per mention); `nest_mentions`
 regroups a flat table by sentence.
 
 Skew: giant repos are spread by salted repartition on
-(repo, pmod(hash(path), S)) before tagging, per SURVEY §4.2.
+(repo, pmod(hash(path, sent_id), S)) before tagging, per SURVEY §4.2.
 """
 
 from __future__ import annotations

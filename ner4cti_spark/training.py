@@ -108,7 +108,7 @@ def _word_vectors(spark: SparkSession, corpus: str, dim: int, seed: int,
     window=3, CBOW, gensim-default 5 epochs — pyspark.ml is skip-gram,
     a documented deviation). Test-split TEXT in the unlabeled embedding
     fit is what gives out-of-vocabulary test entities usable
-    cluster/augmentation features → (word, vector) DataFrame."""
+    cluster/embedding features → (word, vector) DataFrame."""
     from pyspark.ml.feature import Word2Vec
     from pyspark.sql import functions as F
 
@@ -126,31 +126,6 @@ def _word_vectors(spark: SparkSession, corpus: str, dim: int, seed: int,
                    numPartitions=1, maxIter=max_iter, windowSize=window,
                    inputCol="tokens", outputCol="vec")
     return w2v.fit(toks).getVectors()
-
-
-def soft_aug_neighbors(spark: SparkSession, corpus: str, *, k: int = 5,
-                       min_sim: float = 0.5, dim: int = 50, seed: int = 42
-                       ) -> dict[str, tuple[tuple[str, ...], tuple[float, ...]]]:
-    """M6 soft-augmentation table: each vocab word's top-k most similar
-    words by corpus-Word2Vec cosine (security_augmentation.py:25-56
-    builds the same similar-word sets). Vocabulary-sized (all-pairs
-    cosine on ~10⁴ × 50 is one numpy matmul on the driver; at larger
-    vocabs this becomes the embedding_topk / LSH-bucket path)."""
-    import numpy as np
-
-    rows = _word_vectors(spark, corpus, dim, seed).collect()
-    words = [r["word"] for r in rows]
-    M = np.array([list(r["vector"]) for r in rows], dtype=np.float64)
-    M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    S = M @ M.T
-    np.fill_diagonal(S, -1.0)
-    out: dict[str, tuple[tuple[str, ...], tuple[float, ...]]] = {}
-    top = np.argsort(-S, axis=1)[:, :k]
-    for i, w in enumerate(words):
-        nbrs = [(words[j], float(S[i, j])) for j in top[i] if S[i, j] >= min_sim]
-        if nbrs:
-            out[w] = (tuple(n for n, _ in nbrs), tuple(s for _, s in nbrs))
-    return out
 
 
 def word_clusters(spark: SparkSession, corpus: str, *, dim: int = 50,

@@ -1,4 +1,4 @@
-"""Artifact I/O (S3/S5/S6) + WordPiece (F5) tests."""
+"""Artifact I/O (S3/S5/S6) tests."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import numpy as np
 
 from ner4cti_spark.kernel.artifacts import load_glove, load_weights, merge_glove, save_weights
 from ner4cti_spark.kernel.weights import build_weights
-from ner4cti_spark.kernel.wordpiece import default_vocab, encode, wordpiece
 
 
 def test_weights_roundtrip(tmp_path):
@@ -38,22 +37,3 @@ def test_glove_load_and_merge(tmp_path):
     # 'attack' only exists capitalized in glove: reference falls back via
     # word.lower() — our vocab word is already lower, so no hit: keep init
     assert merged["word_emb"][1].tolist() == [9.0, 9.0]
-
-
-def test_wordpiece_greedy_longest_match():
-    v = default_vocab()
-    assert wordpiece("ransomware", v)[0] in ("ran", "ransom") or True
-    pieces = wordpiece("malware", v)
-    assert pieces[0] == "mal" and all(p.startswith("##") for p in pieces[1:])
-    assert "".join(p.removeprefix("##") for p in pieces) == "malware"
-    # unmatchable char → whole-token UNK (HF semantics)
-    assert wordpiece("naïve", v) == ["[UNK]"]
-
-
-def test_wordpiece_encode_roundtrip_ids():
-    v = default_vocab()
-    pieces, ids = encode(["Malware", "attack"], v)
-    assert len(pieces) == len(ids)
-    assert all(isinstance(i, int) for i in ids)
-    inv = {i: p for p, i in v.items()}
-    assert [inv[i] for i in ids] == pieces

@@ -283,109 +283,3 @@ def test_stem_fallback_matches_morphological_variants():
     k_off = TaggerKernel(build_weights(), phrases=lex, use_patterns=False)
     tags_off, _ = k_off.tag([["performed", "credential", "dumping", "today"]])
     assert tags_off[0][2] == "O"
-
-
-def test_wordpiece_mean_pool_parity():
-    """A8: pooled vectors equal hand-computed piece means."""
-    import numpy as np
-
-    from ner4cti_spark.kernel import nn
-
-    pv = np.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0], [7.0, 8.0]], dtype=np.float32)
-    wid = np.array([0, 0, 1, 2])
-    out = nn.wordpiece_mean_pool(pv, wid, 3)
-    np.testing.assert_allclose(out[0], [2.0, 3.0])
-    np.testing.assert_allclose(out[1], [5.0, 6.0])
-    np.testing.assert_allclose(out[2], [7.0, 8.0])
-
-
-def test_wordpiece_char_branch_pools_pieces():
-    """A8 integration: with "_wp_pool" the char branch equals the mean of
-    per-piece char-CNN vectors computed by hand."""
-    import numpy as np
-
-    from ner4cti_spark.kernel import nn
-    from ner4cti_spark.kernel import wordpiece as wp
-    from ner4cti_spark.kernel.tagger import TaggerKernel
-    from ner4cti_spark.kernel.weights import build_weights
-
-    w = build_weights()
-    w["_wp_pool"] = np.array([1])
-    kernel = TaggerKernel(w, phrases={})
-    tok = "malware"  # splits into >1 piece under the default vocab
-    pieces = [p.lstrip("#") or "#" for p in wp.wordpiece(tok, wp.default_vocab())]
-    assert len(pieces) > 1
-    got = kernel._wordpiece_char_vecs([tok])[0]
-    cids = nn.char_ids([pieces], len(pieces), kernel.char_maxlen, kernel.char_vocab)[0]
-    pv = nn.char_cnn(cids[:, None, :], w["char_emb"], w["char_conv_w"], w["char_conv_b"], 3)[:, 0, :]
-    np.testing.assert_allclose(got, pv.mean(axis=0), rtol=1e-5)
-
-
-def test_soft_augment_math_and_integration():
-    """M6: softmax attention + gate math; neighbors change the word
-    vector, words without neighbors pass through unchanged."""
-    import numpy as np
-
-    from ner4cti_spark.kernel import nn
-    from ner4cti_spark.kernel.tagger import TaggerKernel
-    from ner4cti_spark.kernel.weights import build_weights
-
-    x = np.ones((1, 4), dtype=np.float32)
-    nbr = np.stack([[np.full(4, 2.0), np.full(4, 4.0)]]).astype(np.float32)
-    sims = np.array([[np.log(3.0), 0.0]], dtype=np.float32)  # weights 3/4, 1/4
-    mask = np.ones((1, 2), dtype=bool)
-    out = nn.soft_augment(x, nbr, sims, mask)
-    ctx = 0.75 * 2.0 + 0.25 * 4.0
-    gate = 1.0 / (1.0 + np.exp(-4 * ctx))
-    np.testing.assert_allclose(out[0], 1.0 + gate * ctx, rtol=1e-5)
-    # no-neighbor row unchanged
-    out2 = nn.soft_augment(x, nbr, sims, np.zeros((1, 2), dtype=bool))
-    np.testing.assert_array_equal(out2, x)
-
-    w_plain = build_weights()
-    w_aug = build_weights()
-    w_aug["_aug_neighbors"] = {"stuxnet": (("duqu", "flame"), (0.9, 0.8))}
-    k_plain = TaggerKernel(w_plain, phrases={})
-    k_aug = TaggerKernel(w_aug, phrases={})
-    sent = [["Stuxnet", "infected", "systems"]]
-    e_plain = k_plain.neural_emissions(sent, 3, np.ones((1, 3), dtype=bool))
-    e_aug = k_aug.neural_emissions(sent, 3, np.ones((1, 3), dtype=bool))
-    assert not np.allclose(e_plain[0, 0], e_aug[0, 0])   # augmented token moved
-    # deterministic: same weights+table → identical emissions
-    k_aug2 = TaggerKernel(w_aug, phrases={})
-    np.testing.assert_array_equal(
-        e_aug, k_aug2.neural_emissions(sent, 3, np.ones((1, 3), dtype=bool)))
-
-
-def test_hard_aug_table_equals_soft_fusion():
-    """M5 ≡ M6: the precomputed hard-augmentation table equals the
-    on-the-fly soft fusion for vocabulary (lowercased) tokens."""
-    import numpy as np
-
-    from ner4cti_spark.kernel.tagger import TaggerKernel, build_hard_aug_table
-    from ner4cti_spark.kernel.weights import build_weights
-
-    neighbors = {
-        "stuxnet": (("duqu", "flame"), (0.9, 0.8)),
-        "mimikatz": (("pwdump",), (0.7,)),
-    }
-    w_soft = build_weights()
-    w_soft["_aug_neighbors"] = neighbors
-    w_hard = build_weights()
-    w_hard["_hard_aug_table"] = build_hard_aug_table(w_hard, neighbors)
-    toks = ["stuxnet", "mimikatz", "unrelated"]
-    v_soft = TaggerKernel(w_soft, phrases={})._token_features(toks)
-    v_hard = TaggerKernel(w_hard, phrases={})._token_features(toks)
-    np.testing.assert_allclose(v_soft, v_hard, rtol=1e-5)
-    # and it actually changed the augmented rows vs the plain kernel
-    v_plain = TaggerKernel(build_weights(), phrases={})._token_features(toks)
-    assert not np.allclose(v_plain[0], v_hard[0])
-    np.testing.assert_array_equal(v_plain[2], v_hard[2])
-    # documented divergence on CASED surfaces: the hard table is keyed by
-    # exact vocab form — 'Stuxnet' passes through unaugmented, while the
-    # soft path fuses via the lowercased neighbor lookup
-    v_hard_cased = TaggerKernel(w_hard, phrases={})._token_features(["Stuxnet"])
-    v_plain_cased = TaggerKernel(build_weights(), phrases={})._token_features(["Stuxnet"])
-    np.testing.assert_array_equal(v_hard_cased, v_plain_cased)
-    v_soft_cased = TaggerKernel(w_soft, phrases={})._token_features(["Stuxnet"])
-    assert not np.allclose(v_soft_cased, v_plain_cased)

@@ -66,6 +66,40 @@ def test_sentencize_counts(spark, corpus):
     assert sents.count() == expected
 
 
+def test_sentencize_splits_on_any_ascii_whitespace_once(spark):
+    """Tokens are the non-empty pieces of each line split on ASCII
+    whitespace, so tab-led, tab-only, form-feed, vertical-tab and CRLF
+    lines tokenize as Python's per-line `.split()` does, and the
+    executed plan splits each line on `\\s+` exactly once."""
+    import re
+
+    from test_plans import executed_nodes
+
+    contents = [
+        "\tAPT28 used Mimikatz\n\t\t\nalpha\fbeta\r\ngamma\x0bdelta \t\r\n  \n\nlast\tline\rend",
+        "\x0c\x0b\n x \t",
+        "",
+    ]
+    corpus = spark.createDataFrame(
+        [("r", f"p{i}", "c", "py", c) for i, c in enumerate(contents)],
+        "repo string, path string, commit string, lang string, content string")
+    sents = sentencize(corpus)
+    got = sorted((r.path, r.sent_id, list(r.tokens)) for r in sents.collect())
+    want = sorted((f"p{i}", n, line.split())
+                  for i, c in enumerate(contents)
+                  for n, line in enumerate(re.split(r"\r\n|\r|\n", c)) if line.split())
+    assert got == want
+
+    def whitespace_splits(expr) -> int:
+        own = (expr.getClass().getSimpleName() == "StringSplit"
+               and expr.regex().toString() == r"\s+")
+        kids = expr.children()
+        return own + sum(whitespace_splits(kids.apply(i)) for i in range(kids.size()))
+
+    exprs = [n.expressions() for n in executed_nodes(sents)]
+    assert sum(whitespace_splits(e.apply(i)) for e in exprs for i in range(e.size())) == 1
+
+
 def test_linking_merges_known_aliases(result):
     ents = result["entities"]
     pairs = [

@@ -193,7 +193,7 @@ def test_resume_after_crash_at_each_commit_point(spark, half_done, tmp_path, poi
     assert {f"bucket={k}" for k in lin.loc[lin["stage"] == "tag", "partition_key"]} == set(after)
     assert (lin["stage"] == "materialize").any()
     assert not lin.duplicated(["stage", "partition_key"]).any()
-    assert lineage.read_lineage(spark, out_dir).count() == len(lin)
+    assert spark.read.parquet(f"{out_dir}/{lineage.MANIFEST}").count() == len(lin)
 
 
 def test_unrecorded_bucket_files_never_reach_the_triples(spark, half_done, tmp_path):
@@ -217,3 +217,28 @@ def test_unrecorded_bucket_files_never_reach_the_triples(spark, half_done, tmp_p
     out = run_pipeline(spark, first_half(corpus), cfg, out_dir=out_dir)
     assert spo(out["triples"]) == want
     assert not os.path.exists(orphan)
+
+
+def test_lineage_small_frames_plan_as_local_scans(spark, half_done, tmp_path):
+    """`completed_buckets` and `read_checkpoint`'s empty frame are built
+    on the JVM from Arrow tables: their executed plans hold no
+    ExistingRDD, a scan of Python rows whose every action runs Python
+    tasks. They still give the recorded buckets and the typed empty
+    frame."""
+    from pyspark.sql.types import StructType
+
+    from ner4cti_spark.tagging import MENTION_SCHEMA
+
+    base = half_done[3]
+    fresh = str(tmp_path / "fresh")
+    lin = lineage.read_manifest(base)
+    recorded = {int(k) for k in lin.loc[lin["stage"] == "tag", "partition_key"]}
+    done = lineage.completed_buckets(spark, base, "tag")
+    none = lineage.completed_buckets(spark, fresh, "tag")
+    empty = lineage.read_checkpoint(spark, fresh, "mentions", MENTION_SCHEMA)
+    assert recorded and {r["bucket"] for r in done.collect()} == recorded
+    assert none.count() == 0 and none.schema == StructType.fromDDL("bucket int")
+    assert empty.count() == 0 and empty.schema == StructType.fromDDL(MENTION_SCHEMA)
+    for df in (done, none, empty):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
