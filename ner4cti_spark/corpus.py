@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kernel import gazetteer
-from .session import drop_zip_importers
 
 SEED = 42
 LANGS = ["python", "c", "md", "txt", "java"]
@@ -144,13 +143,10 @@ def generate_corpus(
     )
 
     def gen_text(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                pdf = pdf.copy()
-                pdf["content"] = [_doc_text(int(d))[0] for d in pdf["doc_id"]]
-                yield pdf[["repo", "path", "commit", "lang", "content"]]
-        finally:
-            drop_zip_importers()
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["content"] = [_doc_text(int(d))[0] for d in pdf["doc_id"]]
+            yield pdf[["repo", "path", "commit", "lang", "content"]]
 
     schema = "repo string, path string, commit string, lang string, content string"
     return base.mapInPandas(gen_text, schema=schema)

@@ -19,7 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .entry_queries import load
-from .session import corpus_cached, drop_zip_importers
+from .session import corpus_cached, local_frame
 
 # ---------------------------------------------------------------- shingles
 
@@ -661,24 +661,21 @@ def _embedding_buckets(spark: SparkSession, sf_dir: str,
         )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                E = np.stack(pdf["e"].to_numpy())              # (n, dim)
-                S = E @ _ann_planes(E.shape[1]).T              # (n, T*B)
-                bits = S >= 0.0
-                rows = {"vec_id": [], "tbl": [], "bucket": []}
-                for t in range(_ANN_TABLES):
-                    block = bits[:, t * _ANN_BITS : (t + 1) * _ANN_BITS]
-                    rows["vec_id"].extend(pdf["vec_id"])
-                    rows["tbl"].extend([t] * len(pdf))
-                    rows["bucket"].extend(
-                        "".join("1" if x else "0" for x in row) for row in block
-                    )
-                yield pd.DataFrame(rows)
-        finally:
-            drop_zip_importers()
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            E = np.stack(pdf["e"].to_numpy())              # (n, dim)
+            S = E @ _ann_planes(E.shape[1]).T              # (n, T*B)
+            bits = S >= 0.0
+            rows = {"vec_id": [], "tbl": [], "bucket": []}
+            for t in range(_ANN_TABLES):
+                block = bits[:, t * _ANN_BITS : (t + 1) * _ANN_BITS]
+                rows["vec_id"].extend(pdf["vec_id"])
+                rows["tbl"].extend([t] * len(pdf))
+                rows["bucket"].extend(
+                    "".join("1" if x else "0" for x in row) for row in block
+                )
+            yield pd.DataFrame(rows)
 
     return emb.mapInPandas(run, "vec_id long, tbl int, bucket string")
 
@@ -927,7 +924,7 @@ def _corpus_eval(spark: SparkSession, corpus: str, map_to_cti: bool) -> DataFram
     from .training import CORPORA, corpus_available, trained_weights
 
     if not corpus_available(corpus):
-        return spark.createDataFrame([], _EVAL_SCHEMA)
+        return local_frame(spark, _EVAL_SCHEMA)
     from .tagging import tag_token_frames
 
     weights, lex, ls = trained_weights(spark, corpus)
@@ -1161,19 +1158,16 @@ def _ivf_assign(emb: DataFrame, cents: list) -> DataFrame:
     nc = np.array([_fold_norm(c) for _, c in cents], dtype=np.float64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                E = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["e"]])
-                ne = pdf["ne"].to_numpy(dtype=np.float64)
-                S = _fold_dot(E, C) / (ne[:, None] * nc[None, :])
-                best = np.argmax(S, axis=1)
-                out = pdf[["vec_id", "e", "ne"]].copy()
-                out.insert(1, "cent_id", cent_ids[best])
-                yield out
-        finally:
-            drop_zip_importers()
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            E = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["e"]])
+            ne = pdf["ne"].to_numpy(dtype=np.float64)
+            S = _fold_dot(E, C) / (ne[:, None] * nc[None, :])
+            best = np.argmax(S, axis=1)
+            out = pdf[["vec_id", "e", "ne"]].copy()
+            out.insert(1, "cent_id", cent_ids[best])
+            yield out
 
     return emb.select("vec_id", "e", "ne").mapInPandas(
         run, "vec_id long, cent_id long, e array<double>, ne double"
@@ -1267,29 +1261,26 @@ def _ivf_update_partials(emb: DataFrame, cents: list) -> DataFrame:
     nc = np.array([_fold_norm(c) for _, c in cents], dtype=np.float64)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            S = np.zeros_like(C)
-            N = np.zeros(len(cents), dtype=np.int64)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                E = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["e"]])
-                ne = pdf["ne"].to_numpy(dtype=np.float64)
-                sims = _fold_dot(E, C) / (ne[:, None] * nc[None, :])
-                best = np.argmax(sims, axis=1)
-                np.add.at(S, best, E)
-                np.add.at(N, best, 1)
-            occ = np.nonzero(N)[0]
-            if len(occ):
-                dim = C.shape[1]
-                yield pd.DataFrame({
-                    "cent_id": np.repeat(cent_ids[occ], dim),
-                    "pos": np.tile(np.arange(dim, dtype=np.int32), len(occ)),
-                    "s": S[occ].ravel(),
-                    "n": np.repeat(N[occ], dim),
-                })
-        finally:
-            drop_zip_importers()
+        S = np.zeros_like(C)
+        N = np.zeros(len(cents), dtype=np.int64)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            E = np.stack([np.asarray(e, dtype=np.float64) for e in pdf["e"]])
+            ne = pdf["ne"].to_numpy(dtype=np.float64)
+            sims = _fold_dot(E, C) / (ne[:, None] * nc[None, :])
+            best = np.argmax(sims, axis=1)
+            np.add.at(S, best, E)
+            np.add.at(N, best, 1)
+        occ = np.nonzero(N)[0]
+        if len(occ):
+            dim = C.shape[1]
+            yield pd.DataFrame({
+                "cent_id": np.repeat(cent_ids[occ], dim),
+                "pos": np.tile(np.arange(dim, dtype=np.int32), len(occ)),
+                "s": S[occ].ravel(),
+                "n": np.repeat(N[occ], dim),
+            })
 
     return emb.select("vec_id", "e", "ne").mapInPandas(
         run, "cent_id long, pos int, s double, n long"
@@ -1434,19 +1425,16 @@ def q_per_source_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
 
     def zscore(pdf: pd.DataFrame) -> pd.DataFrame:
-        try:
-            mu = pdf["n_chars"].mean()
-            sd = pdf["n_chars"].std(ddof=0)
-            z = (pdf["n_chars"] - mu) / sd if sd > 0 else pdf["n_chars"] * 0.0
-            import numpy as np
+        mu = pdf["n_chars"].mean()
+        sd = pdf["n_chars"].std(ddof=0)
+        z = (pdf["n_chars"] - mu) / sd if sd > 0 else pdf["n_chars"] * 0.0
+        import numpy as np
 
-            return pd.DataFrame({
-                "doc_id": pdf["doc_id"],
-                "source": pdf["source"],
-                "z": np.floor(z * 10000.0 + 0.5) / 10000.0,
-            })
-        finally:
-            drop_zip_importers()
+        return pd.DataFrame({
+            "doc_id": pdf["doc_id"],
+            "source": pdf["source"],
+            "z": np.floor(z * 10000.0 + 0.5) / 10000.0,
+        })
 
     return docs.groupBy("source").applyInPandas(zscore, "doc_id long, source string, z double")
 

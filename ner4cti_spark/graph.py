@@ -29,7 +29,6 @@ from pyspark import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .session import drop_zip_importers
 from .tagging import SENTENCE_KEY, flatten_mentions, nest_mentions
 
 TRIPLE_SCHEMA = (
@@ -102,33 +101,30 @@ def emit_triples(batches: Iterator[pd.DataFrame], aliases: dict[tuple[str, str],
     distinct canonicals in sorted order —co_occurs_with→. The document
     URI joins repo, path and commit with '@', skipping nulls (Spark's
     concat_ws). A triple's provenance is its first witness in the task."""
-    try:
-        seen: dict[tuple, tuple] = {}
-        for pdf in batches:
-            canon_col = pdf["canonical"] if "canonical" in pdf.columns else repeat(None)
-            for repo, path, commit, sha, surfaces, etypes, canons in zip(
-                pdf["repo"], pdf["path"], pdf["commit"], pdf["sha256"],
-                pdf["surface"], pdf["etype"], canon_col,
-            ):
-                prov = (repo, commit, sha)
-                uri = "@".join([p for p in (repo, path, commit) if p is not None])
-                if canons is None:
-                    canons = [aliases.get((e, s), s) for s, e in zip(surfaces, etypes)]
-                for c, e in zip(canons, etypes):
-                    seen.setdefault((uri, "mentions", c), prov)
-                    seen.setdefault((c, "has_type", e), prov)
-                    seen.setdefault((c, "found_in_repo", repo), prov)
-                ents = sorted({c for c in canons if c is not None})
-                for i, a in enumerate(ents):
-                    for b in ents[i + 1:]:
-                        seen.setdefault((a, "co_occurs_with", b), prov)
-                if len(seen) >= dedup_bound:
-                    yield _triple_frame(seen)
-                    seen = {}
-        if seen:
-            yield _triple_frame(seen)
-    finally:
-        drop_zip_importers()
+    seen: dict[tuple, tuple] = {}
+    for pdf in batches:
+        canon_col = pdf["canonical"] if "canonical" in pdf.columns else repeat(None)
+        for repo, path, commit, sha, surfaces, etypes, canons in zip(
+            pdf["repo"], pdf["path"], pdf["commit"], pdf["sha256"],
+            pdf["surface"], pdf["etype"], canon_col,
+        ):
+            prov = (repo, commit, sha)
+            uri = "@".join([p for p in (repo, path, commit) if p is not None])
+            if canons is None:
+                canons = [aliases.get((e, s), s) for s, e in zip(surfaces, etypes)]
+            for c, e in zip(canons, etypes):
+                seen.setdefault((uri, "mentions", c), prov)
+                seen.setdefault((c, "has_type", e), prov)
+                seen.setdefault((c, "found_in_repo", repo), prov)
+            ents = sorted({c for c in canons if c is not None})
+            for i, a in enumerate(ents):
+                for b in ents[i + 1:]:
+                    seen.setdefault((a, "co_occurs_with", b), prov)
+            if len(seen) >= dedup_bound:
+                yield _triple_frame(seen)
+                seen = {}
+    if seen:
+        yield _triple_frame(seen)
 
 
 def _triple_frame(seen: dict[tuple, tuple]) -> pd.DataFrame:

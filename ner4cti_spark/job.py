@@ -1,15 +1,16 @@
 """spark-submit entry point (north_rule deploy mode).
 
-    spark-submit --py-files ner4cti_spark.zip -m ... job.py \\
+    spark-submit --py-files ner4cti_spark.zip ner4cti_spark/job.py \\
         --input /path/to/corpus_parquet --output /path/to/kg \\
         [--synthetic-docs N] [--link-threshold 0.5] [--decode viterbi]
 
 Reads the corpus table (repo, path, commit, lang, content) from
 --input parquet (or synthesizes a deterministic corpus with
 --synthetic-docs), runs the full KG pipeline resumable into --output,
-and prints one JSON status line. On a cluster the same file works
-unchanged — the SparkSession is taken from the environment
-(getOrCreate), so master/executor settings come from spark-submit.
+and prints one JSON status line. The job always runs in local mode:
+`session.get_spark` sets the master to `local[--cores]`, which takes
+precedence over spark-submit's `--master`, and the Python workers are
+forks of the engine's worker daemon on the driver's machine.
 """
 
 from __future__ import annotations
@@ -34,7 +35,8 @@ def main(argv: list[str] | None = None) -> int:
                          "2*scale + 2*spread(trans) < 4 (the lexicon margin) it "
                          "moves mentions.score by less than the scale and no tag")
     ap.add_argument("--cores", type=int, default=0,
-                    help="local-mode cores (ignored under a real cluster master)")
+                    help="local-mode cores (0: $SPARK_GRAFT_CPUS, else all); the job "
+                         "runs in local mode whatever spark-submit's --master says")
     args = ap.parse_args(argv)
     if not args.input and not args.synthetic_docs:
         ap.error("one of --input / --synthetic-docs is required")

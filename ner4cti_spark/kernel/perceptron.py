@@ -633,8 +633,6 @@ def train_crf_distributed(df, ls: LabelSpace, phrases: dict, *,
     At 100 TB: per-partition deltas are bounded by touched features (not
     corpus size), mixing is a treeAggregate-shaped reduction, and no
     sentence ever moves — only weights do."""
-    from ..session import drop_zip_importers  # the kernel itself imports no Spark
-
     sc = df.sparkSession.sparkContext
     L = ls.n
     rdd = (
@@ -654,23 +652,20 @@ def train_crf_distributed(df, ls: LabelSpace, phrases: dict, *,
         tr_bc = sc.broadcast(TR)
 
         def part_fit(it, _ep=ep):
-            try:
-                sents = list(it)
-                if not sents:
-                    return
-                data = _prep(sents, ls, phrases_bc.value, use_patterns, buckets,
-                             clusters_bc.value)
-                Wl, TRl, _errs = _train_epochs(
-                    data, ls, buckets, sub_epochs, seed + 1000 * _ep,
-                    W=w_bc.value, TR=tr_bc.value, average=False,
-                    cost=cost, miss_cost=miss_cost,
-                )
-                dW = (Wl - w_bc.value).reshape(-1)
-                nz = np.nonzero(dW)[0]
-                yield (len(sents), nz.astype(np.int64), dW[nz].astype(np.float32),
-                       (TRl - tr_bc.value).astype(np.float32))
-            finally:
-                drop_zip_importers()
+            sents = list(it)
+            if not sents:
+                return
+            data = _prep(sents, ls, phrases_bc.value, use_patterns, buckets,
+                         clusters_bc.value)
+            Wl, TRl, _errs = _train_epochs(
+                data, ls, buckets, sub_epochs, seed + 1000 * _ep,
+                W=w_bc.value, TR=tr_bc.value, average=False,
+                cost=cost, miss_cost=miss_cost,
+            )
+            dW = (Wl - w_bc.value).reshape(-1)
+            nz = np.nonzero(dW)[0]
+            yield (len(sents), nz.astype(np.int64), dW[nz].astype(np.float32),
+                   (TRl - tr_bc.value).astype(np.float32))
 
         parts = rdd.mapPartitions(part_fit).collect()
         w_bc.destroy()

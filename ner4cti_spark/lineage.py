@@ -38,8 +38,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+
+from .session import local_frame
 
 N_BUCKETS = 64
 MANIFEST = os.path.join("_lineage", "manifest.parquet")
@@ -84,11 +84,10 @@ def read_checkpoint(spark: SparkSession, out_dir: str, table: str,
     """A bucketed checkpoint table, without its bucket column. A zero-row
     partitioned write leaves the table directory with no `bucket=`
     subdirectory (only `_SUCCESS`), from which parquet cannot infer a
-    schema: such a table reads as an empty frame of `schema`, built from
-    an Arrow table so that it plans as a JVM-local scan."""
+    schema: such a table reads as an empty `local_frame` of `schema`."""
     path = os.path.join(out_dir, table)
     if not _bucket_keys(path):
-        return spark.createDataFrame(to_arrow_schema(StructType.fromDDL(schema)).empty_table())
+        return local_frame(spark, schema)
     return spark.read.parquet(path).drop("bucket")
 
 

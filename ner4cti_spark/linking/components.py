@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 DRIVER_THRESHOLD = 2_000_000
 
@@ -84,13 +86,9 @@ def _driver_union_find(spark, src: np.ndarray, dst: np.ndarray) -> DataFrame:
     """Union-find on a collected edge list — the same (node, component =
     min reachable node id) output as _distributed_cc."""
     nodes, comp = union_find(src, dst)
-    if not len(nodes):
-        return spark.createDataFrame([], "node long, component long")
-    # pandas → Arrow createDataFrame path (r6): the list-of-tuples form
-    # pickles row by row through the JVM gateway; Arrow ships the whole
-    # column batch at once (guide §6 driver-transfer note)
+    # one Arrow batch, not a row-by-row pickle through the JVM gateway
     pdf = pd.DataFrame({"node": nodes, "component": comp})
-    return spark.createDataFrame(pdf, "node long, component long")
+    return local_frame(spark, "node long, component long", pdf)
 
 
 def _distributed_cc(edges: DataFrame, max_iter: int, n_partitions: int) -> DataFrame:

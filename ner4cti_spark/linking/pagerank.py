@@ -13,6 +13,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .components import DRIVER_THRESHOLD
 
 
@@ -52,7 +53,7 @@ def _driver_pagerank(spark, src: np.ndarray, dst: np.ndarray, damping: float,
     """numpy power iteration on a collected edge list — identical
     recurrence to _distributed_pagerank, vectorized."""
     if not len(src):
-        return spark.createDataFrame([], "node long, rank double")
+        return local_frame(spark, "node long, rank double")
     nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     n = len(nodes)
     si, di = inv[: len(src)], inv[len(src) :]
@@ -65,11 +66,11 @@ def _driver_pagerank(spark, src: np.ndarray, dst: np.ndarray, damping: float,
         np.add.at(inflow, di, ranks[si] * w)
         dangling = 1.0 - inflow.sum()
         ranks = base + damping * (inflow + dangling / n)
-    # pandas → Arrow createDataFrame (columnar batch, no per-row pickle)
+    # one Arrow batch, not a row-by-row pickle through the JVM gateway
     import pandas as pd
 
     pdf = pd.DataFrame({"node": nodes.astype("int64"), "rank": ranks})
-    return spark.createDataFrame(pdf, "node long, rank double")
+    return local_frame(spark, "node long, rank double", pdf)
 
 
 def _distributed_pagerank(edges: DataFrame, damping: float, n_iter: int,

@@ -21,7 +21,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import drop_zip_importers
 
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
@@ -34,23 +33,20 @@ FEATURE_DIM = 16
 def synthesize_media(spark: SparkSession, n: int = 100, seed: int = 42) -> DataFrame:
     """Deterministic opaque payloads with typed metadata (no codecs)."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                rows = []
-                for mid in pdf["id"]:
-                    mid = int(mid)
-                    kind = ["image", "audio", "video"][mid % 3]
-                    payload = hashlib.sha256(f"{seed}:{mid}".encode()).digest() * (4 + mid % 5)
-                    meta = {
-                        "width": 64 * (1 + mid % 4) if kind != "audio" else None,
-                        "height": 64 * (1 + mid % 3) if kind != "audio" else None,
-                        "sample_rate": 16000 if kind == "audio" else None,
-                        "fmt": {"image": "png", "audio": "wav", "video": "mp4"}[kind],
-                    }
-                    rows.append((mid, kind, payload, meta))
-                yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
-        finally:
-            drop_zip_importers()
+        for pdf in batches:
+            rows = []
+            for mid in pdf["id"]:
+                mid = int(mid)
+                kind = ["image", "audio", "video"][mid % 3]
+                payload = hashlib.sha256(f"{seed}:{mid}".encode()).digest() * (4 + mid % 5)
+                meta = {
+                    "width": 64 * (1 + mid % 4) if kind != "audio" else None,
+                    "height": 64 * (1 + mid % 3) if kind != "audio" else None,
+                    "sample_rate": 16000 if kind == "audio" else None,
+                    "fmt": {"image": "png", "audio": "wav", "video": "mp4"}[kind],
+                }
+                rows.append((mid, kind, payload, meta))
+            yield pd.DataFrame(rows, columns=["media_id", "kind", "payload", "meta"])
 
     return spark.range(n).mapInPandas(gen, schema=MEDIA_SCHEMA)
 
@@ -71,26 +67,23 @@ def extract_features(media: DataFrame, decode: str = "fake",
     because those libraries are not available in this environment."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            for pdf in batches:
-                if decode == "real":
-                    raise NotImplementedError(
-                        "real codec path: plug PIL/librosa/ffmpeg decode here; "
-                        "not available in this container"
-                    )
-                feats = [
-                    _fake_features(bytes(p), dim).tolist() for p in pdf["payload"]
-                ]
-                yield pd.DataFrame(
-                    {
-                        "media_id": pdf["media_id"],
-                        "kind": pdf["kind"],
-                        "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                        "features": feats,
-                    }
+        for pdf in batches:
+            if decode == "real":
+                raise NotImplementedError(
+                    "real codec path: plug PIL/librosa/ffmpeg decode here; "
+                    "not available in this container"
                 )
-        finally:
-            drop_zip_importers()
+            feats = [
+                _fake_features(bytes(p), dim).tolist() for p in pdf["payload"]
+            ]
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "kind": pdf["kind"],
+                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
+                    "features": feats,
+                }
+            )
 
     return media.mapInPandas(
         run, schema="media_id long, kind string, n_bytes long, features array<float>"

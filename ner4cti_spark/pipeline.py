@@ -39,6 +39,7 @@ from .linking.minhash_lsh import (
     FUZZY_ETYPES, candidate_pairs_local, candidate_pairs_sql, normalize_surface,
 )
 from .operators.sentencize import sentencize, with_sha256
+from .session import local_frame
 from .tagging import (
     MENTION_SCHEMA, flatten_mentions, nest_mentions, salted_repartition, tag_sentences,
 )
@@ -158,7 +159,7 @@ def _link(mentions: DataFrame, cfg: PipelineConfig,
     if len(probe) <= driver_threshold:
         linked = _link_local(probe, cfg.link_threshold)
         if linked is not None:
-            entities = mentions.sparkSession.createDataFrame(linked, ENTITY_SCHEMA)
+            entities = local_frame(mentions.sparkSession, ENTITY_SCHEMA, linked)
             return entities, len(linked), linked
     return (*_link_sql(agg.persist(), cfg.link_threshold), None)
 

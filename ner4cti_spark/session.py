@@ -10,12 +10,14 @@ from __future__ import annotations
 
 import functools
 import os
-import sys
 import tempfile
 import zipfile
-import zipimport
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def corpus_cached(build):
@@ -47,11 +49,23 @@ def corpus_cached(build):
     return cached
 
 
+def local_frame(spark: SparkSession, schema: str,
+                rows: pd.DataFrame | None = None) -> DataFrame:
+    """`rows` (none: zero rows) as a frame of DDL `schema`, shipped as one
+    typed Arrow table: a JVM-local scan even when empty, where an empty
+    pandas frame or a list becomes an `ExistingRDD` running Python tasks."""
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    table = (arrow_schema.empty_table() if rows is None
+             else pa.Table.from_pandas(rows, schema=arrow_schema, preserve_index=False))
+    return spark.createDataFrame(table)
+
+
 def ship_package(spark: SparkSession) -> str:
     """Ship this package to executors — the programmatic equivalent of
     `spark-submit --py-files ner4cti_spark.zip` (north_rule deploy mode).
-    Without it, forked Python workers can only import the package when
-    the driver's cwd happens to be the repo root."""
+    The worker daemon imports the package from `get_spark`'s PYTHONPATH
+    entry before it forks, so workers import its modules from there, not
+    from this zip."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(tempfile.gettempdir(), "ner4cti_spark_pyfiles.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
@@ -65,40 +79,20 @@ def ship_package(spark: SparkSession) -> str:
     return zip_path
 
 
-def drop_zip_importers() -> None:
-    """Delete every `zipimport.zipimporter` from `sys.path_importer_cache`;
-    other finders and `zipimport._zip_directory_cache` stay.
-
-    Every engine function that runs in a Python worker calls this in a
-    `finally` as it finishes. PySpark reuses a worker across tasks, but
-    each task's set-up ends in `importlib.invalidate_caches()`, which
-    makes every cached zipimporter re-read its archive's central
-    directory in pure Python: pyspark.zip with its sub-package prefixes
-    and spark-core's jar, 17 importers (19 with this package's zip) and
-    a median 0.27 s per task on a 4-CPU host. Dropped at the end of one
-    task, they are not there for the next task's set-up to re-read.
-
-    Safe while no zip on a worker's path changes during the worker's
-    life, which holds because Spark refuses to re-add a file under a name
-    it already shipped: the cache is only a cache, and a later import
-    through a zip rebuilds its importer from the unchanged directory in
-    `_zip_directory_cache`."""
-    for path, finder in list(sys.path_importer_cache.items()):
-        if isinstance(finder, zipimport.zipimporter):
-            del sys.path_importer_cache[path]
-
-
 def get_spark(
     app_name: str = "ner4cti_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession.
+    """Build (or reuse) a local-mode SparkSession.
 
     cores=None → local[*]. shuffle_partitions defaults to max(cores, 32)
     locally; on a real cluster you would size it to ~2-3× total cores and
-    let AQE coalesce down.
+    let AQE coalesce down. Python workers are forks of `worker_daemon`,
+    found through `spark.executorEnv.PYTHONPATH`: the directory or zip
+    this package was imported from, which the workers of a local master
+    share with the driver.
     """
     # One BLAS thread per Python worker: N workers × default-N-threaded
     # OpenBLAS oversubscribes the box N× and *slows down* with more
@@ -132,6 +126,9 @@ def get_spark(
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.python.daemon.module", "ner4cti_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

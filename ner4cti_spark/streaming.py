@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.sentencize import sentencize, with_sha256
-from .session import drop_zip_importers
 from .tagging import tag_mentions
 
 
@@ -113,17 +112,14 @@ def stateful_user_totals(
     )
 
     def update(key, pdfs, state: GroupState):
-        try:
-            (user_id,) = key
-            n, total = state.get if state.exists else (0, 0.0)
-            for pdf in pdfs:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            state.update((n, total))
-            yield pd.DataFrame({"user_id": [user_id], "n_events": [n],
-                                "sum_value": [round(total, 4)]})
-        finally:
-            drop_zip_importers()
+        (user_id,) = key
+        n, total = state.get if state.exists else (0, 0.0)
+        for pdf in pdfs:
+            n += len(pdf)
+            total += float(pdf["value"].sum())
+        state.update((n, total))
+        yield pd.DataFrame({"user_id": [user_id], "n_events": [n],
+                            "sum_value": [round(total, 4)]})
 
     out = events.groupBy("user_id").applyInPandasWithState(
         update,

@@ -21,7 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .kernel.tagger import TaggerKernel, extract_spans, lookup_canonical
-from .session import drop_zip_importers
 
 _KERNEL_CACHE: dict[int, TaggerKernel] = {}
 
@@ -91,18 +90,15 @@ def tag_token_frames(df: DataFrame, weights_bc, phrases_bc=None,
     splits) with an optional corpus-induced lexicon broadcast."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            kernel = _get_kernel(weights_bc, neural_scale, decode, phrases_bc,
-                                 use_patterns, label_space)
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                tags, _scores = kernel.tag([list(t) for t in pdf["tokens"]])
-                out = pdf[["doc_id", "sent_id", "tokens"]].copy()
-                out["tags"] = tags
-                yield out
-        finally:
-            drop_zip_importers()
+        kernel = _get_kernel(weights_bc, neural_scale, decode, phrases_bc,
+                             use_patterns, label_space)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            tags, _scores = kernel.tag([list(t) for t in pdf["tokens"]])
+            out = pdf[["doc_id", "sent_id", "tokens"]].copy()
+            out["tags"] = tags
+            yield out
 
     return df.mapInPandas(
         run, schema="doc_id string, sent_id long, tokens array<string>, tags array<string>"
@@ -132,36 +128,33 @@ def tag_sentences(sentences: DataFrame, weights_bc, neural_scale: float = 0.0,
     2*spread(trans) < LEX_O - LEX_OTHER (kernel/tagger.py docstring)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        try:
-            kernel = _get_kernel(weights_bc, neural_scale, decode, sent_cache=sent_cache)
-            for pdf in batches:
-                if pdf.empty:
+        kernel = _get_kernel(weights_bc, neural_scale, decode, sent_cache=sent_cache)
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            sents = [list(t) for t in pdf["tokens"]]
+            tags, scores = kernel.tag(sents)
+            keep: list[int] = []
+            spans: dict[str, list] = {c: [] for c in SPAN_COLUMNS}
+            for i, (toks, tg) in enumerate(zip(sents, tags)):
+                found = extract_spans(toks, tg)
+                if not found:
                     continue
-                sents = [list(t) for t in pdf["tokens"]]
-                tags, scores = kernel.tag(sents)
-                keep: list[int] = []
-                spans: dict[str, list] = {c: [] for c in SPAN_COLUMNS}
-                for i, (toks, tg) in enumerate(zip(sents, tags)):
-                    found = extract_spans(toks, tg)
-                    if not found:
-                        continue
-                    keep.append(i)
-                    # found is (begin, end, surface, etype) tuples: the first
-                    # four span columns, transposed
-                    for c, vals in zip(SPAN_COLUMNS, zip(*found)):
-                        spans[c].append(list(vals))
-                    spans["canonical_hint"].append([
-                        lookup_canonical(kernel.phrases, toks[b:e], et) for b, e, _, et in found
-                    ])
-                if not keep:  # Arrow cannot type an empty untyped list column
-                    continue
-                out = pdf.iloc[keep][list(SENTENCE_KEY)].reset_index(drop=True)
-                out["score"] = [float(scores[i]) for i in keep]
-                for c in SPAN_COLUMNS:
-                    out[c] = spans[c]
-                yield out
-        finally:
-            drop_zip_importers()
+                keep.append(i)
+                # found is (begin, end, surface, etype) tuples: the first
+                # four span columns, transposed
+                for c, vals in zip(SPAN_COLUMNS, zip(*found)):
+                    spans[c].append(list(vals))
+                spans["canonical_hint"].append([
+                    lookup_canonical(kernel.phrases, toks[b:e], et) for b, e, _, et in found
+                ])
+            if not keep:  # Arrow cannot type an empty untyped list column
+                continue
+            out = pdf.iloc[keep][list(SENTENCE_KEY)].reset_index(drop=True)
+            out["score"] = [float(scores[i]) for i in keep]
+            for c in SPAN_COLUMNS:
+                out[c] = spans[c]
+            yield out
 
     return sentences.mapInPandas(run, schema=SENTENCE_SCHEMA)
 

@@ -174,7 +174,10 @@ def _columns(df):
 def test_empty_corpus_in_memory_and_checkpointed(spark, tmp_path):
     """A zero-row corpus gives zero mentions, entities and triples with
     the documented schemas, both in memory and with a checkpoint dir (a
-    zero-row partitioned write leaves only _SUCCESS in the table dir)."""
+    zero-row partitioned write leaves only _SUCCESS in the table dir).
+    In memory, the empty alias table is a JVM-local scan: neither it nor
+    the triples plan an ExistingRDD, whose actions would run Python
+    tasks."""
     from ner4cti_spark.graph import TRIPLE_SCHEMA
     from ner4cti_spark.linking.components import ENTITY_SCHEMA
     from ner4cti_spark.tagging import MENTION_SCHEMA
@@ -188,6 +191,10 @@ def test_empty_corpus_in_memory_and_checkpointed(spark, tmp_path):
         for name, cols in want.items():
             assert _columns(out[name]) == cols, (out_dir, name)
             assert out[name].count() == 0, (out_dir, name)
+        if out_dir is None:
+            for name in ("entities", "triples"):
+                plan = out[name]._jdf.queryExecution().executedPlan().toString()
+                assert "ExistingRDD" not in plan, (name, plan)
 
 
 def test_run_pipeline_leaves_no_persisted_rdd(spark):

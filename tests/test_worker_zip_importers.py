@@ -1,5 +1,6 @@
-"""Engine worker functions drop the worker's zip importers as they finish
-(`session.drop_zip_importers`), so the next task's set-up, which ends in
+"""Python workers drop their zip importers before they are forked and
+after every task (`worker_daemon.drop_zip_importers`, run by the engine's
+worker daemon), so the next task's set-up, which ends in
 `importlib.invalidate_caches()`, has no archive directory to re-read."""
 
 from __future__ import annotations
@@ -7,14 +8,12 @@ from __future__ import annotations
 import sys
 import zipfile
 import zipimport
-from types import SimpleNamespace
 
 import pandas as pd
-import pytest
 
-from ner4cti_spark import graph, tagging
-from ner4cti_spark.kernel.weights import build_weights
-from ner4cti_spark.session import drop_zip_importers
+from ner4cti_spark.worker_daemon import drop_zip_importers
+
+N_TASKS = 8  # the test session's local[8]: one task per worker slot
 
 
 def _zip_package(tmp_path, name: str) -> str:
@@ -63,61 +62,47 @@ def test_drop_zip_importers_keeps_zip_imports_working(tmp_path, monkeypatch):
             del sys.path_importer_cache[path]
 
 
-class _Frame:
-    """Stands in for a DataFrame: records the function handed to
-    mapInPandas instead of planning it."""
-
-    def mapInPandas(self, fn, schema):
-        self.fn = fn
-        return self
-
-
-def _sentences(n: int) -> pd.DataFrame:
-    return pd.DataFrame({
-        "repo": ["r"] * n, "path": ["p"] * n, "commit": ["c"] * n, "sha256": ["s"] * n,
-        "sent_id": range(n),
-        "tokens": [["APT28", "used", "Mimikatz", "to", "reach", "10.0.0.1"]] * n,
-    })
-
-
-def _tag_stage(monkeypatch):
-    monkeypatch.setattr(tagging, "_KERNEL_CACHE", {})
-    frame = tagging.tag_sentences(_Frame(), SimpleNamespace(value=build_weights()))
-    return frame.fn, _sentences
-
-
-def _token_frames(monkeypatch):
-    monkeypatch.setattr(tagging, "_KERNEL_CACHE", {})
-    frame = tagging.tag_token_frames(_Frame(), SimpleNamespace(value=build_weights()))
-    return frame.fn, lambda n: _sentences(n).assign(doc_id="d")
-
-
-def _emit_triples(_monkeypatch):
-    def rows(n):
-        return _sentences(n).assign(
-            surface=[["APT28", "Mimikatz"]] * n, etype=[["threat-actor", "tool"]] * n,
-        )
-    return lambda batches: graph.emit_triples(batches, {}), rows
-
-
-@pytest.mark.parametrize("make", [_tag_stage, _token_frames, _emit_triples],
-                         ids=["tag_sentences", "tag_token_frames", "emit_triples"])
-def test_pipeline_worker_functions_leave_no_zip_importer(make, tmp_path, monkeypatch):
-    fn, batch = make(monkeypatch)
+def test_worker_daemon_drops_importers_a_task_leaves(spark, tmp_path):
+    """A task whose function leaves a zipimporter behind and never drops
+    it does not hand it to the worker's next task: every worker runs the
+    engine's daemon module as `__main__`, which drops as each task ends."""
     archive = _zip_package(tmp_path, "zipplant_pkg")
 
-    def plant():
-        monkeypatch.setitem(sys.path_importer_cache, archive, zipimport.zipimporter(archive))
+    def plant(batches):
+        import os
+        for _ in batches:
+            pass
+        sys.path_importer_cache[archive] = zipimport.zipimporter(archive)
+        yield pd.DataFrame({"pid": [os.getpid()]})
 
-    plant()
-    out = list(fn(iter([batch(2), batch(3)])))
-    assert sum(len(f) for f in out) > 0
-    assert _split_cache()[0] == []
+    def probe(batches):
+        import os
+        for _ in batches:
+            pass
+        spec = sys.modules["__main__"].__spec__
+        yield pd.DataFrame({"pid": [os.getpid()],
+                            "planted": [archive in sys.path_importer_cache],
+                            "main": [spec.name if spec else None]})
 
-    plant()
-    gen = fn(iter([batch(2), batch(3)]))
-    assert len(next(gen)) > 0
-    # the drop runs as the function finishes, not as it starts
-    assert archive in sys.path_importer_cache
-    gen.close()
-    assert _split_cache()[0] == []
+    tasks = spark.range(0, N_TASKS, 1, N_TASKS)
+    planted = {r.pid for r in tasks.mapInPandas(plant, "pid long").collect()}
+    seen = tasks.mapInPandas(probe, "pid long, planted boolean, main string").toPandas()
+    both = seen[seen["pid"].isin(planted)]
+    assert len(both) > 0, "no worker ran a task of both jobs"
+    assert not both["planted"].any()
+    assert (seen["main"] == "ner4cti_spark.worker_daemon").all(), seen["main"]
+
+
+def test_pyspark_internal_task_leaves_no_zip_importer(spark):
+    """Tasks that run only PySpark's own functions end with the drop too:
+    after a list-of-tuples createDataFrame action (an ExistingRDD of
+    pickled rows), a follow-up task finds no zipimporter on entry."""
+    rows = [(i, str(i)) for i in range(4 * N_TASKS)]
+    assert spark.createDataFrame(rows, "i long, s string").count() == len(rows)
+
+    def probe(_rows):
+        yield sum(isinstance(f, zipimport.zipimporter)
+                  for f in sys.path_importer_cache.values())
+
+    counts = spark.sparkContext.parallelize(range(N_TASKS), N_TASKS).mapPartitions(probe)
+    assert counts.collect() == [0] * N_TASKS
