@@ -8,18 +8,65 @@ training-data-pipeline suite, checked against DuckDB at sf=0.01.
 
 from __future__ import annotations
 
+import functools
+import os
+import tempfile
+import zipfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+import ner4cti_spark
 from ner4cti_spark import dataprep_queries as D
 from ner4cti_spark import entry_queries as Q
-from ner4cti_spark.session import corpus_cached, ship_package
+from ner4cti_spark import worker_daemon
+from ner4cti_spark.session import corpus_cached
+
+_SHIPPED_APPS: set[str] = set()
+
+
+def _ship_once(spark: SparkSession) -> None:
+    """`addPyFile` a zip of this package's `.py` files, once per Spark app,
+    for a session that `get_spark` did not build.
+
+    A `get_spark` session names `worker_daemon` in
+    `spark.python.daemon.module` and puts the package's directory on the
+    workers' PYTHONPATH, so its workers already import the package. Any
+    other session's workers find it only through their cwd: driven from
+    another directory, they fail with `ModuleNotFoundError` unless the
+    zip is shipped. Each zip goes to a fresh directory, so concurrent
+    drivers never overwrite each other's; Spark refuses a second file of
+    the same name whose bytes differ, hence once per app."""
+    sc = spark.sparkContext
+    if (sc.getConf().get("spark.python.daemon.module") == worker_daemon.__name__
+            or sc.applicationId in _SHIPPED_APPS):
+        return
+    pkg_dir = os.path.dirname(os.path.abspath(ner4cti_spark.__file__))
+    zip_path = os.path.join(tempfile.mkdtemp(prefix="ner4cti_spark_"), "ner4cti_spark.zip")
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fn in files:
+                if fn.endswith(".py"):
+                    full = os.path.join(root, fn)
+                    zf.write(full, os.path.join("ner4cti_spark", os.path.relpath(full, pkg_dir)))
+    sc.addPyFile(zip_path)
+    _SHIPPED_APPS.add(sc.applicationId)
+
+
+def _shipping(fn: Callable[[SparkSession, str], DataFrame]
+              ) -> Callable[[SparkSession, str], DataFrame]:
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _ship_once(spark)
+        return fn(spark, sf_dir)
+
+    return run
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: corpus scan → tag (mapInPandas + Viterbi) → link →
     canonicalize → triples."""
+    _ship_once(spark)
     return _pipeline_out(spark)["triples"]
 
 
@@ -40,7 +87,6 @@ def _pipeline_out(spark: SparkSession) -> dict[str, DataFrame]:
     from ner4cti_spark.corpus import generate_corpus
     from ner4cti_spark.pipeline import run_pipeline
 
-    ship_package(spark)
     return run_pipeline(spark, generate_corpus(spark, n_docs=150))
 
 
@@ -147,7 +193,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _sql) in _REGISTRY.items()}
+    return {name: _shipping(fn) for name, (fn, _sql) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kernel import gazetteer
+from .session import local_frame
 
 SEED = 42
 LANGS = ["python", "c", "md", "txt", "java"]
@@ -161,6 +162,7 @@ def expected_mentions(spark: SparkSession, n_docs: int = 1000) -> DataFrame:
         sha = hashlib.sha256(text.encode()).hexdigest()
         for ln, surface, etype in planted:
             rows.append((d, ln, surface, etype, sha))
-    return spark.createDataFrame(
-        rows, "doc_id long, sent_id long, surface string, etype string, sha256 string"
+    return local_frame(
+        spark, "doc_id long, sent_id long, surface string, etype string, sha256 string",
+        pd.DataFrame(rows, columns=["doc_id", "sent_id", "surface", "etype", "sha256"]),
     )

@@ -1298,11 +1298,14 @@ def q_embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     posting-list join partitions by cell id. The DuckDB oracle unrolls
     the identical fixed-iteration fit, so centroids — and therefore
     posting lists and results — match exactly."""
+    import pandas as pd
+
     emb = _ivf_embeddings(spark, sf_dir)
     c = _ivf_c(emb.count())
     cents = _ivf_fit_centroids(spark, emb, c)
-    cent = spark.createDataFrame(
-        cents, "cent_id long, c array<double>"
+    cent = local_frame(
+        spark, "cent_id long, c array<double>",
+        pd.DataFrame(cents, columns=["cent_id", "c"]),
     ).withColumn("nc", _norm(F.col("c")))
     assign = _ivf_assign(emb, cents)
     queries = emb.filter(

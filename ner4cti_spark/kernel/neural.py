@@ -12,10 +12,11 @@ forward is the exact recurrence of nn.lstm_layer (gate order i,f,o,g;
 h0/c0 = 0), verified by tests/test_neural.py parity + gradient checks —
 so inference can run through the existing kernel functions unchanged.
 
-Fusion with the perceptron-CRF (the M8 analog) is measured two ways in
-tools/exp_quality.py (score fusion e_sp + lam*log-softmax vs stacked
-discrete prediction features); the shipped configuration is whichever
-the valid split selects.
+Fusion with the perceptron-CRF (the M8 analog) was measured two ways
+(score fusion e_sp + lam*log-softmax vs stacked discrete prediction
+features: the NOTES_r4.md experiment logs, where score fusion wins, and
+NOTES_r5.md); the shipped configuration is whichever the valid split
+selects.
 
 Batching: sentences are bucketed by EXACT length, so no padding exists
 anywhere in training — every batch is a dense (B, T, Din) tensor and

@@ -13,8 +13,11 @@
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 # DNRTI tagset → north-star CTI classes (SURVEY §1.3). Unmapped DNRTI
 # types (Org, SecTeam, Area, Idus, Time, Features, Purp) are outside the
@@ -248,8 +251,9 @@ def span_prf(pred_spans: DataFrame, gold_spans: DataFrame) -> DataFrame:
     prec = tp / np_ if np_ else 0.0
     rec = tp / ng if ng else 0.0
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
-    spark = pred_spans.sparkSession
-    return spark.createDataFrame(
-        [(round(prec, 6), round(rec, 6), round(f1, 6), tp, np_, ng)],
+    return local_frame(
+        pred_spans.sparkSession,
         "precision double, recall double, f1 double, tp long, n_pred long, n_gold long",
+        pd.DataFrame({"precision": [round(prec, 6)], "recall": [round(rec, 6)],
+                      "f1": [round(f1, 6)], "tp": [tp], "n_pred": [np_], "n_gold": [ng]}),
     )

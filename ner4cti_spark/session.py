@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import functools
 import os
-import tempfile
-import zipfile
 
 import pandas as pd
 import pyarrow as pa
@@ -58,25 +56,6 @@ def local_frame(spark: SparkSession, schema: str,
     table = (arrow_schema.empty_table() if rows is None
              else pa.Table.from_pandas(rows, schema=arrow_schema, preserve_index=False))
     return spark.createDataFrame(table)
-
-
-def ship_package(spark: SparkSession) -> str:
-    """Ship this package to executors — the programmatic equivalent of
-    `spark-submit --py-files ner4cti_spark.zip` (north_rule deploy mode).
-    The worker daemon imports the package from `get_spark`'s PYTHONPATH
-    entry before it forks, so workers import its modules from there, not
-    from this zip."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(tempfile.gettempdir(), "ner4cti_spark_pyfiles.zip")
-    with zipfile.ZipFile(zip_path, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join("ner4cti_spark", os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
-    return zip_path
 
 
 def get_spark(
@@ -134,5 +113,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    ship_package(spark)
     return spark

@@ -43,8 +43,12 @@ def test_sha256_invariant_preserved(spark, corpus, result):
 
 
 def test_mention_pr_vs_gold(spark, result):
-    """P/R ≥ 0.95 against planted gold mentions (north_rule gate)."""
+    """P/R ≥ 0.95 against planted gold mentions (north_rule gate). The
+    gold frame is built on the driver as one Arrow table: its plan has no
+    `ExistingRDD`, a scan of pickled rows whose actions run Python tasks."""
     gold = expected_mentions(spark, n_docs=N_DOCS)
+    plan = gold._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
     gold_keys = gold.select(
         "sha256", F.col("sent_id"), F.col("surface"), F.col("etype")
     ).distinct()

@@ -106,3 +106,14 @@ def test_pyspark_internal_task_leaves_no_zip_importer(spark):
 
     counts = spark.sparkContext.parallelize(range(N_TASKS), N_TASKS).mapPartitions(probe)
     assert counts.collect() == [0] * N_TASKS
+
+
+def test_no_worker_imports_the_package_from_a_zip(spark):
+    """A `get_spark` session ships no zip of the package: its workers
+    import it from the daemon's PYTHONPATH entry, so no task's `sys.path`
+    holds a zip of it."""
+    def zips(_rows):
+        yield [p for p in sys.path if p.endswith(".zip") and "ner4cti_spark" in p]
+
+    paths = spark.sparkContext.parallelize(range(N_TASKS), N_TASKS).mapPartitions(zips)
+    assert paths.collect() == [[]] * N_TASKS

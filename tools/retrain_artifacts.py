@@ -4,7 +4,7 @@ the training recipe. Deterministic: seeded Word2Vec/KMeans/perceptron/
 BiLSTM fits reproduce the artifact bit-for-bit.
 
 Usage: python tools/retrain_artifacts.py [dnrti] [malwaredb]
-Then:  python tools/exp_quality.py baseline   (test numbers)
+Then:  python -m pytest tests/test_conll.py   (the DNRTI/MalwareDB quality gates)
 """
 
 from __future__ import annotations
