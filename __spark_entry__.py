@@ -22,7 +22,7 @@ from ner4cti_spark import entry_queries as Q
 from ner4cti_spark import worker_daemon
 from ner4cti_spark.session import corpus_cached
 
-_SHIPPED_APPS: set[str] = set()
+_SHIPPED: dict[str, tempfile.TemporaryDirectory] = {}  # app id → its zip's directory
 
 
 def _ship_once(spark: SparkSession) -> None:
@@ -34,15 +34,17 @@ def _ship_once(spark: SparkSession) -> None:
     workers' PYTHONPATH, so its workers already import the package. Any
     other session's workers find it only through their cwd: driven from
     another directory, they fail with `ModuleNotFoundError` unless the
-    zip is shipped. Each zip goes to a fresh directory, so concurrent
-    drivers never overwrite each other's; Spark refuses a second file of
-    the same name whose bytes differ, hence once per app."""
+    zip is shipped. Each zip goes to a fresh directory, removed at exit
+    (executors fetch it on their first task), so concurrent drivers never
+    overwrite each other's; Spark refuses a second file of the same name
+    whose bytes differ, hence once per app."""
     sc = spark.sparkContext
     if (sc.getConf().get("spark.python.daemon.module") == worker_daemon.__name__
-            or sc.applicationId in _SHIPPED_APPS):
+            or sc.applicationId in _SHIPPED):
         return
     pkg_dir = os.path.dirname(os.path.abspath(ner4cti_spark.__file__))
-    zip_path = os.path.join(tempfile.mkdtemp(prefix="ner4cti_spark_"), "ner4cti_spark.zip")
+    zip_dir = tempfile.TemporaryDirectory(prefix="ner4cti_spark_")
+    zip_path = os.path.join(zip_dir.name, "ner4cti_spark.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
@@ -50,7 +52,7 @@ def _ship_once(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     zf.write(full, os.path.join("ner4cti_spark", os.path.relpath(full, pkg_dir)))
     sc.addPyFile(zip_path)
-    _SHIPPED_APPS.add(sc.applicationId)
+    _SHIPPED[sc.applicationId] = zip_dir
 
 
 def _shipping(fn: Callable[[SparkSession, str], DataFrame]

@@ -15,8 +15,9 @@ by sentence. same_as comes from the alias table; one global
 dropDuplicates closes the union.
 
 Flat callers (`link_mentions` → `build_triples`) regroup by sentence
-once and run the same emission. Above the broadcast threshold
-`sentence_triples` takes that route, with a shuffle join.
+once (`nest_mentions`) and run the same emission. Above the broadcast
+threshold `sentence_triples` takes that route, with a shuffle join;
+below it both pipeline modes read sentence rows and never regroup.
 """
 
 from __future__ import annotations

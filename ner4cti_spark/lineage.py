@@ -10,26 +10,30 @@ commits it like Iceberg metadata: pyarrow writes a hidden temp file
 beside it, fsync, `os.replace`. (Inside `_lineage/`, because Spark
 ignores an explicitly named file whose name starts with `_`.)
 
-A bucket is complete for a stage iff the manifest has its row.
-`write_checkpoint` (1) reads the manifest, (2) removes the `bucket=`
-directories not recorded for the stage (overwrite: all), (3) writes the
-data, (4) aggregates the new buckets' rows from the files just written,
-(5) commits old ∪ new rows (overwrite: minus the stage's old rows). A
-crash before step 5's `os.replace` leaves the old manifest, (append)
-the recorded buckets' files intact, and unrecorded files, which the
-next run's step 2 removes even when its input lacks their repos; a
-crash after it leaves the new manifest. Overwrite stages rerun in
-full every time, so their rows are never a resume key.
+A bucket is complete for a stage iff the manifest has its row (whose
+`row_count` counts the table's rows in it; tag stage: sentence rows).
+`write_checkpoint` (1) reads the manifest and, appending, refuses a `df`
+whose schema is not the recorded files' (never a mix), (2) removes the
+`bucket=` directories not recorded for the stage (overwrite: all), (3)
+writes the data, (4) aggregates the new buckets' rows from the files
+just written, (5) commits old ∪ new rows (overwrite: minus the stage's
+old rows). A crash before step 5's `os.replace` leaves the old manifest,
+(append) the recorded buckets' files intact, and unrecorded files, which
+the next run's step 2 removes even when its input lacks their repos; a
+crash after it leaves the new manifest. Overwrite stages rerun in full
+every time, so their rows are never a resume key.
 
 Resume: the TAG stage (model inference, the dominant cost) appends per
 bucket; a rerun drops the recorded buckets before any model compute
 (`filter_resumable`). Linking, canonicalization and materialize are
-cheap global functions of the whole mention set, recomputed with
+cheap global functions of the whole tag checkpoint, recomputed with
 overwrite. Iceberg tables in production; parquet directories here.
 """
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import shutil
 
@@ -38,11 +42,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .session import local_frame
 
 N_BUCKETS = 64
 MANIFEST = os.path.join("_lineage", "manifest.parquet")
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 MANIFEST_SCHEMA = pa.schema([
     ("stage", pa.string()), ("partition_key", pa.string()),
     ("repo_min", pa.string()), ("repo_max", pa.string()),
@@ -143,17 +149,32 @@ def _clear(table_path: str, keep: set[str]) -> None:
         shutil.rmtree(os.path.join(table_path, f"bucket={key}"))
 
 
+def _check_append_schema(df: DataFrame, table_path: str, done: set[str]) -> None:
+    """ValueError unless `df` has the schema Spark wrote into the footer
+    of a recorded file (read on the driver: no Spark job)."""
+    files = [f for k in sorted(done) for f in glob.glob(f"{table_path}/bucket={k}/*.parquet")]
+    if not files:
+        return
+    footer = pq.read_schema(min(files)).metadata or {}
+    have = footer.get(_SPARK_SCHEMA_KEY)
+    want = df.schema.simpleString()
+    if have is None or StructType.fromJson(json.loads(have)).simpleString() != want:
+        raise ValueError(f"checkpoint table {table_path} holds rows of another schema than "
+                         f"{want}; an append never mixes schemas: use a fresh out_dir")
+
+
 def write_checkpoint(spark: SparkSession, df: DataFrame, out_dir: str, table: str,
                      stage: str, mode: str = "append") -> None:
     """Write bucketed parquet, then commit its lineage (steps in the
     module docstring). append keeps the buckets recorded for `stage` and
-    adds `df`, which must hold none of them (`filter_resumable`);
-    overwrite replaces the table and the stage's rows."""
+    adds `df`, which must hold none of them (`filter_resumable`) and
+    their schema; overwrite replaces the table and the stage's rows."""
     rows = read_manifest(out_dir)
     done = _done(out_dir, stage) if mode == "append" else set()
+    table_path = os.path.join(out_dir, table)
+    _check_append_schema(df, table_path, done)
     if mode == "overwrite":
         rows = rows[rows["stage"] != stage]
-    table_path = os.path.join(out_dir, table)
     _clear(table_path, keep=done)
     with_bucket(df).write.mode(mode).partitionBy("bucket").parquet(table_path)
     new = [int(k) for k in _bucket_keys(table_path) - done]

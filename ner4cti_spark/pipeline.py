@@ -2,18 +2,19 @@
 
 scan → sha256 → sentencize → salted repartition → tag (mapInPandas,
 broadcast weights; one row per sentence with its mentions as arrays) →
-MinHash-LSH linking → connected-component canonicalization → triples
-(one mapInPandas over the sentence rows) → partitioned write + lineage
-(resumable).
+[checkpoint of those rows + lineage (resumable)] → MinHash-LSH linking →
+connected-component canonicalization → triples (one mapInPandas over the
+sentence rows) → [partitioned write + lineage].
 
-One DataFrame DAG per stage. In memory the only corpus-scale shuffles
-are the salted repartition before tagging and the final triple dedup:
-the tag stage already emits each sentence's mentions together, so
-co-occurrence needs no regroup, and the alias table reaches the triple
-emission as a broadcast dict, so there is no mention↔alias join.
+One DataFrame DAG per stage, the same in memory and checkpointed (the
+checkpoint holds the sentence rows that memory caches). The only
+corpus-scale shuffles are the salted repartition before tagging and the
+final triple dedup: the tag stage already emits each sentence's mentions
+together, so co-occurrence needs no regroup, and the alias table reaches
+the triple emission as a broadcast dict: no mention↔alias join.
 Linking and canonicalization operate on the distinct surface vocabulary
 (orders of magnitude smaller than the corpus), aggregated from the flat
-`mentions` view of the cached sentence rows. `link_entities` is eager
+`mentions` view of the sentence rows. `link_entities` is eager
 and size-adaptive: up to components.DRIVER_THRESHOLD surfaces and
 DRIVER_FUZZY_SURFACES fuzzy-etype surfaces it runs as one Spark job (an
 Arrow collect of the vocabulary) plus driver MinHash, union-find and
@@ -40,9 +41,7 @@ from .linking.minhash_lsh import (
 )
 from .operators.sentencize import sentencize, with_sha256
 from .session import local_frame
-from .tagging import (
-    MENTION_SCHEMA, flatten_mentions, nest_mentions, salted_repartition, tag_sentences,
-)
+from .tagging import SENTENCE_SCHEMA, flatten_mentions, salted_repartition, tag_sentences
 
 
 @dataclass
@@ -51,7 +50,6 @@ class PipelineConfig:
     decode: str = "viterbi"
     link_threshold: float = 0.5
     num_partitions: int = 0          # 0 → default parallelism
-    salt_buckets: int = 64
     sent_cache: bool = True          # executor-local exact-sentence dedup
     profile: KernelProfile = FAST
 
@@ -81,7 +79,7 @@ def extract_sentences(spark: SparkSession, corpus: DataFrame, cfg: PipelineConfi
     # deployments that want finer tasks for straggler smoothing set
     # cfg.num_partitions explicitly.
     n_part = cfg.num_partitions or spark.sparkContext.defaultParallelism
-    sents = salted_repartition(sents, n_part, cfg.salt_buckets)
+    sents = salted_repartition(sents, n_part)
     return tag_sentences(
         sents, bc, neural_scale=cfg.neural_scale, decode=cfg.decode,
         sent_cache=cfg.sent_cache,
@@ -234,29 +232,29 @@ def run_pipeline(spark: SparkSession, corpus: DataFrame,
                  weights_bc=None) -> dict[str, DataFrame]:
     """Returns {'sentences', 'mentions', 'entities', 'triples'} DataFrames.
 
-    Without out_dir: `sentences` (the tag stage's rows, one per sentence
-    with mentions) come back cached, `mentions` is their flat view, and
-    `triples` are lazy over them. With out_dir: the tag stage checkpoints
-    flat mentions per-bucket (resume-aware, append); `sentences` regroups
-    the checkpoint by sentence, and linking/canonicalize/materialize are
-    global functions of the full mentions checkpoint, recomputed with
-    overwrite semantics — see lineage.py module docstring for why the
-    split lands there. Entities are persisted only above the linking
-    gate. Unpersisting the returned frames frees everything the run
-    persisted. The alias-dict broadcast is destroyed once the triples
-    are written; in memory it lives as long as the lazy triples' plan."""
+    `sentences` are the tag stage's rows (one per sentence with mentions),
+    `mentions` their flat view, and `triples` come from them. Without
+    out_dir the sentence rows come back cached and `triples` are lazy.
+    With out_dir the tag stage appends its sentence rows per bucket to the
+    `mentions` table (resume-aware) and `sentences` reads it back;
+    linking/canonicalize/materialize are global functions of the whole
+    checkpoint, recomputed with overwrite semantics — see lineage.py
+    module docstring for why the split lands there. Entities are
+    persisted only above the linking gate. Unpersisting the returned
+    frames frees everything the run persisted. The alias-dict broadcast
+    is destroyed once the triples are written; in memory it lives as long
+    as the lazy triples' plan."""
     cfg = cfg or PipelineConfig()
     if out_dir is not None:
         todo = lineage.filter_resumable(corpus, out_dir, stage="tag")
-        new_mentions = extract_mentions(spark, todo, cfg, weights_bc=weights_bc)
         lineage.write_checkpoint(
-            spark, new_mentions, out_dir, table="mentions", stage="tag", mode="append"
+            spark, extract_sentences(spark, todo, cfg, weights_bc=weights_bc), out_dir,
+            table="mentions", stage="tag", mode="append",
         )
-        mentions = lineage.read_checkpoint(spark, out_dir, "mentions", MENTION_SCHEMA)
-        sentences = nest_mentions(mentions)
+        sentences = lineage.read_checkpoint(spark, out_dir, "mentions", SENTENCE_SCHEMA)
     else:
         sentences = extract_sentences(spark, corpus, cfg, weights_bc=weights_bc).cache()
-        mentions = flatten_mentions(sentences)
+    mentions = flatten_mentions(sentences)
     # eager: the alias-table row count — the exact quantity the
     # broadcast-vs-shuffle choice needs — comes back with it
     entities, n_alias_rows, aliases = _link(mentions, cfg)

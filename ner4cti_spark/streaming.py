@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.sentencize import sentencize, with_sha256
-from .tagging import tag_mentions
+from .tagging import flatten_mentions, tag_sentences
 
 
 def stream_corpus_mentions(
@@ -30,12 +30,12 @@ def stream_corpus_mentions(
     neural_scale: float = 0.0,
 ) -> None:
     """Incrementally tag corpus parquet files as they land. foreachBatch
-    applies the SAME batch operators (sentencize → tag_mentions, the
-    flat view of the tag stage's sentence rows), so streaming and batch
-    can never drift semantically. AvailableNow processes the backlog and
-    stops — the streaming analog of the resumable batch job (source
-    progress tracked in the stream checkpoint instead of the lineage
-    table).
+    applies the SAME batch operators (sentencize → tag_sentences →
+    flatten_mentions, the flat view of the tag stage's sentence rows), so
+    streaming and batch can never drift semantically. AvailableNow
+    processes the backlog and stops — the streaming analog of the
+    resumable batch job (source progress tracked in the stream checkpoint
+    instead of the lineage table).
 
     Each micro-batch writes at most defaultParallelism files instead of
     one small file per read task, however large its backlog: a coalesce
@@ -49,9 +49,9 @@ def stream_corpus_mentions(
     )
 
     def process(batch_df: DataFrame, _batch_id: int) -> None:
-        mentions = tag_mentions(
+        mentions = flatten_mentions(tag_sentences(
             sentencize(with_sha256(batch_df)), weights_bc, neural_scale=neural_scale
-        )
+        ))
         mentions.coalesce(n_files).write.mode("append").parquet(out_dir)
 
     (

@@ -4,12 +4,13 @@ The engine's hot path (SURVEY §3.3 rebuild): broadcast weights once,
 lazy-init the kernel per executor process, tag whole Arrow batches,
 emit one row per sentence that has mentions, its spans as parallel
 arrays (`SENTENCE_SCHEMA`). No per-row Python — each batch is one
-vectorized forward + one batched Viterbi. `flatten_mentions` is the one
-flat view (`MENTION_SCHEMA`, one row per mention); `nest_mentions`
-regroups a flat table by sentence.
+vectorized forward + one batched Viterbi; the pipeline caches or
+checkpoints these rows. `flatten_mentions` is the one flat view
+(`MENTION_SCHEMA`, one row per mention); `nest_mentions` regroups a
+flat table by sentence for `graph.build_triples`, the flat callers' path.
 
 Skew: giant repos are spread by salted repartition on
-(repo, pmod(hash(path, sent_id), S)) before tagging, per SURVEY §4.2.
+(repo, pmod(hash(path, sent_id), SALT_BUCKETS)) before tagging, per SURVEY §4.2.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ MENTION_SCHEMA = (
 )
 
 SENTENCE_KEY = ("repo", "path", "commit", "sha256", "sent_id")
+SALT_BUCKETS = 64  # salt values per repo in `salted_repartition`
 SPAN_COLUMNS = ("begin", "end", "surface", "etype", "canonical_hint")
 
 # the tag stage's output: one row per sentence with at least one mention,
@@ -105,15 +107,14 @@ def tag_token_frames(df: DataFrame, weights_bc, phrases_bc=None,
     )
 
 
-def salted_repartition(sentences: DataFrame, num_partitions: int, salt_buckets: int = 64
-                       ) -> DataFrame:
+def salted_repartition(sentences: DataFrame, num_partitions: int) -> DataFrame:
     """Spread hot repos across partitions: partition by (repo, salt) where
-    salt = pmod(hash(path, sent_id), S). At cluster scale this prevents a
-    single giant repo from pinning one executor."""
+    salt = pmod(hash(path, sent_id), SALT_BUCKETS). At cluster scale this
+    prevents a single giant repo from pinning one executor."""
     return sentences.repartition(
         num_partitions,
         F.col("repo"),
-        F.pmod(F.hash(F.col("path"), F.col("sent_id")), F.lit(salt_buckets)),
+        F.pmod(F.hash(F.col("path"), F.col("sent_id")), F.lit(SALT_BUCKETS)),
     )
 
 
@@ -175,13 +176,3 @@ def nest_mentions(mentions: DataFrame) -> DataFrame:
         F.max("score").alias("score"),
         F.sort_array(F.collect_list(F.struct(*per))).alias("m"),
     ).select(*SENTENCE_KEY, "score", *[F.col("m")[c].alias(c) for c in per])
-
-
-def tag_mentions(sentences: DataFrame, weights_bc, neural_scale: float = 0.0,
-                 decode: str = "viterbi", sent_cache: bool = True) -> DataFrame:
-    """sentences → exploded mention rows (the UDTF shape, SURVEY §2.9):
-    `flatten_mentions` over `tag_sentences`."""
-    return flatten_mentions(tag_sentences(
-        sentences, weights_bc, neural_scale=neural_scale, decode=decode,
-        sent_cache=sent_cache,
-    ))

@@ -61,3 +61,4 @@ spark.stop()
                          capture_output=True, text=True, timeout=900)
     assert run.returncode == 0, run.stderr[-4000:]
     assert run.stdout.splitlines()[-2:] == ["ROWS 120", "SHIPPED 1"], run.stdout
+    assert not list(tmp_path.glob("ner4cti_spark_*")), "the zip's directory outlived the process"

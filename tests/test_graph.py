@@ -158,7 +158,7 @@ def test_in_memory_matches_sql_reference(in_memory):
 
 
 def test_nest_mentions_rebuilds_the_tag_stage_rows(in_memory):
-    """The checkpointed path regroups flat mentions by sentence; that
+    """`build_triples` regroups flat (linked) mentions by sentence; that
     must give back the tag stage's sentence rows."""
     _, _, out, _ = in_memory
     regrouped = nest_mentions(out["mentions"])

@@ -48,7 +48,7 @@ def test_streaming_mentions_match_batch(spark, tmp_path):
     from ner4cti_spark.corpus import generate_corpus
     from ner4cti_spark.operators.sentencize import sentencize, with_sha256
     from ner4cti_spark.pipeline import PipelineConfig, broadcast_weights
-    from ner4cti_spark.tagging import tag_mentions
+    from ner4cti_spark.tagging import flatten_mentions, tag_sentences
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -59,7 +59,7 @@ def test_streaming_mentions_match_batch(spark, tmp_path):
     bc = broadcast_weights(spark, PipelineConfig())
     st.stream_corpus_mentions(spark, src, out, ckpt, bc)
     streamed = spark.read.parquet(out).select("sha256", "sent_id", "surface", "etype")
-    batch = tag_mentions(sentencize(with_sha256(corpus)), bc).select(
+    batch = flatten_mentions(tag_sentences(sentencize(with_sha256(corpus)), bc)).select(
         "sha256", "sent_id", "surface", "etype"
     )
     assert streamed.exceptAll(batch).count() == 0

@@ -107,6 +107,21 @@ def test_pipeline_triples_have_no_sentence_shuffle_or_mention_join(spark):
         df.unpersist()
 
 
+def test_checkpointed_sentences_have_no_shuffle(spark, tmp_path):
+    """With out_dir the tag stage checkpoints its sentence rows as they
+    are, so the run's `sentences` read them back without regrouping flat
+    mentions by sentence: the executed plan has no shuffle at all."""
+    from ner4cti_spark.corpus import generate_corpus
+    from ner4cti_spark.pipeline import PipelineConfig, run_pipeline
+
+    out = run_pipeline(spark, generate_corpus(spark, n_docs=30),
+                       PipelineConfig(num_partitions=4), out_dir=str(tmp_path / "kg"))
+    assert out["sentences"].count() > 0
+    assert executed_shuffles(out["sentences"]) == 0
+    for df in out.values():
+        df.unpersist()
+
+
 def test_whole_stage_codegen_in_relational_path(spark):
     from ner4cti_spark.entry_queries import q_pricing_summary
 

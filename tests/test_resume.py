@@ -207,8 +207,8 @@ def test_unrecorded_bucket_files_never_reach_the_triples(spark, half_done, tmp_p
     sample = next(f for f in os.listdir(f"{out_dir}/mentions/{recorded[0]}")
                   if f.endswith(".parquet"))
     part = pq.read_table(f"{out_dir}/mentions/{recorded[0]}/{sample}")
-    part = part.set_column(part.schema.get_field_index("surface"), "surface",
-                           pa.array(["Orphan" + s for s in part["surface"].to_pylist()]))
+    part = part.set_column(part.schema.get_field_index("surface"), "surface", pa.array(
+        [["Orphan" + s for s in surfaces] for surfaces in part["surface"].to_pylist()]))
     orphan = f"{out_dir}/mentions/bucket={lineage.N_BUCKETS - 1}"
     assert not os.path.exists(orphan)  # unrecorded and outside the first half
     os.makedirs(orphan)
@@ -227,7 +227,7 @@ def test_lineage_small_frames_plan_as_local_scans(spark, half_done, tmp_path):
     frame."""
     from pyspark.sql.types import StructType
 
-    from ner4cti_spark.tagging import MENTION_SCHEMA
+    from ner4cti_spark.tagging import SENTENCE_SCHEMA
 
     base = half_done[3]
     fresh = str(tmp_path / "fresh")
@@ -235,10 +235,41 @@ def test_lineage_small_frames_plan_as_local_scans(spark, half_done, tmp_path):
     recorded = {int(k) for k in lin.loc[lin["stage"] == "tag", "partition_key"]}
     done = lineage.completed_buckets(spark, base, "tag")
     none = lineage.completed_buckets(spark, fresh, "tag")
-    empty = lineage.read_checkpoint(spark, fresh, "mentions", MENTION_SCHEMA)
+    empty = lineage.read_checkpoint(spark, fresh, "mentions", SENTENCE_SCHEMA)
     assert recorded and {r["bucket"] for r in done.collect()} == recorded
     assert none.count() == 0 and none.schema == StructType.fromDDL("bucket int")
-    assert empty.count() == 0 and empty.schema == StructType.fromDDL(MENTION_SCHEMA)
+    assert empty.count() == 0 and empty.schema == StructType.fromDDL(SENTENCE_SCHEMA)
     for df in (done, none, empty):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "ExistingRDD" not in plan, plan
+
+
+def test_resume_refuses_a_flat_mention_checkpoint(spark, tmp_path):
+    """A tag checkpoint of flat mention rows (the layout before the
+    checkpoint held sentence rows) has the same column names and other
+    types. A resume over it raises ValueError before any Spark job runs
+    (so before any tagging), and leaves every bucket and the manifest as
+    they were."""
+    from ner4cti_spark.pipeline import extract_mentions
+
+    out_dir = str(tmp_path / "kg")
+    corpus = generate_corpus(spark, n_docs=30, n_repos=12).cache()
+    cfg = PipelineConfig()
+    lineage.write_checkpoint(spark, extract_mentions(spark, first_half(corpus), cfg),
+                             out_dir, table="mentions", stage="tag")
+    files, manifest = mention_files(out_dir), lineage.read_manifest(out_dir)
+    assert files
+    sc = spark.sparkContext
+    sc.setJobGroup("flat-resume", "resume over a flat checkpoint")
+    try:
+        with pytest.raises(ValueError, match="fresh out_dir") as err:
+            run_pipeline(spark, corpus, cfg, out_dir=out_dir)
+        jobs = sc.statusTracker().getJobIdsForGroup("flat-resume")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        corpus.unpersist()
+    assert os.path.join(out_dir, "mentions") in str(err.value)
+    assert jobs == []
+    assert mention_files(out_dir) == files
+    assert lineage.read_manifest(out_dir).equals(manifest)
