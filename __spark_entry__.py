@@ -139,7 +139,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "set_ops_tokens": (Q.q_set_ops_tokens, Q.SQL_SET_OPS_TOKENS),
     # J6 similar-word top-k + A9 softmax
     "similar_words_topk": (Q.q_similar_words_topk, Q.SQL_SIMILAR_WORDS_TOPK),
-    # streaming window semantics on the batch table
+    # event-time tumbling windows
     "windowed_event_counts": (Q.q_windowed_event_counts, Q.SQL_WINDOWED_EVENT_COUNTS),
     # classic OLAP shapes
     "pricing_summary": (Q.q_pricing_summary, Q.SQL_PRICING_SUMMARY),

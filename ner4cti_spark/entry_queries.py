@@ -836,18 +836,19 @@ SQL_SIMILAR_WORDS_TOPK = f"""
 """
 
 
-# --------------------------- streaming-window semantics (batch-checkable)
+# ------------------------------------------------ event-time tumbling windows
 
 def q_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Structured-Streaming tumbling-window aggregation, evaluated on the
-    batch table (same expression runs under readStream — streaming.py);
+    """10-minute tumbling event-time windows per event type;
     oracle = DuckDB time_bucket."""
-    from .streaming import windowed_event_counts
-
-    out = windowed_event_counts(load(spark, sf_dir, "events"))
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type", "n", "sum_value",
+    return (
+        load(spark, sf_dir, "events")
+        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
+        .select(
+            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+            "event_type", "n", "sum_value",
+        )
     )
 
 

@@ -105,33 +105,18 @@ def classify_token(tok: str) -> str | None:
     return None
 
 
-def _stem(t: str) -> str:
-    """Tiny deterministic suffix stripper for lexicon fallback matching."""
-    for suf in ("ing", "ed", "es", "s"):
-        if t.endswith(suf) and len(t) > len(suf) + 2:
-            return t[: -len(suf)]
-    return t
-
-
 class PhraseMatcher:
     """Greedy longest match of lowercased token tuples — the lexicon
     behind both the kernel's emissions and the trained CRF's features.
-    stem=True falls back per span length to a stemmed table ('loads and
-    executing' → 'load and execute'; first sorted phrase wins a stem
-    collision). Span lengths come longest first from a first-token index,
-    so a token that starts no phrase costs one dict probe."""
+    Span lengths come longest first from a first-token index, so a token
+    that starts no phrase costs one dict probe."""
 
-    def __init__(self, phrases: dict[tuple[str, ...], tuple[str, str]],
-                 stem: bool = False) -> None:
+    def __init__(self, phrases: dict[tuple[str, ...], tuple[str, str]]) -> None:
         self.phrases = phrases
-        self.stem = stem
-        self.stemmed: dict[tuple[str, ...], tuple[str, str]] = {}
         lengths: dict[str, set[int]] = {}
-        for k, v in sorted(phrases.items()):
-            if stem:
-                self.stemmed.setdefault(tuple(map(_stem, k)), v)
+        for k in phrases:
             if k:
-                lengths.setdefault(_stem(k[0]) if stem else k[0], set()).add(len(k))
+                lengths.setdefault(k[0], set()).add(len(k))
         self.lengths = {w: sorted(ls, reverse=True) for w, ls in lengths.items()}
 
     def matches(self, tokens: list[str]) -> list[tuple[int, int, str]]:
@@ -141,14 +126,10 @@ class PhraseMatcher:
         out: list[tuple[int, int, str]] = []
         i = 0
         while i < n:
-            first = _stem(lows[i]) if self.stem else lows[i]
-            for span in self.lengths.get(first, ()):
+            for span in self.lengths.get(lows[i], ()):
                 if span > n - i:
                     continue
-                key = tuple(lows[i : i + span])
-                hit = self.phrases.get(key)
-                if hit is None and self.stem:
-                    hit = self.stemmed.get(tuple(map(_stem, key)))
+                hit = self.phrases.get(tuple(lows[i : i + span]))
                 if hit is not None:
                     out.append((i, i + span, hit[0]))
                     i += span

@@ -47,15 +47,3 @@ class LabelSpace:
 
 
 CTI = LabelSpace(ETYPES)
-
-# module-level aliases for the default CTI space (existing call sites)
-TAGS = CTI.tags
-LABELS = CTI.labels
-LABEL2ID = CTI.label2id
-ID2LABEL = CTI.id2label
-N_LABELS = CTI.n
-O_ID = CTI.o_id
-
-
-def bio_transition_mask() -> "list[list[float]]":
-    return CTI.bio_transition_mask()

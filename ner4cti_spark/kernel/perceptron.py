@@ -15,12 +15,8 @@ shape, casing class (F1), heuristic UPOS (F4, kernel/pos.py), gazetteer
 longest-match tag (the lexicon branch as FEATURES, so the learner weighs
 lexicon vs context evidence), and regex indicator classes.
 
-Scale path: `train_crf` is driver-local (training corpora are
-vocabulary-sized); `train_crf_distributed` is iterative parameter mixing
-(McDonald, Hall & Mann, NAACL 2010) — each partition runs local
-perceptron epochs from the broadcast global weights, the driver averages
-per-partition sparse deltas weighted by sentence counts. Communication
-per epoch is O(touched weights), not O(corpus).
+`train_crf` fits on the driver: the training corpora are
+vocabulary-sized.
 """
 
 from __future__ import annotations
@@ -508,14 +504,10 @@ def _prep(sents: list[tuple[list[str], list[str]]], ls: LabelSpace,
 
 
 def _train_epochs(data, ls: LabelSpace, buckets: int, epochs: int, seed: int,
-                  W: np.ndarray | None = None, TR: np.ndarray | None = None,
-                  average: bool = True, cost: float = 1.0,
-                  miss_cost: float = 2.0
+                  cost: float = 1.0, miss_cost: float = 2.0
                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Core perceptron loop → (W, TR, per-epoch error rates). With
-    average=True returns the Collins running average (stable final
-    model); with average=False returns the raw last weights (the
-    parameter-mixing inner step).
+    """Core perceptron loop → (W, TR, per-epoch error rates), W and TR
+    the Collins running average (stable final model).
 
     Training decodes are COST-AUGMENTED (structured hinge / max-margin
     perceptron): each wrong label adds `cost` to its training-time score,
@@ -524,17 +516,11 @@ def _train_epochs(data, ls: LabelSpace, buckets: int, epochs: int, seed: int,
     recall on open-vocabulary entity sets (MalwareDB)."""
     L = ls.n
     mask, em_mask, first_mask = _decode_masks(ls)
-    if W is None:
-        W = np.zeros((buckets, L), dtype=np.float32)
-    else:
-        W = W.astype(np.float32).copy()
-    if TR is None:
-        TR = np.zeros((L, L), dtype=np.float32)
-    else:
-        TR = TR.astype(np.float32).copy()
+    W = np.zeros((buckets, L), dtype=np.float32)
+    TR = np.zeros((L, L), dtype=np.float32)
     Wf = W.reshape(-1)
-    Wa = np.zeros(buckets * L, dtype=np.float64) if average else None
-    Wt = np.zeros(buckets * L, dtype=np.int64) if average else None
+    Wa = np.zeros(buckets * L, dtype=np.float64)
+    Wt = np.zeros(buckets * L, dtype=np.int64)
     TRa = np.zeros((L, L), dtype=np.float64)
     rng = np.random.default_rng(seed)
     t = 0
@@ -568,12 +554,11 @@ def _train_epochs(data, ls: LabelSpace, buckets: int, epochs: int, seed: int,
                                    f * L + np.repeat(pred[mis], K)])
             delta = np.concatenate([np.ones(len(f), dtype=np.float32),
                                     -np.ones(len(f), dtype=np.float32)])
-            if average:
-                up = np.unique(flat)
-                Wa[up] += (t - Wt[up]) * Wf[up].astype(np.float64)
-                Wt[up] = t
-                TRa += (t - tr_t) * TR
-                tr_t = t
+            up = np.unique(flat)
+            Wa[up] += (t - Wt[up]) * Wf[up].astype(np.float64)
+            Wt[up] = t
+            TRa += (t - tr_t) * TR
+            tr_t = t
             np.add.at(Wf, flat, delta)
             if len(gold) > 1:
                 np.add.at(TR, (gold[:-1], gold[1:]), 1.0)
@@ -583,7 +568,7 @@ def _train_epochs(data, ls: LabelSpace, buckets: int, epochs: int, seed: int,
         # the cost-augmented decode — the convergence signal
         epoch_errors.append(ep_err / max(ep_tok, 1))
     errs = np.array(epoch_errors, dtype=np.float64)
-    if not average or t == 0:
+    if t == 0:
         return W, TR, errs
     Wa += (t - Wt) * Wf.astype(np.float64)
     TRa += (t - tr_t) * TR
@@ -612,80 +597,6 @@ def train_crf(sents: list[tuple[list[str], list[str]]], ls: LabelSpace,
         "sp_trans": TR,
         "_sp_meta": np.array([buckets, int(use_patterns)], dtype=np.int64),
         "_sp_epoch_errors": errs,
-    }
-
-
-def train_crf_distributed(df, ls: LabelSpace, phrases: dict, *,
-                          epochs: int = 5, sub_epochs: int = 1,
-                          buckets: int = N_BUCKETS, use_patterns: bool = True,
-                          n_parts: int = 8, seed: int = 13,
-                          clusters: dict | None = None,
-                          cost: float = 1.0, miss_cost: float = 2.0
-                          ) -> dict[str, np.ndarray]:
-    """Iterative parameter mixing over a (tokens, tags) DataFrame.
-
-    Per outer epoch: broadcast (W, TR); every partition runs `sub_epochs`
-    of raw (non-averaged) perceptron from that init and emits its weight
-    DELTA as sparse (idx, val) plus its sentence count; the driver mixes
-    W += Σ n_p/Σn · ΔW_p. The final model is the epoch-average of mixed
-    weights (the averaged variant of McDonald et al. 2010, their §4).
-
-    At 100 TB: per-partition deltas are bounded by touched features (not
-    corpus size), mixing is a treeAggregate-shaped reduction, and no
-    sentence ever moves — only weights do."""
-    sc = df.sparkSession.sparkContext
-    L = ls.n
-    rdd = (
-        df.select("tokens", "tags").rdd
-        .map(lambda r: (list(r["tokens"]), list(r["tags"])))
-        .repartition(n_parts)
-        .cache()
-    )
-    W = np.zeros((buckets, L), dtype=np.float32)
-    TR = np.zeros((L, L), dtype=np.float32)
-    W_avg = np.zeros_like(W, dtype=np.float64)
-    TR_avg = np.zeros_like(TR, dtype=np.float64)
-    phrases_bc = sc.broadcast(phrases)
-    clusters_bc = sc.broadcast(clusters)
-    for ep in range(epochs):
-        w_bc = sc.broadcast(W)
-        tr_bc = sc.broadcast(TR)
-
-        def part_fit(it, _ep=ep):
-            sents = list(it)
-            if not sents:
-                return
-            data = _prep(sents, ls, phrases_bc.value, use_patterns, buckets,
-                         clusters_bc.value)
-            Wl, TRl, _errs = _train_epochs(
-                data, ls, buckets, sub_epochs, seed + 1000 * _ep,
-                W=w_bc.value, TR=tr_bc.value, average=False,
-                cost=cost, miss_cost=miss_cost,
-            )
-            dW = (Wl - w_bc.value).reshape(-1)
-            nz = np.nonzero(dW)[0]
-            yield (len(sents), nz.astype(np.int64), dW[nz].astype(np.float32),
-                   (TRl - tr_bc.value).astype(np.float32))
-
-        parts = rdd.mapPartitions(part_fit).collect()
-        w_bc.destroy()
-        tr_bc.destroy()
-        total = sum(p[0] for p in parts) or 1
-        dW_mix = np.zeros(buckets * L, dtype=np.float64)
-        dTR_mix = np.zeros((L, L), dtype=np.float64)
-        for n_p, idx, val, dtr in parts:
-            frac = n_p / total
-            dW_mix[idx] += frac * val
-            dTR_mix += frac * dtr
-        W = (W + dW_mix.reshape(buckets, L)).astype(np.float32)
-        TR = (TR + dTR_mix).astype(np.float32)
-        W_avg += W
-        TR_avg += TR
-    rdd.unpersist()
-    return {
-        "sp_w": (W_avg / max(epochs, 1)).astype(np.float32),
-        "sp_trans": (TR_avg / max(epochs, 1)).astype(np.float32),
-        "_sp_meta": np.array([buckets, int(use_patterns)], dtype=np.int64),
     }
 
 

@@ -53,7 +53,6 @@ class TaggerKernel:
         use_patterns: bool = True,
         label_space: LabelSpace = CTI,
         sent_cache: bool = True,
-        stem_fallback: bool = False,
     ) -> None:
         """phrases: token-tuple (lowercased) → (etype, canonical). Default
         is the built-in CTI gazetteer; pass a corpus-induced lexicon
@@ -68,11 +67,7 @@ class TaggerKernel:
         self.decode = decode
         self.phrases = phrases if phrases is not None else gazetteer.phrase_index()
         self.use_patterns = use_patterns
-        # stem_fallback: morphological fallback for the lexicon emissions
-        # only — the trained CRF's lexicon features always match exactly
-        self.lexicon = gazetteer.PhraseMatcher(self.phrases, stem=stem_fallback)
-        self.crf_lexicon = (gazetteer.PhraseMatcher(self.phrases)
-                            if stem_fallback else self.lexicon)
+        self.lexicon = gazetteer.PhraseMatcher(self.phrases)
         self.ls = label_space
         assert weights["emit_b"].shape[0] == label_space.n, (
             "weights were built for a different label space — pass the same "
@@ -258,7 +253,7 @@ class TaggerKernel:
             use_patterns = (bool(self.w["_sp_meta"][1]) if "_sp_meta" in self.w
                             else self.use_patterns)
             return perceptron.decode_batch(
-                sents, self.w, self.ls, self.crf_lexicon, use_patterns,
+                sents, self.w, self.ls, self.lexicon, use_patterns,
                 self.w.get("_sp_clusters"), self._branch())
         lengths = np.array([len(s) for s in sents], dtype=np.int64)
         T = max(1, int(lengths.max()))

@@ -19,7 +19,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 MEDIA_SCHEMA = (
@@ -87,33 +86,4 @@ def extract_features(media: DataFrame, decode: str = "fake",
 
     return media.mapInPandas(
         run, schema="media_id long, kind string, n_bytes long, features array<float>"
-    )
-
-
-def resize_plan(media: DataFrame, max_side: int = 128) -> DataFrame:
-    """Image resize plumbing: computes target dims relationally (pure
-    column math — pushed into the scan); the pixel op itself is the
-    stubbed codec step."""
-    scale = F.least(
-        F.lit(1.0),
-        max_side / F.greatest(F.col("meta.width"), F.col("meta.height")).cast("double"),
-    )
-    return media.filter(F.col("kind") == "image").select(
-        "media_id",
-        F.col("meta.width").alias("width"),
-        F.col("meta.height").alias("height"),
-        F.round(F.col("meta.width") * scale).cast("int").alias("target_width"),
-        F.round(F.col("meta.height") * scale).cast("int").alias("target_height"),
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: one row per planned frame index
-    (sequence + explode); actual frame decode is the stubbed step."""
-    n_frames = (F.length("payload") / 32).cast("int")  # fake: 1 frame / 32 bytes
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", F.explode(
-            F.sequence(F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n))
-        ).alias("frame_idx"))
     )

@@ -322,8 +322,8 @@ def train_pos_embeddings(spark: SparkSession, corpus: str = "dnrti", *,
     return emb
 
 
-def train_corpus(spark: SparkSession, corpus: str, *, distributed: bool = False,
-                 epochs: int | None = None) -> tuple[dict, dict, dict]:
+def train_corpus(spark: SparkSession, corpus: str, *, epochs: int | None = None
+                 ) -> tuple[dict, dict, dict]:
     """Fit on the train split → (trained arrays, lexicon, clusters)."""
     from .operators import conll
 
@@ -341,20 +341,10 @@ def train_corpus(spark: SparkSession, corpus: str, *, distributed: bool = False,
     clusters = word_clusters(spark, corpus)
     n_epochs = epochs if epochs is not None else cfg["epochs"]
     ncfg = cfg.get("neural")
-    if distributed:
-        arts = perceptron.train_crf_distributed(
-            train, ls, lex, epochs=n_epochs, use_patterns=cfg["use_patterns"],
-            cost=cfg["cost"], miss_cost=cfg["miss_cost"], clusters=clusters,
-        )
-        # the neural branch + two-pass fit driver-side below from the
-        # collected split (vocabulary-sized); the distributed CRF path
-        # demonstrates the 100 TB trainer shape either way
-        sents = None
-    else:
-        sents = [
-            (list(r["tokens"]), list(r["tags"]))
-            for r in train.select("tokens", "tags").collect()
-        ]
+    sents = [
+        (list(r["tokens"]), list(r["tags"]))
+        for r in train.select("tokens", "tags").collect()
+    ]
     nn_arts = None
     extras = None
     if ncfg:
@@ -362,23 +352,6 @@ def train_corpus(spark: SparkSession, corpus: str, *, distributed: bool = False,
 
         from .kernel import neural
 
-        if distributed:
-            # the branch fits driver-side either way (5k-sentence
-            # artifact production, not corpus-proportional) — collect
-            # the split here just as the two-pass block does. MODE_STACK
-            # is the one genuinely incompatible combination: stacked
-            # prediction features change the CRF feature space, and the
-            # distributed CRF above was already trained without them.
-            if int(ncfg["mode"]) == neural.MODE_STACK:
-                raise ValueError(
-                    "neural mode=stack requires the driver-side CRF "
-                    "trainer (jackknifed features enter CRF training); "
-                    "use mode=score with distributed=True"
-                )
-            sents = [
-                (list(r["tokens"]), list(r["tags"]))
-                for r in train.select("tokens", "tags").collect()
-            ]
         nn_arts, emb, lookup, _nnw = _neural_branch(spark, corpus, sents, ls, ncfg)
         if int(ncfg["mode"]) == neural.MODE_STACK:
             # jackknifed branch predictions as training features (a
@@ -417,18 +390,12 @@ def train_corpus(spark: SparkSession, corpus: str, *, distributed: bool = False,
                         continue
                     lg = neural.sent_logits(toks, wf, emb, lookup)
                     extras[i] = neural.stack_extra(lg, ls.id2label)
-    if not distributed:
-        arts = perceptron.train_crf(
-            sents, ls, lex, epochs=n_epochs, use_patterns=cfg["use_patterns"],
-            cost=cfg["cost"], miss_cost=cfg["miss_cost"], clusters=clusters,
-            extras=extras,
-        )
+    arts = perceptron.train_crf(
+        sents, ls, lex, epochs=n_epochs, use_patterns=cfg["use_patterns"],
+        cost=cfg["cost"], miss_cost=cfg["miss_cost"], clusters=clusters,
+        extras=extras,
+    )
     if cfg.get("two_pass"):
-        if sents is None:
-            sents = [
-                (list(r["tokens"]), list(r["tags"]))
-                for r in train.select("tokens", "tags").collect()
-            ]
         attr_idx = [i for i, (t, g) in enumerate(sents)
                     if any(x != "O" for x in g)]
         arts2 = perceptron.train_crf(

@@ -1,5 +1,5 @@
 """Trained CRF (averaged structured perceptron) — learnability, artifact
-roundtrip, kernel integration, distributed parameter mixing, POS (F4)."""
+roundtrip, kernel integration, POS (F4)."""
 
 from __future__ import annotations
 
@@ -194,21 +194,6 @@ def test_shipped_artifact_decodes_match_reference(corpus):
         one_pass = {k: v for k, v in arts.items() if k not in ("sp2_w", "clf_w")}
         assert P.decode_sents(sents, one_pass, ls, phrases, use_patterns,
                               clusters) != want
-
-
-def test_distributed_parameter_mixing_learns(spark):
-    sents = _toy_corpus(150)
-    df = spark.createDataFrame(
-        [(t, g) for t, g in sents], "tokens array<string>, tags array<string>"
-    )
-    arts = P.train_crf_distributed(df, LS, {}, epochs=3, sub_epochs=2,
-                                   n_parts=4, use_patterns=False)
-    pred = P.decode_sents(
-        [["alpha", "zz_unseen", "does", "beta"],
-         ["gamma", "zz_unseen", "does", "beta"]],
-        arts, LS, {}, False)
-    assert pred[0] == ["O", "B-X", "O", "O"]
-    assert pred[1] == ["O", "B-Y", "O", "O"]
 
 
 def test_upos_differs_from_casing_signal():

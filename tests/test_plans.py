@@ -202,30 +202,6 @@ def test_pos_pair_counts_matches_join_form(spark):
     assert np.array_equal(counts, expected)
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Co-located join: both sides bucketed on the join key → SortMergeJoin
-    with NO shuffle Exchange on either side (the 100 TB repeated-join
-    pattern; one-sided bucketing still saves that side's shuffle)."""
-    from ner4cti_spark.operators.bucketing import load_table, save_bucketed
-
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select("l_orderkey", "l_quantity")
-    orders = spark.read.parquet(f"{SF}/orders.parquet").select("o_orderkey", "o_totalprice")
-    save_bucketed(li, "b_lineitem", "l_orderkey", 8)
-    save_bucketed(orders.withColumnRenamed("o_orderkey", "l_orderkey"), "b_orders", "l_orderkey", 8)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = load_table(spark, "b_lineitem").join(load_table(spark, "b_orders"), "l_orderkey")
-        plan = plan_of(j)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
-        # and it still computes correctly
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-
-
 def test_aqe_splits_skewed_join(spark):
     """Hot-key skew (north_rule: 'skew handled explicitly'): AQE splits
     the skewed partition at runtime — the executed plan marks the join

@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 
 from ner4cti_spark.kernel import gazetteer
 from ner4cti_spark.kernel.crf import viterbi_decode
-from ner4cti_spark.kernel.gazetteer import PhraseMatcher, _stem
+from ner4cti_spark.kernel.gazetteer import PhraseMatcher
 from ner4cti_spark.kernel.labels import CTI
 from ner4cti_spark.kernel.tagger import (
     LEX_O, LEX_OTHER, MAX_SEQ_LEN, TaggerKernel, casing_class, extract_spans,
@@ -118,8 +118,8 @@ def test_tagger_total_on_arbitrary_tokens(sents):
     assert tags == tags2
 
 
-# a small vocabulary so generated lexicons share first tokens and stem
-# collisions ('load'/'loads'/'loading'/'loaded'), with cased variants
+# a small vocabulary so generated lexicons share first tokens, with cased
+# variants
 _LEX_WORDS = ["load", "loads", "Loading", "loaded", "execute", "executes",
               "apt", "APT", "bear", "Bears", "fancy", "x"]
 # keys are mostly lowercased, as phrase_index builds them; a cased key
@@ -129,22 +129,16 @@ _phrase_key = st.tuples(
 ).map(lambda p: tuple(w.lower() if p[1] else w for w in p[0]))
 
 
-def _reference_matches(tokens, phrases, stem):
+def _reference_matches(tokens, phrases):
     """Brute force: at each position try every span length from the
-    longest down — exact lookup, then stem lookup — and take the first
-    hit; no first-token index, no length bound."""
-    stemmed = {}
-    if stem:
-        for k, v in sorted(phrases.items()):
-            stemmed.setdefault(tuple(_stem(w) for w in k), v)
+    longest down and take the first hit; no first-token index, no length
+    bound."""
     lows = [t.lower() for t in tokens]
     out, i = [], 0
     while i < len(lows):
         for span in range(len(lows) - i, 0, -1):
             key = tuple(lows[i:i + span])
             hit = phrases.get(key)
-            if hit is None and stem:
-                hit = stemmed.get(tuple(_stem(w) for w in key))
             if hit is not None:
                 out.append((i, i + span, hit[0]))
                 i += span
@@ -154,7 +148,6 @@ def _reference_matches(tokens, phrases, stem):
     return out
 
 
-@pytest.mark.parametrize("stem", [False, True])
 @given(
     st.dictionaries(_phrase_key, st.sampled_from(["malware", "tool", "threat-actor"]),
                     max_size=12),
@@ -162,11 +155,11 @@ def _reference_matches(tokens, phrases, stem):
              min_size=1, max_size=4),
 )
 @settings(max_examples=300, deadline=None)
-def test_phrase_matcher_matches_brute_force(stem, lexicon, sents):
+def test_phrase_matcher_matches_brute_force(lexicon, sents):
     phrases = {k: (etype, " ".join(k)) for k, etype in lexicon.items()}
-    m = PhraseMatcher(phrases, stem=stem)
+    m = PhraseMatcher(phrases)
     for toks in sents:
-        want = _reference_matches(toks, phrases, stem)
+        want = _reference_matches(toks, phrases)
         assert m.matches(toks) == want
         bio = ["O"] * len(toks)
         for b, e, etype in want:

@@ -6,10 +6,12 @@ sentences, BLAS pinned to 1 thread) in K concurrent single-core
 processes for K in (1, 8, 32) and reports per-process wall-time
 inflation. Pure numpy — no Spark, no shuffle, no Python-worker reuse —
 so any slowdown at higher K is the box's shared L3/memory bandwidth,
-not the engine. The kernel runs with the untrained contextual branch on
-(neural_scale=0.1, the pipeline default when the recorded 8→32 evidence
-was measured); the pipeline now defaults to 0.0, which skips that
-forward. Usage: python tools/contention_probe.py
+not the engine. The kernel is the one the pipeline runs: lexicon
+potentials + BIO-CRF Viterbi, `neural_scale=0.0` (the recorded 8→32
+evidence in BENCH/BASELINE.md predates that default and timed the
+untrained forward at 0.1). The sentence cache is off and the 6,000
+sentences give ~0.4 s of single-core work per process. Usage:
+python tools/contention_probe.py
 """
 
 from __future__ import annotations
@@ -29,16 +31,14 @@ sys.path.insert(0, {repo!r})
 import numpy as np
 from ner4cti_spark.kernel.weights import build_weights, FAST
 from ner4cti_spark.kernel.tagger import TaggerKernel
-from ner4cti_spark.kernel.gazetteer import phrase_index
 
 w = build_weights(FAST)
-k = TaggerKernel(w, neural_scale=0.1, phrases=phrase_index(), use_patterns=True,
-                 sent_cache=False)
+k = TaggerKernel(w, neural_scale=0.0, sent_cache=False)
 rng = np.random.default_rng(0)
 vocab = ["alpha", "beta", "the", "APT28", "dropper", "used", "CVE-2017-0144",
          "malware", "implant", "c2", "infrastructure", "loader"]
 sents = [[vocab[int(j)] for j in rng.integers(len(vocab), size=18)]
-         for _ in range(600)]
+         for _ in range(6000)]
 k.tag(sents[:50])  # warm
 t0 = time.time()
 k.tag(sents)
